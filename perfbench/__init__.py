@@ -1,0 +1,6 @@
+"""Feature-store benchmark: seeded workloads against the package's public API.
+
+Run one workload with ``python3 perfbench/run.py --workload <name> --seed <n>
+--seconds <s> --trace <0|1>`` from the repository root; ``BENCHMARK.json``
+lists the workloads and metrics.
+"""
