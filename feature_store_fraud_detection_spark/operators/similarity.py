@@ -25,6 +25,13 @@ from feature_store_fraud_detection_spark.functions.numeric import (
 )
 
 
+def _sql_ident(name: str) -> str:
+    """``name`` as a quoted SQL identifier for the parsed-SQL-text builders:
+    backticked, with embedded backticks doubled, so every column name
+    parses as exactly that one column."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _to_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
 
@@ -62,7 +69,7 @@ def with_norm(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     the old ``_to_double``/``dot_expr`` Column composition (which also
     inlined the transform into every reference), minus ~60 py4j
     round-trips per call."""
-    vec_d_sql = f"transform(`{vec_col}`, x -> cast(x as double))"
+    vec_d_sql = f"transform({_sql_ident(vec_col)}, x -> cast(x as double))"
     return (
         _valid_vectors(df, vec_col)
         .select(
@@ -85,7 +92,8 @@ def _valid_vectors(df: DataFrame, vec_col: str) -> DataFrame:
     otherwise flow NULL distances into argmin/rank windows and silently
     produce wrong codes/neighbors. Validation reporting belongs to
     ``validate_embeddings``; search just refuses the rows."""
-    return df.filter(F.col(vec_col).isNotNull() & (F.size(vec_col) > 0))
+    vec = F.col(_sql_ident(vec_col))
+    return df.filter(vec.isNotNull() & (F.size(vec) > 0))
 
 
 def cosine_topk(
@@ -285,7 +293,7 @@ def lsh_buckets(
     return df.select(
         F.col(id_col),
         bucket_expr(
-            f"transform(`{vec_col}`, x -> cast(x as double))",
+            f"transform({_sql_ident(vec_col)}, x -> cast(x as double))",
             num_planes,
             planes,
         ).alias("bucket"),
@@ -926,7 +934,7 @@ def _d2s_sql(cent_sql: str, vec_col: str) -> str:
     round-trips per build; the semantics are identical node-for-node)."""
     return (
         f"transform({cent_sql}, c -> aggregate("
-        f"zip_with(`{vec_col}`, c, (a, b) -> (a - b) * (a - b)), "
+        f"zip_with({_sql_ident(vec_col)}, c, (a, b) -> (a - b) * (a - b)), "
         f"0.0D, (acc, x) -> acc + x))"
     )
 

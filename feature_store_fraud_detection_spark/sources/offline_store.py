@@ -23,13 +23,29 @@ from feature_store_fraud_detection_spark.operators.relational import (
     point_lookup,
     range_scan,
 )
+from feature_store_fraud_detection_spark.sources.readers import (
+    ResolvedTable,
+    checkpointed,
+    mutates_table,
+)
 
 PARTITION_COL = "feature_date"
 
 
 class OfflineStore:
     """A partitioned parquet feature table with the reference's serving
-    access patterns (by-key, by-date-range, bulk, clear) as engine queries."""
+    access patterns (by-key, by-date-range, bulk, clear) as engine queries.
+
+    Freshness: every serving read (``read``, ``by_key``, ``by_date_range``,
+    ``bulk``) is built from one resolved relation per table version, so a
+    read costs no directory listing or footer-schema job. Each mutating
+    method (``write``, ``append``, ``backfill``, ``compact``,
+    ``delete_keys``, ``clear``) bumps the path's version when it finishes,
+    so the next read through ANY store object on this path in this process
+    sees the write. A writer in another process is not seen: this object
+    keeps serving the listing it resolved (out of scope; build a new store
+    object to pick such a write up).
+    """
 
     def __init__(
         self,
@@ -44,9 +60,11 @@ class OfflineStore:
         # zstd: ~parquet-snappy read speed at notably better ratio — at
         # 100 TB the scan is IO-bound, so the ratio IS the scan speed
         self.compression = compression
+        self._table = ResolvedTable(spark, path)
 
     # -- write path ---------------------------------------------------------
 
+    @mutates_table
     def write(
         self,
         features: DataFrame,
@@ -97,6 +115,7 @@ class OfflineStore:
     def append(self, features: DataFrame) -> None:
         self.write(features, mode="append")
 
+    @mutates_table
     def backfill(self, features: DataFrame) -> None:
         """Incremental backfill: overwrite ONLY the date partitions present
         in ``features`` (dynamic partition overwrite), leaving every other
@@ -145,6 +164,7 @@ class OfflineStore:
             .saveAsTable(table_name)
         )
 
+    @mutates_table
     def compact(self, sort_cols: list[str] | None = None) -> None:
         """Rewrite the table so each date partition holds ONE file (small-
         file compaction — the maintenance op that keeps a long-lived 100 TB
@@ -163,17 +183,18 @@ class OfflineStore:
         a cluster job would stage into executor-local blocks the same way
         (or write to a sibling dir and swap).
         """
-        df = self.read().repartition(F.col(PARTITION_COL)).localCheckpoint()
-        if sort_cols:
-            df = df.sortWithinPartitions(*sort_cols)
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .option("compression", self.compression)
-            .partitionBy(PARTITION_COL)
-            .parquet(self.path)
-        )
+        with checkpointed(self.read().repartition(F.col(PARTITION_COL))) as df:
+            if sort_cols:
+                df = df.sortWithinPartitions(*sort_cols)
+            (
+                df.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .option("compression", self.compression)
+                .partitionBy(PARTITION_COL)
+                .parquet(self.path)
+            )
 
+    @mutates_table
     def delete_keys(self, key_col: str, values: list) -> None:
         """Targeted key deletion (the right-to-be-forgotten op): rewrite
         ONLY the date partitions that contain the keys, anti-joined against
@@ -200,28 +221,27 @@ class OfflineStore:
         # keep predicate must be NULL-safe: ~isin(values) evaluates to NULL
         # (not true) for NULL keys, which would silently drop NULL-key rows
         # that merely share a partition with a deleted key.
-        remaining = (
-            df.filter(F.col(PARTITION_COL).isin(touched))
-            .filter(
+        with checkpointed(
+            df.filter(F.col(PARTITION_COL).isin(touched)).filter(
                 F.col(key_col).isNull() | ~F.col(key_col).isin(values)
             )
-            .localCheckpoint()
-        )
-        (
-            remaining.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .option("compression", self.compression)
-            .partitionBy(PARTITION_COL)
-            .parquet(self.path)
-        )
-        # dynamic overwrite only replaces partitions PRESENT in the written
-        # data — a partition whose every row was deleted produces no rows
-        # and would silently keep its old files. Drop those directories
-        # explicitly (Hadoop FS API, so the same code runs on HDFS/S3A).
-        kept = {
-            r[0]
-            for r in remaining.select(PARTITION_COL).distinct().collect()
-        }
+        ) as remaining:
+            (
+                remaining.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .option("compression", self.compression)
+                .partitionBy(PARTITION_COL)
+                .parquet(self.path)
+            )
+            # dynamic overwrite only replaces partitions PRESENT in the
+            # written data — a partition whose every row was deleted
+            # produces no rows and would silently keep its old files. Drop
+            # those directories explicitly (Hadoop FS API, so the same code
+            # runs on HDFS/S3A).
+            kept = {
+                r[0]
+                for r in remaining.select(PARTITION_COL).distinct().collect()
+            }
         jvm = self.spark._jvm
         conf = self.spark._jsc.hadoopConfiguration()
         for p in set(touched) - kept:
@@ -236,6 +256,7 @@ class OfflineStore:
         evolution on plain parquet; renames/drops need a rewrite)."""
         return self.spark.read.option("mergeSchema", "true").parquet(self.path)
 
+    @mutates_table
     def clear(self) -> None:
         """Reference S11 (``feature.py:20-23`` delete_many with no filter):
         drop all rows — overwrite the table with an empty frame. The schema
@@ -249,7 +270,9 @@ class OfflineStore:
     # -- read / serving path ------------------------------------------------
 
     def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        """The whole table, from the relation resolved for its current
+        version (see the class docstring)."""
+        return self._table.frame()
 
     def by_key(self, key_col: str, key_value) -> DataFrame:
         """Point lookup (reference P4/S9). The key predicate pushes to

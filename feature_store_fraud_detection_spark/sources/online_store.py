@@ -28,10 +28,15 @@ Two forms:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from feature_store_fraud_detection_spark.operators.windows import latest_n_per_key
+from feature_store_fraud_detection_spark.sources.readers import (
+    ResolvedTable,
+    checkpointed,
+    mutates_table,
+)
 
 BUCKET_COL = "__kb"
 
@@ -103,6 +108,19 @@ class ParquetOnlineStore:
     total state size; nothing materializes on the driver. ``localCheckpoint``
     before the write breaks the plan's lineage to the path being
     overwritten (Spark refuses a self-overwriting scan otherwise).
+
+    Every reader and writer of a path must use the same ``num_buckets``:
+    the bucket a key lives in is a function of it, so an upsert with a
+    different count merges against the wrong buckets, and a read with a
+    different count filters rows out (see :meth:`read`).
+
+    Freshness: :meth:`read` is built from one resolved relation per table
+    version, so a read costs no directory listing or footer-schema job.
+    ``upsert`` and ``delete_keys`` bump the path's version when they finish,
+    so the next read through ANY store object or ``OnlineStoreSink`` on
+    this path in this process sees the write. A writer in another process
+    is not seen: this object keeps serving the listing it resolved (out of
+    scope; build a new store object to pick such a write up).
     """
 
     def __init__(
@@ -122,23 +140,37 @@ class ParquetOnlineStore:
         self.retention_seconds = retention_seconds
         self.num_buckets = num_buckets
         self.tiebreak = tiebreak
+        self._table = ResolvedTable(
+            spark,
+            path,
+            lambda df: df.filter(F.col(BUCKET_COL) == self._bucket()).drop(BUCKET_COL),
+        )
+
+    def _bucket(self) -> Column:
+        return F.pmod(
+            F.xxhash64(F.col(self.key).cast("string")), F.lit(self.num_buckets)
+        ).cast("int")
 
     def _with_bucket(self, df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            BUCKET_COL,
-            F.pmod(
-                F.xxhash64(F.col(self.key).cast("string")), F.lit(self.num_buckets)
-            ).cast("int"),
-        )
+        return df.withColumn(BUCKET_COL, self._bucket())
 
     def exists(self) -> bool:
         return _path_exists(self.spark, self.path)
 
     def read(self) -> DataFrame:
-        """Full state scan (serving S12 'all keys'); per-key lookups on top
-        of this prune to one bucket via the partition column."""
-        return self.spark.read.parquet(self.path).drop(BUCKET_COL)
+        """Full state scan (serving S12 'all keys'), from the relation
+        resolved for the table's current version.
 
+        The frame carries the predicate ``__kb = <bucket of key>`` before
+        dropping ``__kb``. Every stored row satisfies it (upsert writes
+        ``__kb`` with the same expression, NULL keys included), so a full
+        scan returns every row; but a key-equality filter on top, such as
+        ``point_lookup(store.read(), key, v)``, lets the optimizer fold the
+        predicate into one ``__kb = N`` partition filter, and the lookup
+        scans one bucket's files instead of all of them."""
+        return self._table.frame()
+
+    @mutates_table
     def upsert(self, batch: DataFrame) -> None:
         # materialize the batch ONCE: in a foreachBatch sink the incoming
         # frame is backed by the stateful aggregation, and every separate
@@ -147,22 +179,21 @@ class ParquetOnlineStore:
         # localCheckpoint pins the 25k-ish rows in block storage; the
         # touched-bucket collect and the merge then read memory. An empty
         # batch falls out of the same collect (no separate isEmpty pass).
-        b = self._with_bucket(batch).localCheckpoint(eager=True)
-        touched = [r[0] for r in b.select(BUCKET_COL).distinct().collect()]
-        if not touched:
-            return
-        if self.exists():
-            cur = self.spark.read.parquet(self.path).filter(
-                F.col(BUCKET_COL).isin(touched)
-            )
-            merged = upsert_latest_state(
-                cur, b, self.key, self.ts, self.retention_seconds, self.tiebreak
-            )
-        else:
-            merged = upsert_latest_state(
-                None, b, self.key, self.ts, self.retention_seconds, self.tiebreak
-            )
-        (
+        with checkpointed(self._with_bucket(batch)) as b:
+            touched = [r[0] for r in b.select(BUCKET_COL).distinct().collect()]
+            if not touched:
+                return
+            if self.exists():
+                cur = self.spark.read.parquet(self.path).filter(
+                    F.col(BUCKET_COL).isin(touched)
+                )
+                merged = upsert_latest_state(
+                    cur, b, self.key, self.ts, self.retention_seconds, self.tiebreak
+                )
+            else:
+                merged = upsert_latest_state(
+                    None, b, self.key, self.ts, self.retention_seconds, self.tiebreak
+                )
             # cluster by the partition column BEFORE the partitioned write
             # (guide §6): without it every merge task holds rows of MANY
             # buckets, so each touched bucket directory collects one file
@@ -170,14 +201,15 @@ class ParquetOnlineStore:
             # by every later upsert of that bucket); keyed on __kb each
             # bucket lands in exactly one task — one file per touched
             # bucket. Same rows, same merge semantics; r12 optimization.
-            merged.repartition(F.col(BUCKET_COL))
-            .localCheckpoint(eager=True)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(BUCKET_COL)
-            .parquet(self.path)
-        )
+            with checkpointed(merged.repartition(F.col(BUCKET_COL))) as staged:
+                (
+                    staged.write.mode("overwrite")
+                    .option("partitionOverwriteMode", "dynamic")
+                    .partitionBy(BUCKET_COL)
+                    .parquet(self.path)
+                )
 
+    @mutates_table
     def delete_keys(self, values: list) -> None:
         """Targeted key deletion on the SERVING state (the online half of
         the right-to-be-forgotten op — ``OfflineStore.delete_keys`` handles
@@ -199,22 +231,22 @@ class ParquetOnlineStore:
         ]
         # NULL-safe keep predicate: ~isin evaluates to NULL for NULL keys,
         # which would silently drop NULL-key rows sharing a bucket
-        remaining = (
-            state.filter(F.col(BUCKET_COL).isin(touched))
-            .filter(F.col(self.key).isNull() | ~F.col(self.key).isin(values))
-            .localCheckpoint(eager=True)
-        )
-        (
-            remaining.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(BUCKET_COL)
-            .parquet(self.path)
-        )
-        # dynamic overwrite only replaces buckets PRESENT in the written
-        # data — a bucket whose every key was deleted would silently keep
-        # its old files; drop those directories explicitly (same FS-API
-        # cleanup as OfflineStore.delete_keys).
-        kept = {r[0] for r in remaining.select(BUCKET_COL).distinct().collect()}
+        with checkpointed(
+            state.filter(F.col(BUCKET_COL).isin(touched)).filter(
+                F.col(self.key).isNull() | ~F.col(self.key).isin(values)
+            )
+        ) as remaining:
+            (
+                remaining.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy(BUCKET_COL)
+                .parquet(self.path)
+            )
+            # dynamic overwrite only replaces buckets PRESENT in the written
+            # data — a bucket whose every key was deleted would silently
+            # keep its old files; drop those directories explicitly (same
+            # FS-API cleanup as OfflineStore.delete_keys).
+            kept = {r[0] for r in remaining.select(BUCKET_COL).distinct().collect()}
         jvm = self.spark._jvm
         conf = self.spark._jsc.hadoopConfiguration()
         for b in set(touched) - kept:

@@ -1,4 +1,5 @@
-"""Typed batch readers (reference S1-S4).
+"""Typed batch readers (reference S1-S4), and the table versions the stores
+serve from.
 
 The reference reads its raw CSV with ``inferSchema=True`` (an extra full scan
 and nondeterministic typing, ``batch_processing.py:21``) and re-reads Spark
@@ -6,14 +7,100 @@ output part-files with pandas glob+concat (``model/training.py:57-58``,
 ``insert_offline.py:18-21``). Here every format reads through one explicit
 schema — no inference job, no driver-side concatenation (Spark unions a
 directory of part files natively).
+
+The stores (``offline_store``, ``online_store``) resolve their parquet table
+once per *table version* (:class:`ResolvedTable`) instead of once per read:
+resolving lists the directory tree and infers the schema from footers, which
+dominated a point get's latency. A version is a per-path generation counter
+that every store mutation bumps (:func:`mutates_table`), so any store object
+or sink in this process sees a write on its next read. A writer in another
+process bumps nothing and is not seen.
 """
 
 from __future__ import annotations
+
+import functools
+import threading
+from contextlib import contextmanager
+from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from feature_store_fraud_detection_spark.schemas import TRANSACTIONS_SCHEMA
+
+_generations: dict[str, int] = {}
+_generations_lock = threading.Lock()
+
+
+def _table_key(path: str) -> str:
+    return path.rstrip("/") or path
+
+
+def table_generation(path: str) -> int:
+    """How many store mutations of ``path`` this process has finished."""
+    return _generations.get(_table_key(path), 0)
+
+
+def mutates_table(method):
+    """Decorate a store method that rewrites the table at ``self.path``: the
+    path's generation is bumped once the method returns or raises (a failed
+    write may still have replaced files), so every resolved frame of the
+    path is re-resolved on its next read."""
+
+    @functools.wraps(method)
+    def wrapper(self, *args, **kwargs):
+        try:
+            return method(self, *args, **kwargs)
+        finally:
+            key = _table_key(self.path)
+            with _generations_lock:
+                _generations[key] = _generations.get(key, 0) + 1
+
+    return wrapper
+
+
+class ResolvedTable:
+    """``serve(spark.read.parquet(path))``, resolved once per generation of
+    ``path`` and reused by every read in between.
+
+    The generation is read BEFORE resolving: a write that commits while the
+    table is being resolved leaves the frame tagged with the older
+    generation, so the next read resolves again instead of serving a
+    listing taken mid-write.
+    """
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        path: str,
+        serve: Callable[[DataFrame], DataFrame] = lambda df: df,
+    ):
+        self.spark = spark
+        self.path = path
+        self._serve = serve
+        self._resolved: tuple[int, DataFrame] | None = None
+
+    def frame(self) -> DataFrame:
+        generation = table_generation(self.path)
+        resolved = self._resolved
+        if resolved is not None and resolved[0] == generation:
+            return resolved[1]
+        df = self._serve(self.spark.read.parquet(self.path))
+        self._resolved = (generation, df)
+        return df
+
+
+@contextmanager
+def checkpointed(df: DataFrame) -> Iterator[DataFrame]:
+    """``df.localCheckpoint(eager=True)`` for the body of the ``with``; its
+    blocks are unpersisted on exit instead of whenever the ContextCleaner
+    collects them. The frame is unreadable after the ``with``."""
+    staged = df.localCheckpoint(eager=True)
+    try:
+        yield staged
+    finally:
+        staged._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def read_transactions_csv(

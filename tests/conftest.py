@@ -54,6 +54,7 @@ CORE_TESTS: frozenset[str] = frozenset(
         # plan-shape gates
         "test_point_lookup_pushes_filter",
         "test_flagship_single_window_shuffle",
+        "test_store_point_reads_run_one_job_and_prune_one_bucket",
         # quality / inference fixtures
         "test_chi2_independence_hand_fixture",
         "test_kaplan_meier_hand_fixture",
@@ -78,6 +79,7 @@ CORE_TESTS: frozenset[str] = frozenset(
         # stores
         "test_offline_store_roundtrip",
         "test_online_store_upsert_and_ttl",
+        "test_store_reads_see_every_mutation",
         # streaming
         "test_stream_windowed_stats_matches_batch",
         # temporal joins

@@ -620,3 +620,38 @@ def test_lsh_topk_emits_misuse_warning(spark):
     msgs = [str(w.message) for w in caught if w.category is UserWarning]
     assert any("ivfpq_topk" in m and "recall" in m for m in msgs)
     out.collect()  # the operator still works
+
+
+def test_vector_sql_text_quotes_backticked_column_names(spark):
+    """The parsed-SQL-text builders quote the vector column as ONE
+    identifier: a name with an embedded backtick gives the same results as
+    a plain name, and a plain name renders exactly as before (so its plan
+    is unchanged)."""
+    from feature_store_fraud_detection_spark.operators.similarity import (
+        _nearest_centroid_exprs,
+        _sql_ident,
+        lsh_buckets,
+        with_norm,
+    )
+
+    assert _sql_ident("vec") == "`vec`"
+    assert _sql_ident("v`ec") == "`v``ec`"
+    plain = spark.createDataFrame(
+        [(1, [1.0, 2.0]), (2, [0.0, 0.0]), (3, [3.0, -1.0]), (4, None)],
+        "id long, vec array<float>",
+    )
+    ticked = plain.withColumnRenamed("vec", "v`ec")
+
+    def canon(df):
+        return sorted(map(tuple, df.collect()), key=repr)
+
+    def centroids(df, col):
+        d2s, cluster = _nearest_centroid_exprs([[0.0, 0.0], [2.0, 1.0]], col)
+        return df.filter(F.col("id") != 4).select("id", d2s.alias("d2s"), cluster.alias("cl"))
+
+    for build in (
+        lambda df, col: with_norm(df, "id", col),
+        lambda df, col: lsh_buckets(df, "id", col, num_planes=4, dim=2),
+        centroids,
+    ):
+        assert canon(build(ticked, "v`ec")) == canon(build(plain, "vec"))

@@ -773,3 +773,71 @@ def test_split_novelty_shuffles_digests_not_text(spark, sf_dir):
     assert "CartesianProduct" not in plan
     for seg in plan.split("Exchange hashpartitioning")[1:]:
         assert "shingle#" not in seg[:120], seg[:120]
+
+
+def test_store_point_reads_run_one_job_and_prune_one_bucket(spark, tmp_path):
+    """A warm online point get is one job over one key bucket: the online
+    frame's ``__kb = bucket(key)`` predicate folds with the lookup's key
+    equality into ONE ``__kb = N`` partition filter, N being the bucket the
+    writer put the key in, and the resolved relation spares the listing and
+    footer-schema jobs. A warm offline ``by_key`` is one job too. A NULL-key
+    row still satisfies the bucket predicate, so a full read returns it."""
+    import datetime as dt
+    import re
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    from feature_store_fraud_detection_spark.operators.relational import point_lookup
+    from feature_store_fraud_detection_spark.sources.offline_store import OfflineStore
+    from feature_store_fraud_detection_spark.sources.online_store import (
+        BUCKET_COL,
+        ParquetOnlineStore,
+    )
+
+    sc = spark.sparkContext
+
+    def jobs_of(action):
+        group = f"store-gate-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    t0 = dt.datetime(2024, 1, 1, 10)
+    rows = [(k, float(k), t0 + dt.timedelta(days=k % 3)) for k in range(1, 41)]
+    rows.append((None, -1.0, t0))
+    batch = spark.createDataFrame(rows, "cc_num long, amt double, ts timestamp")
+
+    path = str(tmp_path / "online")
+    online = ParquetOnlineStore(spark, path, ts="ts", retention_seconds=None, num_buckets=16)
+    online.upsert(batch)
+    key = 7
+    written = (
+        spark.read.parquet(path).filter(F.col("cc_num") == key).select(BUCKET_COL).first()[0]
+    )
+
+    def get():
+        return point_lookup(online.read(), "cc_num", key)
+
+    get().collect()  # warm: resolves the table
+    got, jobs = jobs_of(lambda: get().collect())
+    assert [r.amt for r in got] == [7.0]
+    assert jobs == 1
+    plan = _physical(get())
+    part_filters = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
+    assert len(part_filters) == 1
+    assert re.findall(rf"{BUCKET_COL}#\d+ = (\d+)", part_filters[0]) == [str(written)]
+
+    full = online.read().collect()
+    assert len(full) == len(rows)
+    assert [r.amt for r in full if r.cc_num is None] == [-1.0]
+
+    offline = OfflineStore(spark, str(tmp_path / "offline"), ts_col="ts")
+    offline.write(batch)
+    offline.by_key("cc_num", key).collect()
+    got, jobs = jobs_of(lambda: offline.by_key("cc_num", key).collect())
+    assert [r.amt for r in got] == [7.0]
+    assert jobs == 1

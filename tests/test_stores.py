@@ -701,3 +701,119 @@ def test_gdpr_delete_spans_offline_and_online_stores(spark, tmp_path):
     left = on.read() if on.exists() else None
     if left is not None:
         assert left.filter(F.col("user_id") == 2).count() == 0
+
+
+def test_store_reads_see_every_mutation(spark, tmp_path):
+    """Freshness contract of the stores' resolved relations: after each
+    mutating method, a read through the mutating store object AND through
+    a second object on the same path (both resolved before the write)
+    equals a fresh ``spark.read.parquet`` of the path — offline, online,
+    and an ``OnlineStoreSink`` writing while a separate online store reads.
+    The mutators' staging checkpoints are released, not left persisted."""
+    from feature_store_fraud_detection_spark.sources.online_store import BUCKET_COL
+    from feature_store_fraud_detection_spark.streaming.pipeline import OnlineStoreSink
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()), key=repr)
+
+    def fresh(path, drop=()):
+        return rows(spark.read.parquet(path).drop(*drop))
+
+    def mk(rows_):
+        return spark.createDataFrame(rows_, "cc_num long, amt double, ts timestamp")
+
+    def persisted_rdds():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    t0 = dt.datetime(2024, 1, 1, 10)
+    day = dt.timedelta(days=1)
+    persisted_before = persisted_rdds()
+
+    off_path = str(tmp_path / "offline")
+    off = OfflineStore(spark, off_path, ts_col="ts")
+    off2 = OfflineStore(spark, off_path, ts_col="ts")
+    mutations = [
+        ("write", lambda: off.write(mk([(1, 1.0, t0), (2, 2.0, t0 + day)]))),
+        ("append", lambda: off.append(mk([(3, 3.0, t0), (1, 4.0, t0 + 2 * day)]))),
+        ("backfill", lambda: off.backfill(mk([(5, 5.0, t0 + day)]))),
+        ("compact", lambda: off.compact(sort_cols=["cc_num"])),
+        ("delete_keys", lambda: off.delete_keys("cc_num", [1])),
+        ("clear", off.clear),
+    ]
+    for i, (name, mutate) in enumerate(mutations):
+        if i:  # both objects hold a relation resolved before the mutation
+            off.read().collect()
+            off2.read().collect()
+        mutate()
+        want = fresh(off_path)
+        assert rows(off.read()) == want, name
+        assert rows(off2.read()) == want, name
+    assert want == []
+
+    on_path = str(tmp_path / "online")
+    on = ParquetOnlineStore(spark, on_path, ts="ts", retention_seconds=None, num_buckets=8)
+    on.upsert(mk([(1, 1.0, t0), (2, 2.0, t0), (None, 9.0, t0)]))
+    on2 = ParquetOnlineStore(spark, on_path, ts="ts", retention_seconds=None, num_buckets=8)
+    for name, mutate in [
+        ("upsert", lambda: on.upsert(mk([(1, 1.5, t0 + day), (3, 3.0, t0)]))),
+        ("delete_keys", lambda: on.delete_keys([2])),
+    ]:
+        on.read().collect()
+        on2.read().collect()
+        mutate()
+        want = fresh(on_path, drop=[BUCKET_COL])
+        assert rows(on.read()) == want, name
+        assert rows(on2.read()) == want, name
+    assert {r.cc_num for r in on2.read().collect()} == {1, 3, None}
+
+    sink = OnlineStoreSink(key="cc_num", ts="ts", path=str(tmp_path / "sink"),
+                           num_buckets=8)
+    sink(mk([(1, 1.0, t0)]), 0)
+    reader = ParquetOnlineStore(spark, sink.path, ts="ts", num_buckets=8)
+    for batch_id, batch in enumerate([[(1, 2.0, t0 + day), (4, 4.0, t0 + day)],
+                                      [(5, 5.0, t0 + day)]], start=1):
+        reader.read().collect()
+        sink(mk(batch), batch_id)
+        want = fresh(sink.path, drop=[BUCKET_COL])
+        assert rows(reader.read()) == want
+        assert rows(sink.state) == want
+    assert {r.cc_num for r in reader.read().collect()} == {1, 4, 5}
+    assert persisted_rdds() <= persisted_before
+
+
+def test_table_generation_counts_every_concurrent_mutation():
+    """The per-path generation is bumped under a lock: threads mutating one
+    path concurrently lose no bump (a lost one would let a reader keep
+    serving a relation resolved before the write)."""
+    import sys
+    import threading
+
+    from feature_store_fraud_detection_spark.sources.readers import (
+        mutates_table,
+        table_generation,
+    )
+
+    class Table:
+        path = "/stress/generation/table"
+
+        @mutates_table
+        def mutate(self):
+            pass
+
+    workers, bumps = 16, 2_000
+    before = table_generation(Table.path)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=lambda: [Table().mutate() for _ in range(bumps)])
+            for _ in range(workers)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+            assert not t.is_alive()
+    finally:
+        sys.setswitchinterval(interval)
+    assert table_generation(Table.path + "/") == before + workers * bumps
