@@ -836,6 +836,12 @@ def main() -> None:
         round(max(cross) / min(cross), 3) if cross else None
     )
     canary = host_canary(spark)
+    # the parallelism the session actually got, so a core-count check reads
+    # the honoured value instead of inferring it from timings
+    parallelism = {
+        "default_parallelism": spark.sparkContext.defaultParallelism,
+        "master": spark.sparkContext.master,
+    }
 
     # Key order matters: the driver's BENCH_r{N}.json captures only the
     # TAIL of stdout (front-truncation ate the r5/r6 summaries —
@@ -868,6 +874,7 @@ def main() -> None:
         # of cross-round subtotal ratios (see host_canary docstring)
         **canary,
         "subtotals": subtotals,
+        **parallelism,
         "sf": sf,
         "value": total,
     }
@@ -907,6 +914,7 @@ def main() -> None:
         "unit": "sec",
         "value": total,
         "sf": sf,
+        **parallelism,
         "compact": True,
         "queries_n": len(timings),
         "subtotals": subtotals,

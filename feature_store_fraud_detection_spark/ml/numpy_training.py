@@ -24,7 +24,7 @@ The trained state is returned in torch ``state_dict`` key layout
 ``model.{1,5,9}.{weight,bias,running_mean,running_var}`` BatchNorm params),
 so ``np.savez(path, **state)`` produces exactly the npz that
 ``torch_scoring.load_weights`` folds for eval-mode serving — the trained
-model drops straight into ``score_dataframe``'s predict_batch_udf path.
+model drops straight into ``score_dataframe``'s Arrow-batched scoring path.
 
 The reference itself trains on a driver-side pandas sample (rebalanced
 5:1, ``training.py:64-67``); :func:`train_from_dataframe` reproduces that

@@ -17,7 +17,7 @@ default here. Full training-semantics parity (BCELoss + Adam(1e-3, wd 1e-4)
 + ReduceLROnPlateau + Dropout/BatchNorm + best-loss checkpoint) lives in
 ``ml/numpy_training.py`` — a numpy implementation of the reference loop
 whose trained state_dict npz drops straight into
-``torch_scoring.score_dataframe``'s predict_batch_udf serving path.
+``torch_scoring.score_dataframe``'s Arrow-batched serving path.
 """
 
 from __future__ import annotations

@@ -1,10 +1,13 @@
-"""DeepFraudNet-parity scoring via predict_batch_udf (reference ML1/M9).
+"""DeepFraudNet-parity scoring in one Arrow map stage (reference ML1/M9).
 
 The reference scores with a PyTorch MLP (11->256->128->64->1, BatchNorm +
 ReLU + Dropout, sigmoid head; ``model/training.py:33-54``) in a driver-side
 512-row loop (``featurestore_flow.py:96-103``). The engine-native form is
-``pyspark.ml.functions.predict_batch_udf``: Arrow-batched, executor-side,
-one narrow stage over the feature DataFrame.
+one ``mapInArrow`` stage over the feature DataFrame: each Arrow batch is
+stacked into a float64 matrix executor-side, scored, and passed on with a
+``fraud_prob`` column appended. ``MapInArrow`` sits above its child in the
+plan, so an ``orderBy().limit()`` export below it stays one top-k
+(``TakeOrderedAndProject``) instead of a range shuffle and a global sort.
 
 torch is not installed in this container, so the forward pass is a numpy
 implementation of the SAME architecture in eval mode (BatchNorm folds into
@@ -15,8 +18,6 @@ seed-generated weights to exercise the plumbing.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 import numpy as np
 
@@ -113,36 +114,38 @@ def forward(x: np.ndarray, weights: dict[str, np.ndarray]) -> np.ndarray:
     return 1.0 / (1.0 + np.exp(-logits[:, 0]))
 
 
-def make_predict_fn(
-    weights: dict[str, np.ndarray],
-) -> Callable[[], Callable[[np.ndarray], np.ndarray]]:
-    """Factory for predict_batch_udf: the returned maker runs once per
-    executor (weights deserialize once, not per batch)."""
-
-    def maker() -> Callable[[np.ndarray], np.ndarray]:
-        w = weights  # closed over; broadcast with the serialized udf
-
-        def predict(batch: np.ndarray) -> np.ndarray:
-            return forward(batch, w)
-
-        return predict
-
-    return maker
-
-
 def score_dataframe(features_df, feature_cols: list[str], weights=None):
-    """Score a feature DataFrame with the MLP via predict_batch_udf —
-    Arrow batches executor-side, no driver loop (replaces reference M9)."""
-    from pyspark.ml.functions import predict_batch_udf
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import DoubleType
+    """Score a feature DataFrame with the MLP in one ``mapInArrow`` stage —
+    Arrow batches executor-side, no driver loop (replaces reference M9).
+
+    The output is the input's columns, in order, plus ``fraud_prob``
+    (double), one row per input row in input order. The numeric
+    ``feature_cols`` are cast to float64 and stacked per batch; a row with
+    a NULL in any feature scores NULL (never NaN)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import DoubleType, StructField, StructType
 
     weights = weights or init_weights(n_features=len(feature_cols))
-    udf = predict_batch_udf(
-        make_predict_fn(weights),
-        return_type=DoubleType(),
-        batch_size=512,  # reference batch size, training.py:18
-        input_tensor_shapes=[[len(feature_cols)]],
+    schema = StructType(
+        [*features_df.schema.fields, StructField("fraud_prob", DoubleType())]
     )
-    arr = F.array(*[F.col(c).cast("double") for c in feature_cols])
-    return features_df.withColumn("fraud_prob", udf(arr))
+
+    def score(batches):
+        for batch in batches:
+            # unsafe cast: integers past 2**53 round as Spark's cast does
+            cols = [
+                pc.cast(batch.column(c), pa.float64(), safe=False)
+                for c in feature_cols
+            ]
+            null = np.zeros(batch.num_rows, dtype=bool)
+            for col in cols:
+                if col.null_count:
+                    null |= col.is_null().to_numpy(zero_copy_only=False)
+            x = np.column_stack([c.to_numpy(zero_copy_only=False) for c in cols])
+            prob = pa.array(forward(x, weights), mask=null)
+            yield pa.RecordBatch.from_arrays(
+                [*batch.columns, prob], names=[*batch.schema.names, "fraud_prob"]
+            )
+
+    return features_df.mapInArrow(score, schema)

@@ -55,6 +55,7 @@ CORE_TESTS: frozenset[str] = frozenset(
         "test_point_lookup_pushes_filter",
         "test_flagship_single_window_shuffle",
         "test_store_point_reads_run_one_job_and_prune_one_bucket",
+        "test_bulk_scoring_keeps_top_k_below_scorer",
         # quality / inference fixtures
         "test_chi2_independence_hand_fixture",
         "test_kaplan_meier_hand_fixture",

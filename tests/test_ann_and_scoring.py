@@ -1,4 +1,4 @@
-"""IVF ANN variant + predict_batch_udf MLP scoring path."""
+"""IVF ANN variant + Arrow-batched MLP scoring path."""
 
 from __future__ import annotations
 
@@ -36,7 +36,7 @@ def test_ivf_topk_finds_identical_vector(spark):
     assert by_rank[1].cosine == 1.0
 
 
-def test_predict_batch_udf_scoring(spark, sf_dir):
+def test_score_dataframe_matches_local_forward(spark, sf_dir):
     feats = compute_features(
         events_as_transactions(load_table(spark, sf_dir, "events"))
     ).na.fill(0)
@@ -61,6 +61,24 @@ def test_predict_batch_udf_scoring(spark, sf_dir):
         .collect()
     )
     assert np.allclose([r.fraud_prob for r in got], local, atol=1e-12)
+
+
+def test_score_dataframe_nulls_and_empty(spark):
+    """A row with a NULL in any feature (double or int) scores NULL, not
+    NaN; the other rows equal the local forward pass; an empty frame
+    returns no rows and still carries a double ``fraud_prob`` column."""
+    rows = [(1, 1.5, 2), (2, None, 3), (3, -0.5, None), (4, 0.25, 7), (5, None, None)]
+    df = spark.createDataFrame(rows, "id long, a double, b int")
+    w = init_weights(n_features=2, seed=5)
+    got = {r.id: r.fraud_prob for r in score_dataframe(df, ["a", "b"], w).collect()}
+    assert [got[i] for i in (2, 3, 5)] == [None, None, None]
+    want = forward(np.array([[1.5, 2.0], [0.25, 7.0]]), w)
+    assert np.allclose([got[1], got[4]], want, rtol=0, atol=1e-12)
+
+    empty = score_dataframe(df.limit(0), ["a", "b"], w)
+    assert empty.columns == ["id", "a", "b", "fraud_prob"]
+    assert dict(empty.dtypes)["fraud_prob"] == "double"
+    assert empty.collect() == []
 
 
 def _fixture_state_dict(n_features: int, seed: int = 7) -> dict[str, np.ndarray]:
@@ -88,7 +106,7 @@ def _fixture_state_dict(n_features: int, seed: int = 7) -> dict[str, np.ndarray]
 
 def test_state_dict_import_scores_bit_equal(spark, tmp_path):
     """Imported fixture weights (torch state_dict -> npz -> folded BN)
-    score bit-equal between the distributed predict_batch_udf path and a
+    score bit-equal between the distributed Arrow scoring path and a
     local numpy forward, and survive the npz round-trip."""
     n_features = 6
     sd = _fixture_state_dict(n_features)

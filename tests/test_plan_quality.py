@@ -18,6 +18,21 @@ def _analyzed(df) -> str:
     return df._jdf.queryExecution().toString()
 
 
+def _jobs_of(spark, action):
+    """Run ``action`` in a fresh job group; return its result and the
+    number of Spark jobs it ran."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-gate-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_point_lookup_pushes_filter(spark, sf_dir):
     df = QUERIES["point_lookup"].fn(spark, sf_dir)
     plan = _analyzed(df)
@@ -784,7 +799,6 @@ def test_store_point_reads_run_one_job_and_prune_one_bucket(spark, tmp_path):
     row still satisfies the bucket predicate, so a full read returns it."""
     import datetime as dt
     import re
-    import uuid
 
     from pyspark.sql import functions as F
 
@@ -794,17 +808,6 @@ def test_store_point_reads_run_one_job_and_prune_one_bucket(spark, tmp_path):
         BUCKET_COL,
         ParquetOnlineStore,
     )
-
-    sc = spark.sparkContext
-
-    def jobs_of(action):
-        group = f"store-gate-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
-        try:
-            out = action()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
     t0 = dt.datetime(2024, 1, 1, 10)
     rows = [(k, float(k), t0 + dt.timedelta(days=k % 3)) for k in range(1, 41)]
@@ -823,7 +826,7 @@ def test_store_point_reads_run_one_job_and_prune_one_bucket(spark, tmp_path):
         return point_lookup(online.read(), "cc_num", key)
 
     get().collect()  # warm: resolves the table
-    got, jobs = jobs_of(lambda: get().collect())
+    got, jobs = _jobs_of(spark, lambda: get().collect())
     assert [r.amt for r in got] == [7.0]
     assert jobs == 1
     plan = _physical(get())
@@ -838,6 +841,53 @@ def test_store_point_reads_run_one_job_and_prune_one_bucket(spark, tmp_path):
     offline = OfflineStore(spark, str(tmp_path / "offline"), ts_col="ts")
     offline.write(batch)
     offline.by_key("cc_num", key).collect()
-    got, jobs = jobs_of(lambda: offline.by_key("cc_num", key).collect())
+    got, jobs = _jobs_of(spark, lambda: offline.by_key("cc_num", key).collect())
     assert [r.amt for r in got] == [7.0]
     assert jobs == 1
+
+
+def test_bulk_scoring_keeps_top_k_below_scorer(spark, tmp_path):
+    """Scoring a bulk export is one Spark job: the scorer's ``MapInArrow``
+    sits above the export's ``orderBy().limit()``, which stays one top-k
+    (``TakeOrderedAndProject``), so there is no range-bounds sampling job,
+    no range shuffle and no global sort under the scorer. The rows are the
+    first ``n`` in key-then-timestamp order, scored as ``forward()`` would."""
+    import datetime as dt
+
+    import numpy as np
+
+    from feature_store_fraud_detection_spark.ml.torch_scoring import (
+        forward,
+        init_weights,
+        score_dataframe,
+    )
+    from feature_store_fraud_detection_spark.sources.offline_store import OfflineStore
+
+    t0 = dt.datetime(2024, 1, 1, 10)
+    rows = [
+        (k, float(k * 10 + j), j, t0 + dt.timedelta(days=j, hours=k % 5))
+        for k in range(40, 0, -1)
+        for j in range(4)
+    ]
+    batch = spark.createDataFrame(
+        rows, "cc_num long, amt double, n int, feature_timestamp timestamp"
+    ).repartition(4)
+    store = OfflineStore(spark, str(tmp_path / "offline"))
+    store.write(batch)
+    cols, n = ["amt", "n"], 50
+    w = init_weights(n_features=len(cols), seed=3)
+
+    def scored():
+        return score_dataframe(store.bulk("cc_num", n), cols, w)
+
+    scored().toPandas()  # warm: resolves the table
+    pdf, jobs = _jobs_of(spark, lambda: scored().toPandas())
+    assert jobs == 1
+    plan = _physical(scored())
+    assert "TakeOrderedAndProject" in plan
+    assert "rangepartitioning" not in plan
+
+    want = sorted(rows, key=lambda r: (r[0], r[3]))[:n]
+    assert list(zip(pdf["cc_num"], pdf["n"])) == [(r[0], r[2]) for r in want]
+    x = np.array([[r[1], r[2]] for r in want], dtype=np.float64)
+    assert np.allclose(pdf["fraud_prob"].to_numpy(), forward(x, w), rtol=0, atol=1e-12)

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import functions as F
 
 from feature_store_fraud_detection_spark.operators.skew import (
@@ -81,7 +83,11 @@ def test_feature_server_routes(spark, sf_dir, tmp_path):
     assert srv.features_by_key(3).count() == feats.filter(F.col("cc_num") == 3).count()
     rng = srv.features_by_date_range("2024-01-05", "2024-01-07")
     assert rng.count() > 0
-    assert srv.bulk_features(limit=50).count() == 50
+    bulk = srv.bulk_features(limit=50).collect()
+    assert len(bulk) == 50
+    # ordered by key then timestamp: the key cut by the limit returns the
+    # same rows on every call
+    assert Counter(srv.bulk_features(limit=50).collect()) == Counter(bulk)
 
 
 def test_csv_reader_roundtrip(spark, sf_dir, tmp_path):
