@@ -22,12 +22,20 @@ table, which is |V|, not |E|); each iteration is one shuffle-join plus one
 map-side-combined aggregate, and ``localCheckpoint`` truncates the plan so
 iteration N does not replay 1..N-1. Convergence work is O(iterations *
 (|E| join + |V| agg)) — the textbook MapReduce PageRank shape.
+
+BFS levels and SSSP share one min-plus relaxation. Up to
+``ONE_PASS_EDGE_LIMIT`` edges (one count of the persisted edges) all rounds
+run in ONE grouped-map Arrow pass, not a job chain per round (per-round
+coordination dominates short iterative Spark jobs: MLlib*, ICDE 2019); one
+Python worker receives the whole edge list, hence the bound. Above it each
+round is one checkpointed join + min-aggregate, in pagerank's two regimes.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 #: rank mass is scaled by this (BIGINT) factor; 10**12 leaves headroom for
 #: the 85x damping multiply inside int64 even if one node held ALL mass.
@@ -39,6 +47,12 @@ PAGERANK_SCALE = 10**12
 #: once and iterations run co-partitioned SMJs.
 SMALL_GRAPH_NODE_LIMIT = 1_000_000
 
+#: bfs_levels/sssp run every round in one grouped-map pass up to this many
+#: edges. One Python worker receives the whole edge list; timed at local[4]
+#: against the broadcast join rounds, the pass wins to 500k edges and loses
+#: by 1M-2M, where the one-task transfer outweighs the per-round jobs.
+ONE_PASS_EDGE_LIMIT = 500_000
+
 #: per-task floor for the cached edge table in the small-graph regime: tiny
 #: graphs coalesce to one task (a sub-100k-edge task is mostly scheduling
 #: overhead), but the partition count is CAPPED at the session's default
@@ -46,7 +60,7 @@ SMALL_GRAPH_NODE_LIMIT = 1_000_000
 #: graph) spreads each iteration's join+agg across cores instead of
 #: serializing on a single task. Swept empirically at sf0.1: 40k/task is
 #: scheduling-bound, 2M/task is single-task-bound; 120k is the knee for
-#: both pagerank and bfs.
+#: both pagerank and bfs (past bfs/sssp's one-pass bound).
 EDGES_PER_TASK = 120_000
 
 
@@ -322,62 +336,19 @@ def bfs_levels(
     level; one round relaxes all edges (``level[dst] = min(level[dst],
     level[src]+1)``). ``max_hops`` rounds of relaxation give exact distances
     up to ``max_hops`` (each round extends the certified radius by one).
-    Unreached nodes are absent from the output.
+    Unreached nodes are absent from the output; NULL seed ids are dropped.
 
-    Scale: per round one join keyed on ``src`` + one min-aggregate — the
-    same shuffle profile as a single dedup_clusters round; the edge table is
-    pre-keyed and persisted across rounds.
+    BFS is :func:`sssp` with weight 1 and an INT level; both run
+    :func:`_relax_min_plus`: one grouped-map pass up to
+    ``ONE_PASS_EDGE_LIMIT`` edges (one worker receives them all), then
+    checkpointed join rounds, broadcast or co-partitioned as in pagerank.
     """
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
     if not assume_distinct:
         e = e.distinct()
-    e_cached = e.persist()
-    n_edges = e_cached.count()  # driver scalar: picks the execution regime
-    # same dual regime as pagerank: broadcast the (bounded-by-|V|) level
-    # table and coalesce the cached edges when the graph is small; pre-key
-    # the edges once for co-partitioned SMJs when it is not.
-    small_graph = n_edges <= 2 * SMALL_GRAPH_NODE_LIMIT
-    if small_graph:
-        e = e_cached.coalesce(_edge_partitions(edges.sparkSession, n_edges))
-    else:
-        e_cached2 = e_cached.repartition("src").persist()
-        e_cached.unpersist()
-        e_cached = e_cached2
-        e = e_cached
-    # a NULL seed id is not a node: drop it (an agg-min seed over an
-    # empty table yields one NULL row, and NULL never equi-joins — it
-    # would silently seed nothing while still occupying a row)
-    levels = (
-        seeds.filter(F.col(node_col).isNotNull())
-        .select(
-            F.col(node_col).alias("node"),
-            F.lit(0).cast("int").alias("level"),
-        )
-        .distinct()
+    return _relax_min_plus(
+        "bfs_levels", e, seeds, node_col, "level", T.IntegerType(), max_hops
     )
-    for i in range(max_hops):
-        lvl_side = F.broadcast(levels) if small_graph else levels
-        levels = (
-            e.join(lvl_side, e.src == levels.node)
-            .select(F.col("dst").alias("node"), (F.col("level") + 1).alias("level"))
-            .unionByName(levels)
-            .groupBy("node")
-            .agg(F.min("level").cast("int").alias("level"))
-        )
-        # r13: checkpoint EVERY round, not every 5th. Unlike pagerank's
-        # single-reference iteration, this round body references
-        # ``levels`` TWICE (join side + union side), so a chained plan
-        # duplicates every prior round's subtree 2x per round —
-        # measured at 4 rounds: 31 Exchange / 18 parquet scans /
-        # 0 ReusedExchange in one 1,943-line plan, 33 jobs. The eager
-        # per-round cut keeps lineage linear: 21 jobs, -11% wall,
-        # rows identical (plans/r13/bfs_levels_*.txt).
-        if (i + 1) < max_hops:
-            levels = levels.localCheckpoint(eager=True)
-    # materialize ONCE (while the edge cache is live), then release it
-    levels = levels.localCheckpoint(eager=True)
-    e_cached.unpersist()
-    return levels
 
 
 def triangle_stats(
@@ -764,10 +735,8 @@ def sssp(
     for graphs whose diameter is believed, not known. Unreached nodes
     are absent from the output.
 
-    Scale: identical shuffle profile to bfs_levels — per round one join
-    keyed on ``src`` + one min-aggregate over (|V|-bounded) distance
-    rows; the edge table is persisted (and pre-keyed in the large-graph
-    regime) once across rounds.
+    Scale: bfs_levels' regimes (module docstring); the one-pass regime
+    runs the convergence round inside the pass.
     """
     w_ok = F.when(
         F.col(weight_col).isNotNull() & (F.col(weight_col) > 0),
@@ -788,68 +757,144 @@ def sssp(
         F.col(dst_col).alias("dst"),
         w_ok.alias("w"),
     )
-    e_cached = e.persist()
-    n_edges = e_cached.count()
-    small_graph = n_edges <= 2 * SMALL_GRAPH_NODE_LIMIT
-    if small_graph:
-        e = e_cached.coalesce(_edge_partitions(edges.sparkSession, n_edges))
-    else:
-        e_cached2 = e_cached.repartition("src").persist()
-        e_cached.unpersist()
-        e_cached = e_cached2
-        e = e_cached
-    # NULL seed rows dropped (see bfs_levels): a NULL node never
-    # equi-joins, so it would relax nothing — worse, the convergence
-    # check's left join counts the unjoinable row as "still improving"
-    # (round-10 degenerate-probe finding at k=0)
-    dists = (
-        seeds.filter(F.col(node_col).isNotNull())
-        .select(
-            F.col(node_col).alias("node"),
-            F.lit(0).cast("bigint").alias("dist"),
-        )
-        .distinct()
+    return _relax_min_plus(
+        "sssp", e, seeds, node_col, "dist", T.LongType(), max_rounds, assert_converged
     )
 
-    def _relax(d: DataFrame) -> DataFrame:
-        d_side = F.broadcast(d) if small_graph else d
-        return (
-            e.join(d_side, e.src == d.node)
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("dist") + F.col("w")).alias("dist"),
+
+def _relax_min_plus(
+    name: str, e: DataFrame, seeds: DataFrame, node_col: str, value: str,
+    value_type: T.DataType, rounds: int, assert_converged: bool = False,
+) -> DataFrame:
+    """``rounds`` synchronous ``value[dst] = min(value[dst], value[src] + w)``
+    rounds (w = 1 if ``e`` has none) from the non-NULL ``seeds`` at 0 -> an
+    eager (node, value) checkpoint, the only state it leaves persisted, also
+    when it raises. A NULL src relaxes nothing; a NULL dst is a node without
+    out-edges. The convergence round counts the NULL node like any other."""
+    node = F.col(node_col)
+    start = seeds.filter(node.isNotNull()).select(node.alias("node"))
+    step = F.col("w") if "w" in e.columns else F.lit(1)
+    e = e.persist()
+    keyed = ckpt = None
+    try:
+        n_edges = e.count()  # the one count: picks the regime
+        # the node field the rounds' union gives; both regimes return it,
+        # zero rounds included (the empty side is pruned, never scanned)
+        nodes = e.select(F.col("dst").alias("node")).where(F.lit(False))
+        nodes = nodes.unionByName(start)
+        field = nodes.schema[0]
+        if n_edges <= ONE_PASS_EDGE_LIMIT:
+            # one group; seed rows carry a NULL weight
+            ids = [F.col(c).cast(field.dataType) for c in ("src", "dst")]
+            rows = e.select(*ids, step.cast("long"))
+            rows = rows.union(start.select("node", F.lit(None), F.lit(None).cast("long")))
+            schema = T.StructType([field]).add(value, value_type).add("improved", "long")
+            ckpt = _checkpoint(
+                rows.groupBy().applyInArrow(
+                    _one_pass(schema, rounds, assert_converged), schema
+                )
             )
-            .unionByName(d)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
+            improved = assert_converged and (ckpt.select("improved").first() or [0])[0]
+        else:
+            # pagerank's two regimes: broadcast the |V|-bounded state over
+            # the coalesced edges, or pre-key the edges once for SMJs
+            small = n_edges <= 2 * SMALL_GRAPH_NODE_LIMIT
+            if small:
+                edges = e.coalesce(_edge_partitions(e.sparkSession, n_edges))
+            else:
+                edges = keyed = e.repartition("src").persist()
+
+            def settle(d: DataFrame) -> DataFrame:
+                return d.groupBy("node").agg(F.min(value).cast(value_type).alias(value))
+
+            def relax(d: DataFrame) -> DataFrame:
+                return settle(
+                    edges.join(F.broadcast(d) if small else d, edges.src == d.node)
+                    .select(F.col("dst").alias("node"), (F.col(value) + step).alias(value))
+                    .unionByName(d)
+                )
+
+            ckpt = _checkpoint(settle(nodes.select("node", F.lit(0).alias(value))))
+            for _ in range(rounds):
+                # cut every round: relax reads d twice, so an uncut plan doubles
+                nxt = _checkpoint(relax(ckpt))
+                _release(ckpt)
+                ckpt = nxt
+            # EXCEPT compares the NULL node null-safely, as the pass does
+            improved = assert_converged and relax(ckpt).subtract(ckpt).count()
+        if improved:
+            raise ValueError(
+                f"{name}: {improved} distances still improve after {rounds} "
+                "rounds — raise max_rounds (graph deeper than assumed)"
+            )
+    except BaseException:
+        if ckpt is not None:
+            _release(ckpt)
+        raise
+    finally:
+        e.unpersist()
+        if keyed is not None:
+            keyed.unpersist()
+    return ckpt.select("node", value)
+
+
+def _checkpoint(df: DataFrame) -> DataFrame:
+    """An eager localCheckpoint that frees its blocks if computing it fails."""
+    ckpt = df.localCheckpoint(eager=False)
+    try:
+        ckpt._jdf.queryExecution().logical().rdd().count()
+    except BaseException:
+        _release(ckpt)
+        raise
+    return ckpt
+
+
+def _release(ckpt: DataFrame) -> None:
+    """Free a localCheckpoint's blocks now, not when GC finds it."""
+    ckpt._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+def _one_pass(schema: T.StructType, rounds: int, check: bool):
+    """The one-pass worker over (src, dst, w) rows, seeds with a NULL w ->
+    (node, value, improved) per reached node. Arrow factorizes the ids, NULL
+    included, so no id goes through float64; a value reaching BIGINT max
+    raises. Nested and self-importing, so it is pickled by value: Python
+    workers need no import of this package."""
+
+    def relax_table(table):
+        import numpy as np
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        src, dst, w = table.columns
+        ids = pa.concat_arrays(src.chunks + dst.chunks).dictionary_encode()
+        null = len(ids.dictionary)
+        src, dst = np.split(ids.indices.fill_null(null).to_numpy(), 2)
+        w = w.fill_null(0).to_numpy()
+        inf = np.iinfo(np.int64).max  # unreached
+        dist = np.full(null + 1, inf)
+        dist[src[w == 0]] = 0
+        edge = (w > 0) & (src != null)  # a NULL src matches no node
+        src, dst, w = src[edge], dst[edge], w[edge]
+
+        def relax(dist):
+            # every candidate reads last round's values, as a join round does
+            live = dist[src] < inf
+            cand = dist[src[live]] + w[live]
+            if cand.size and (cand.min() < 0 or cand.max() == inf):
+                raise OverflowError(f"{schema.names[1]} reaches the BIGINT maximum")
+            best = dist.copy()
+            np.minimum.at(best, dst[live], cand)
+            return best, int((best < dist).sum())
+
+        for _ in range(rounds):
+            dist = relax(dist)[0]
+        improved = relax(dist)[1] if check else 0
+        out = np.flatnonzero(dist < inf)
+        nodes = ids.dictionary.take(pa.array(out, mask=out == null))  # NULL last
+        value = pa.array(dist[out]).cast(to_arrow_type(schema[1].dataType))
+        return pa.table(
+            [nodes, value, pa.array(np.full(out.size, improved))], names=schema.names
         )
 
-    for i in range(max_rounds):
-        dists = _relax(dists)
-        # r13: checkpoint every round — _relax references ``d`` twice
-        # (join side + union side), so chained rounds duplicate every
-        # prior round's subtree 2x per round (bfs_levels' measured
-        # defect; same loop shape). The eager cut keeps lineage linear.
-        if (i + 1) < max_rounds:
-            dists = dists.localCheckpoint(eager=True)
-    dists = dists.localCheckpoint(eager=True)
-    if assert_converged:
-        improved = (
-            _relax(dists)
-            .alias("nxt")
-            .join(dists.alias("cur"), "node", "left")
-            .filter(
-                F.col("cur.dist").isNull()
-                | (F.col("nxt.dist") < F.col("cur.dist"))
-            )
-            .count()
-        )
-        if improved:
-            e_cached.unpersist()
-            raise ValueError(
-                f"sssp: {improved} distances still improve after "
-                f"{max_rounds} rounds — raise max_rounds (graph deeper "
-                "than assumed)"
-            )
-    e_cached.unpersist()
-    return dists
+    return relax_table

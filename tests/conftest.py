@@ -40,6 +40,7 @@ CORE_TESTS: frozenset[str] = frozenset(
         # graph + sketches
         "test_pagerank_two_cycle_exact_fixed_point",
         "test_bfs_levels_chain_and_cap",
+        "test_relaxation_regimes_agree",
         "test_hll_sketch_estimate_accuracy_and_merge",
         # LLM-data ops
         "test_exact_dedup_groups",
@@ -56,6 +57,7 @@ CORE_TESTS: frozenset[str] = frozenset(
         "test_flagship_single_window_shuffle",
         "test_store_point_reads_run_one_job_and_prune_one_bucket",
         "test_bulk_scoring_keeps_top_k_below_scorer",
+        "test_bfs_levels_small_graph_runs_one_pass",
         # quality / inference fixtures
         "test_chi2_independence_hand_fixture",
         "test_kaplan_meier_hand_fixture",

@@ -150,6 +150,121 @@ def test_bfs_levels_min_over_paths(spark):
     assert out["d"] == 2
 
 
+def _in_every_regime(monkeypatch, op):
+    """``op()`` in the one-pass regime, the broadcast join-round regime and
+    the keyed join-round regime (forced by zero size bounds) -> the three
+    results."""
+    from feature_store_fraud_detection_spark.operators import graph
+
+    out = [op()]
+    with monkeypatch.context() as m:
+        m.setattr(graph, "ONE_PASS_EDGE_LIMIT", 0)
+        out.append(op())
+        m.setattr(graph, "SMALL_GRAPH_NODE_LIMIT", 0)
+        out.append(op())
+    return out
+
+
+def test_relaxation_regimes_agree(spark, monkeypatch):
+    """bfs_levels and sssp return the same rows and schema in every regime
+    on the degenerate inputs. A NULL src edge relaxes nothing; a reachable
+    NULL dst comes back as a NULL node; a NULL seed is dropped; an absent
+    seed or one over an empty edge set comes back alone at 0. The
+    convergence round finds nothing to improve in any of them (the NULL
+    node included), and raises the same error in every regime when the
+    rounds fall short. A distance past the BIGINT maximum raises in every
+    regime instead of wrapping. Zero rounds return the seeds in the same
+    schema. A call leaves only its returned checkpoint persisted, and none
+    when it raises."""
+    import pytest
+
+    from feature_store_fraud_detection_spark.operators.graph import sssp
+
+    big = 2**53
+    cases = [  # (edges (src, dst, w), id type, seeds, sssp distances)
+        ([("a", "b", 2), ("b", "c", 3), ("a", "c", 9)], "string", ["a"],
+         {"a": 0, "b": 2, "c": 5}),
+        ([(big + 1, big + 2, 5), (big + 2, big + 3, 1)], "bigint", [big + 1],
+         {big + 1: 0, big + 2: 5, big + 3: 6}),
+        ([(1, 2, 4), (1, 2, 4), (1, 2, 1), (2, 2, 1), (1, 1, 7), (2, 3, 2)],
+         "bigint", [1], {1: 0, 2: 1, 3: 3}),
+        ([(None, 1, 1), (None, 3, 1), (1, 2, 1), (2, None, 3)], "bigint", [1],
+         {1: 0, 2: 1, None: 4}),
+        ([(1, 2, 1)], "bigint", [None, 1], {1: 0, 2: 1}),
+        ([(1, 2, 1)], "bigint", [7], {7: 0}),
+        ([], "bigint", [5], {5: 0}),
+    ]
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+
+    def result(call):
+        """call()'s schema and rows; it leaves only its checkpoint persisted."""
+        before = set(persisted().keySet())
+        out = call()
+        assert len(set(persisted().keySet()) - before) <= 1
+        return out.schema, sorted(out.collect(), key=repr)
+
+    for rows, id_type, seed_ids, want in cases:
+        edges = spark.createDataFrame(rows, f"src {id_type}, dst {id_type}, w long")
+        seeds = spark.createDataFrame([(s,) for s in seed_ids], f"node {id_type}")
+
+        def run_bfs(edges=edges, seeds=seeds):
+            return result(
+                lambda: bfs_levels(edges.select("src", "dst"), seeds, max_hops=3)
+            )
+
+        def run_sssp(edges=edges, seeds=seeds):
+            return result(
+                lambda: sssp(edges, seeds, max_rounds=3, assert_converged=True)
+            )
+
+        one_pass, *joins = _in_every_regime(monkeypatch, run_bfs)
+        assert joins == [one_pass] * 2, rows
+        one_pass, *joins = _in_every_regime(monkeypatch, run_sssp)
+        assert joins == [one_pass] * 2, rows
+        assert {r.node: r.dist for r in one_pass[1]} == want
+
+    # zero rounds: the seeds alone, typed as the rounds' union would type them
+    edges = spark.createDataFrame([(1, 2, 1)], "src bigint, dst bigint, w long")
+    seeds = spark.createDataFrame([(1,), (None,)], "node int")
+
+    def run_zero():
+        return [
+            (out.schema, out.collect())
+            for out in (
+                bfs_levels(edges.select("src", "dst"), seeds, max_hops=0),
+                sssp(edges, seeds, max_rounds=0),
+            )
+        ]
+
+    one_pass, *joins = _in_every_regime(monkeypatch, run_zero)
+    assert joins == [one_pass] * 2
+    assert [rows for _, rows in one_pass] == [[(1, 0)], [(1, 0)]]
+
+    chain = spark.createDataFrame(
+        [("a", "b", 1), ("b", "c", 1)], "src string, dst string, w long"
+    )
+    huge = spark.createDataFrame(
+        [("a", "b", 2**62), ("b", "c", 2**62)], "src string, dst string, w long"
+    )
+    zero = spark.createDataFrame([("a", "b", 0)], "src string, dst string, w long")
+    seeds = spark.createDataFrame([("a",)], "node string")
+
+    def raises(edges, rounds, match, converged=False):
+        """The error text; the failed call leaves nothing persisted."""
+        def op():
+            before = set(persisted().keySet())
+            with pytest.raises(Exception, match=match) as err:
+                sssp(edges, seeds, max_rounds=rounds, assert_converged=converged)
+            assert set(persisted().keySet()) <= before
+            return str(err.value)
+        return _in_every_regime(monkeypatch, op)
+
+    one_pass, *joins = raises(chain, 1, "still improve", converged=True)
+    assert joins == [one_pass] * 2
+    raises(huge, 2, "(?i)overflow")
+    raises(zero, 2, "weight must be a positive integer")
+
+
 def test_cms_never_underestimates_and_is_tight_when_sparse(spark):
     from feature_store_fraud_detection_spark.operators.sketches import (
         cms_query,

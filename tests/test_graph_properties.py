@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -28,6 +29,20 @@ _edges_strategy = st.lists(
     min_size=1,
     max_size=20,
 )
+
+
+@pytest.fixture(params=["one_pass", "broadcast", "keyed"])
+def relax_regime(request, monkeypatch):
+    """Every regime of the BFS/SSSP relaxation: ``broadcast`` and ``keyed``
+    force the join rounds by dropping the one-pass bound (and for ``keyed``
+    the small-graph bound) to 0; only an empty edge set stays under them."""
+    from feature_store_fraud_detection_spark.operators import graph
+
+    if request.param != "one_pass":
+        monkeypatch.setattr(graph, "ONE_PASS_EDGE_LIMIT", 0)
+    if request.param == "keyed":
+        monkeypatch.setattr(graph, "SMALL_GRAPH_NODE_LIMIT", 0)
+    return request.param
 
 
 def _canon_undirected(edges):
@@ -66,7 +81,7 @@ def test_pagerank_matches_integer_bruteforce(spark, edges):
 
 @SET
 @given(_edges_strategy, st.integers(min_value=0, max_value=7))
-def test_bfs_levels_matches_bruteforce(spark, edges, seed):
+def test_bfs_levels_matches_bruteforce(spark, relax_regime, edges, seed):
     from feature_store_fraud_detection_spark.operators.graph import (
         bfs_levels,
     )
@@ -102,7 +117,7 @@ def test_bfs_levels_matches_bruteforce(spark, edges, seed):
     ),
     st.integers(min_value=0, max_value=7),
 )
-def test_sssp_matches_bellman_ford(spark, edges, seed):
+def test_sssp_matches_bellman_ford(spark, relax_regime, edges, seed):
     from feature_store_fraud_detection_spark.operators.graph import sssp
 
     df = spark.createDataFrame(edges, "src long, dst long, w long")

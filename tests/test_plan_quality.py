@@ -891,3 +891,30 @@ def test_bulk_scoring_keeps_top_k_below_scorer(spark, tmp_path):
     assert list(zip(pdf["cc_num"], pdf["n"])) == [(r[0], r[2]) for r in want]
     x = np.array([[r[1], r[2]] for r in want], dtype=np.float64)
     assert np.allclose(pdf["fraud_prob"].to_numpy(), forward(x, w), rtol=0, atol=1e-12)
+
+
+def test_bfs_levels_small_graph_runs_one_pass(spark):
+    """A warm small-graph BFS is the edge count plus one grouped-map pass,
+    not a checkpointed job chain per round: 7 jobs for build and collect on
+    this chain (18 with a join + min-aggregate job chain over its 4 rounds).
+    It leaves one persisted RDD: the checkpoint it returns."""
+    from feature_store_fraud_detection_spark.operators.graph import bfs_levels
+
+    chain = spark.createDataFrame(
+        [(c, chr(ord(c) + 1)) for c in "abcdef"], "src string, dst string"
+    )
+    seeds = spark.createDataFrame([("a",)], "node string")
+
+    def run():
+        return bfs_levels(chain, seeds, max_hops=4).collect()
+
+    run()  # warm
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keySet())
+    out = bfs_levels(chain, seeds, max_hops=4)
+    assert len(set(persisted().keySet()) - before) <= 1
+    assert sorted((r.node, r.level) for r in out.collect()) == [
+        ("a", 0), ("b", 1), ("c", 2), ("d", 3), ("e", 4)
+    ]
+    _, jobs = _jobs_of(spark, run)
+    assert jobs <= 7, jobs

@@ -158,10 +158,11 @@ SELECTED: dict[str, str] = {
     ),
     "sssp_nations": (
         "Nation-pair edge weights reduce via one keyed min-aggregate; "
-        "each Bellman-Ford round broadcasts the |V|-bounded distance "
-        "table over the persisted coalesced edge cache (bfs_levels dual "
-        "regime) — pure BIGINT min/plus, and the extra assert_converged "
-        "round fails loud instead of silently truncating deep graphs."
+        "the persisted edge cache and the seed go to one grouped-map "
+        "Arrow pass (FlatMapGroupsInArrow) that runs every Bellman-Ford "
+        "round and the assert_converged round (the one-pass regime, "
+        "under ONE_PASS_EDGE_LIMIT edges) — pure BIGINT min/plus, and the "
+        "extra round fails loud instead of silently truncating deep graphs."
     ),
     "dsir_selection": (
         "Term stats join per-doc tf CO-PARTITIONED on term (the "
