@@ -25,9 +25,11 @@ overlap case). No regex, no fold-order ambiguity.
 
 Scale notes: each round is one narrow pair-explode + one aggregate over the
 word table, an arg-max LIMIT 1 (driver collects ONE row — bounded metadata,
-like the sampler configs), and one narrow rewrite projection.
-``localCheckpoint`` every few rounds truncates the growing lineage. The
-corpus itself is read once, for the initial word count.
+like the sampler configs), and one narrow rewrite projection. A
+``lineage.checkpoint`` every 3rd round truncates the growing lineage and
+releases the cut it supersedes; the last cut and the word-count cache are
+freed before returning, since the merge table is built on the driver. The
+corpus itself is read once, for the persisted word counts.
 """
 
 from __future__ import annotations
@@ -35,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from feature_store_fraud_detection_spark.lineage import checkpoint, release
 from feature_store_fraud_detection_spark.operators.text_analysis import tokens
 
 
@@ -75,67 +78,76 @@ def bpe_train(
     not 32k sequential ones.
     """
     spark: SparkSession = df.sparkSession
-    words = (
+    # the word table persists lazily: the first round's pair count fills it
+    word_counts = words = (
         df.select(F.explode(tokens(F.col(text_col))).alias("w"))
         .where(F.length("w") > 0)
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(_word_repr(F.col("w")).alias("r"), "cnt")
-        .localCheckpoint(eager=False)
+        .persist()
     )
+    cut, rounds = None, 0
     merges: list[tuple[int, str, str, str, int]] = []
-    rounds_since_checkpoint = 0
-    while len(merges) < num_merges:
-        syms = F.split(F.expr("substring(r, 2, length(r) - 2)"), "  ")
-        pairs = (
-            # single-symbol words have no pairs (and Spark's sequence(1, 0)
-            # would count DOWN, indexing past the array) — filter them out
-            words.where(F.size(syms) > 1)
-            .select(
-                F.explode(
-                    F.transform(
-                        F.sequence(F.lit(1), F.size(syms) - 1),
-                        lambda i: F.struct(
-                            F.element_at(syms, i).alias("l"),
-                            F.element_at(syms, i + 1).alias("rr"),
-                        ),
-                    )
-                ).alias("p"),
-                "cnt",
+    try:
+        while len(merges) < num_merges:
+            syms = F.split(F.expr("substring(r, 2, length(r) - 2)"), "  ")
+            pairs = (
+                # single-symbol words have no pairs (and Spark's sequence(1, 0)
+                # would count DOWN, indexing past the array) — filter them out
+                words.where(F.size(syms) > 1)
+                .select(
+                    F.explode(
+                        F.transform(
+                            F.sequence(F.lit(1), F.size(syms) - 1),
+                            lambda i: F.struct(
+                                F.element_at(syms, i).alias("l"),
+                                F.element_at(syms, i + 1).alias("rr"),
+                            ),
+                        )
+                    ).alias("p"),
+                    "cnt",
+                )
+                .groupBy("p.l", "p.rr")
+                .agg(F.sum("cnt").alias("pc"))
             )
-            .groupBy("p.l", "p.rr")
-            .agg(F.sum("cnt").alias("pc"))
-        )
-        want = min(merges_per_round, num_merges - len(merges))
-        top = (
-            pairs.orderBy(F.col("pc").desc(), "l", "rr")
-            .limit(max(want * 4, 1))
-            .collect()
-        )
-        if not top:
-            break
-        # greedy batch selection: keep candidates (in rank order) whose
-        # {left, right, merged} symbols are disjoint from every symbol a
-        # kept candidate touches or mints — those merges commute and none
-        # invalidates another's round-start count
-        batch: list[tuple[str, str, int]] = []
-        used: set[str] = set()
-        for row in top:
-            l, r, pc = row["l"], row["rr"], row["pc"]
-            if not used & {l, r, l + r}:
-                batch.append((l, r, pc))
-                used |= {l, r, l + r}
-                if len(batch) >= want:
-                    break
-        col: Column = F.col("r")
-        for l, r, pc in batch:
-            merges.append((len(merges) + 1, l, r, l + r, pc))
-            col = F.replace(col, F.lit(f" {l}  {r} "), F.lit(f" {l}{r} "))
-        words = words.select(col.alias("r"), "cnt")
-        rounds_since_checkpoint += 1
-        if rounds_since_checkpoint == 3 and len(merges) < num_merges:
-            words = words.localCheckpoint(eager=True)
-            rounds_since_checkpoint = 0
+            want = min(merges_per_round, num_merges - len(merges))
+            top = (
+                pairs.orderBy(F.col("pc").desc(), "l", "rr")
+                .limit(max(want * 4, 1))
+                .collect()
+            )
+            if not top:
+                break
+            # greedy batch selection: keep candidates (in rank order) whose
+            # {left, right, merged} symbols are disjoint from every symbol a
+            # kept candidate touches or mints — those merges commute and none
+            # invalidates another's round-start count
+            batch: list[tuple[str, str, int]] = []
+            used: set[str] = set()
+            for row in top:
+                l, r, pc = row["l"], row["rr"], row["pc"]
+                if not used & {l, r, l + r}:
+                    batch.append((l, r, pc))
+                    used |= {l, r, l + r}
+                    if len(batch) >= want:
+                        break
+            col: Column = F.col("r")
+            for l, r, pc in batch:
+                merges.append((len(merges) + 1, l, r, l + r, pc))
+                col = F.replace(col, F.lit(f" {l}  {r} "), F.lit(f" {l}{r} "))
+            words = words.select(col.alias("r"), "cnt")
+            # cut every 3rd round while merges remain; each cut supersedes
+            # the last, and the merge table below is built on the driver,
+            # so no cut (nor the word cache) outlives the call
+            rounds += 1
+            if rounds % 3 == 0 and len(merges) < num_merges:
+                words, _ = checkpoint(words)
+                release(cut)
+                cut = words
+    finally:
+        word_counts.unpersist()
+        release(cut)
     return spark.createDataFrame(
         merges,
         "step int, left_sym string, right_sym string, merged string, pair_count bigint",

@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from feature_store_fraud_detection_spark.functions.numeric import round4_stable
+from feature_store_fraud_detection_spark.lineage import iterate
 from feature_store_fraud_detection_spark.operators.text_analysis import (
     doc_fingerprint,
     word_shingles,
@@ -409,24 +410,28 @@ def dedup_clusters(
     itself and its neighbors; stop at fixed point. Iterations are bounded by
     the graph diameter — near-dup clusters are shallow (usually 2-3 hops),
     so this converges in a handful of rounds even at 100 TB. Each round is
-    one join + one aggregate; ``localCheckpoint`` truncates the growing
-    lineage so round N doesn't replay rounds 1..N-1.
+    one join + one aggregate, cut by ``lineage.iterate`` so round N doesn't
+    replay rounds 1..N-1; the result reads the last cut, the only state it
+    leaves.
 
     This is the canonical "keep one doc per duplicate cluster" reducer fed
     by minhash_lsh_pairs / ngram_jaccard_pairs output.
     """
-    # r12 optimization (guide §5 caching): every iteration joins edges —
-    # without the persist each round's actions (the eager checkpoint and
-    # the convergence count) re-ran the ENTIRE pairs pipeline (for the
-    # LSH/ngram/dbscan callers: shingles, banding, the grid join).
-    # Unpersisted after the loop — labels is eagerly checkpointed each
-    # round, so nothing downstream re-reads edges.
-    # r13: BOTH edge directions from ONE pass over pairs (the registry's
-    # _trade_edges 2-struct explode idiom) — the old self-UNION evaluated
-    # the entire pairs pipeline twice during cache materialization (the
-    # minhash base is persisted by the caller, but banding, candidate
-    # expansion and the exact-Jaccard verify join all re-ran per branch;
-    # measured: edges materialization 2.4 s of dedup_clusters' 3.2 s).
+    labels = _min_labels(pairs, all_ids, id_col, max_iterations)
+    return labels.select(F.col("node").alias(id_col), F.col("label").alias("canonical_id"))
+
+
+def _min_labels(
+    pairs: DataFrame, all_ids: DataFrame, id_col: str, max_iterations: int = 20
+) -> DataFrame:
+    """:func:`dedup_clusters`' loop -> its last (node, label, __chg)
+    checkpoint, for callers that release it themselves."""
+    # BOTH edge directions from ONE pass over pairs (the registry's
+    # _trade_edges 2-struct explode idiom; a self-UNION evaluated the whole
+    # pairs pipeline twice), persisted because every round joins them —
+    # for the LSH/ngram/dbscan callers an unpersisted pairs plan re-runs
+    # shingles, banding or the grid join per round. Released once the
+    # loop returns: its checkpoint no longer reads the edges.
     edges = (
         pairs.select(
             F.explode(
@@ -444,21 +449,19 @@ def dedup_clusters(
         .distinct()
         .persist()
     )
-    labels = all_ids.select(
-        F.col(id_col).alias("node"), F.col(id_col).alias("label")
-    )
-    for _ in range(max_iterations):
+
+    def step(state: DataFrame) -> DataFrame:
+        labels = state.select("node", "label")
         neighbor_min = (
             edges.join(labels, edges.dst == labels.node)
             .groupBy("src")
             .agg(F.min("label").alias("nbr_label"))
         )
-        # r13 (VERDICT item 7): the change flag rides the checkpointed
-        # frame — a node's label changes iff a strictly smaller neighbor
-        # label arrived — so the convergence probe is a limit-1 scan of
-        # checkpoint blocks instead of a full |V|-vs-|V| self-join per
-        # round (was: join new_labels to labels and filter differing).
-        new_labels = (
+        # the change flag rides the checkpoint — a node's label changes iff
+        # a strictly smaller neighbor label arrived — so the convergence
+        # probe is a limit-1 scan of checkpoint blocks, not a |V|-vs-|V|
+        # self-join per round
+        return (
             labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
             .select(
                 "node",
@@ -470,14 +473,18 @@ def dedup_clusters(
                     & (F.col("nbr_label") < F.col("label"))
                 ).alias("__chg"),
             )
-            .localCheckpoint(eager=True)
         )
-        changed = new_labels.filter("__chg").limit(1).count()
-        labels = new_labels.select("node", "label")
-        if changed == 0:
-            break
-    edges.unpersist()
-    return labels.select(F.col("node").alias(id_col), F.col("label").alias("canonical_id"))
+
+    def converged(ckpt: DataFrame, _) -> bool:
+        return ckpt.filter("__chg").limit(1).count() == 0
+
+    start = all_ids.select(
+        F.col(id_col).alias("node"), F.col(id_col).alias("label")
+    )
+    try:
+        return iterate(step, start, max_iterations, until=converged)
+    finally:
+        edges.unpersist()
 
 
 def simhash_fingerprints(

@@ -19,9 +19,13 @@ scaled mass per node per iteration (documented, same on both engines).
 Scale design: the edge table is hash-partitioned on ``src`` once and
 reused across iterations (the per-iteration join re-keys only the rank
 table, which is |V|, not |E|); each iteration is one shuffle-join plus one
-map-side-combined aggregate, and ``localCheckpoint`` truncates the plan so
-iteration N does not replay 1..N-1. Convergence work is O(iterations *
+map-side-combined aggregate, and a lineage cut every 5th iteration keeps
+iteration N from replaying 1..N-1. Convergence work is O(iterations *
 (|E| join + |V| agg)) — the textbook MapReduce PageRank shape.
+
+Every driver loop here (pagerank, k-core peeling, the min-plus join rounds)
+runs on ``lineage.iterate``, which owns its cuts and releases each one once
+the next has landed: an operator leaves only the checkpoint it returns.
 
 BFS levels and SSSP share one min-plus relaxation. Up to
 ``ONE_PASS_EDGE_LIMIT`` edges (one count of the persisted edges) all rounds
@@ -33,9 +37,13 @@ round is one checkpointed join + min-aggregate, in pagerank's two regimes.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from feature_store_fraud_detection_spark.lineage import checkpoint, iterate, release
 
 #: rank mass is scaled by this (BIGINT) factor; 10**12 leaves headroom for
 #: the 85x damping multiply inside int64 even if one node held ALL mass.
@@ -143,133 +151,126 @@ def pagerank(
     # below then materializes the cache as a side effect, and every later
     # pass (edge count, degree, the per-iteration joins) reads the cache —
     # the upstream scan/join/distinct runs exactly once.
-    e = e.persist()
-    # on a symmetric edge list every node appears as a source, so the
-    # dst-side union (and its extra |E|-row shuffle input) is redundant —
-    # callers with undirected graphs declare it. The degree table doubles
-    # as the node table there (distinct src == deg's keys), so the separate
-    # nodes distinct+persist disappears entirely in the symmetric case.
-    deg_expr = (
-        F.count(F.lit(1)) if weight_col is None else F.sum("w")
-    ).alias("deg")
-    # one aggregate carries degree + per-src edge count (+ per-src max
-    # weight when weighted), so EVERY driver scalar below — |V|, |E|, the
-    # overflow bounds — folds into a single job over this cached table
-    # instead of separate count()/count()/crossJoin-agg jobs (r12; the
-    # fn-call jobs are part of every caller's critical path)
-    deg_aggs = [deg_expr, F.count(F.lit(1)).alias("__ec")]
-    if weight_col is not None:
-        deg_aggs.append(F.max("w").alias("__wmax"))
-    deg_full = e.groupBy("src").agg(*deg_aggs).persist()
-    deg_src = deg_full.select("src", "deg")
-    if symmetric:
-        nodes = deg_src.select(F.col("src").alias("node"))
-        stat_aggs = [
-            F.count(F.lit(1)).alias("nv"),
-            F.sum("__ec").alias("ne"),
-        ]
+    caches = [e.persist()]
+    try:
+        # on a symmetric edge list every node appears as a source, so the
+        # dst-side union (and its extra |E|-row shuffle input) is redundant —
+        # callers with undirected graphs declare it. The degree table doubles
+        # as the node table there (distinct src == deg's keys), so the
+        # separate nodes distinct+persist disappears in the symmetric case.
+        deg_expr = (
+            F.count(F.lit(1)) if weight_col is None else F.sum("w")
+        ).alias("deg")
+        # one aggregate carries degree + per-src edge count (+ per-src max
+        # weight when weighted), so EVERY driver scalar below — |V|, |E|,
+        # the overflow bounds — folds into a single job over this cached
+        # table instead of separate count()/count()/crossJoin-agg jobs (r12;
+        # the fn-call jobs are part of every caller's critical path)
+        deg_aggs = [deg_expr, F.count(F.lit(1)).alias("__ec")]
         if weight_col is not None:
-            stat_aggs += [
-                F.max("deg").alias("smax"),
-                F.max("__wmax").alias("wmax"),
+            deg_aggs.append(F.max("w").alias("__wmax"))
+        deg_full = e.groupBy("src").agg(*deg_aggs)
+        caches.append(deg_full.persist())
+        deg_src = deg_full.select("src", "deg")
+        if symmetric:
+            nodes = deg_src.select(F.col("src").alias("node"))
+            stat_aggs = [
+                F.count(F.lit(1)).alias("nv"),
+                F.sum("__ec").alias("ne"),
             ]
-        stats = deg_full.agg(*stat_aggs).first()  # materializes e + deg
-        n_nodes = stats["nv"]
-        n_edges = int(stats["ne"] or 0)
-    else:
-        nodes = (
-            e.select(F.col("src").alias("node"))
-            .unionByName(e.select(F.col("dst").alias("node")))
-            .distinct()
-            .persist()
-        )
-        n_nodes = nodes.count()
-        n_edges = e.count()  # cached scan — shares the materialization
-        if weight_col is not None:
-            stats = deg_full.agg(
-                F.max("deg").alias("smax"), F.max("__wmax").alias("wmax")
-            ).first()
-    if weight_col is not None:
-        # the exact-integer contribution identity needs
-        # strength * max_weight < 2^63 (docstring); CHECK it instead of
-        # documenting it — the maxes ride the single stats job above
-        bounds = stats
-        if (
-            bounds["smax"] is not None
-            and bounds["wmax"] is not None
-            and int(bounds["smax"]) * int(bounds["wmax"]) >= 2**63
-        ):
-            raise ValueError(
-                "pagerank: strength*max_weight = "
-                f"{int(bounds['smax'])}*{int(bounds['wmax'])} >= 2^63 — "
-                "the exact integer contribution path would overflow; "
-                "rescale the weights"
+            if weight_col is not None:
+                stat_aggs += [
+                    F.max("deg").alias("smax"),
+                    F.max("__wmax").alias("wmax"),
+                ]
+            stats = deg_full.agg(*stat_aggs).first()  # materializes e + deg
+            n_nodes = stats["nv"]
+            n_edges = int(stats["ne"] or 0)
+        else:
+            nodes = (
+                e.select(F.col("src").alias("node"))
+                .unionByName(e.select(F.col("dst").alias("node")))
+                .distinct()
             )
-    # Two execution regimes, same arithmetic (the gate tests assert both):
-    # - SMALL graph (|V| fits a broadcast): skip the src pre-keying — the
-    #   per-iteration join broadcasts the |V|-row rank table, so the edge
-    #   side never exchanges at all; coalesce the cached edges so a handful
-    #   of rounds isn't 32-tiny-task stage overhead per round.
-    # - LARGE graph: hash-partition edges on src ONCE; every iteration's
-    #   SMJ reuses that exchange and only the rank table moves.
-    if n_nodes == 0:
-        # empty edge list (round-10 degenerate-probe finding, surfaced
-        # via textrank on a sub-min_count corpus): ranks of nothing is
-        # an EMPTY frame with the right schema — not a Python
-        # ZeroDivisionError from the integer seed split below
-        empty = nodes.select(
-            "node", F.lit(0).cast("long").alias("rank_scaled")
+            caches.append(nodes.persist())
+            n_nodes = nodes.count()
+            n_edges = e.count()  # cached scan — shares the materialization
+            if weight_col is not None:
+                stats = deg_full.agg(
+                    F.max("deg").alias("smax"), F.max("__wmax").alias("wmax")
+                ).first()
+        if weight_col is not None:
+            # the exact-integer contribution identity needs
+            # strength * max_weight < 2^63 (docstring); CHECK it instead of
+            # documenting it — the maxes ride the single stats job above
+            if (
+                stats["smax"] is not None
+                and stats["wmax"] is not None
+                and int(stats["smax"]) * int(stats["wmax"]) >= 2**63
+            ):
+                raise ValueError(
+                    "pagerank: strength*max_weight = "
+                    f"{int(stats['smax'])}*{int(stats['wmax'])} >= 2^63 — "
+                    "the exact integer contribution path would overflow; "
+                    "rescale the weights"
+                )
+        if n_nodes == 0:
+            # empty edge list (round-10 degenerate-probe finding, surfaced
+            # via textrank on a sub-min_count corpus): ranks of nothing is
+            # an EMPTY frame with the right schema — not a Python
+            # ZeroDivisionError from the integer seed split below
+            return nodes.select(
+                "node", F.lit(0).cast("long").alias("rank_scaled")
+            )
+        # Two execution regimes, same arithmetic (the gate tests assert both):
+        # - SMALL graph (|V| fits a broadcast): skip the src pre-keying — the
+        #   per-iteration join broadcasts the |V|-row rank table, so the edge
+        #   side never exchanges at all; coalesce the cached edges so a
+        #   handful of rounds isn't 32-tiny-task stage overhead per round.
+        # - LARGE graph: hash-partition edges on src ONCE; every iteration's
+        #   SMJ reuses that exchange and only the rank table moves.
+        small_graph = n_nodes <= SMALL_GRAPH_NODE_LIMIT
+        if small_graph:
+            work, deg = e, deg_src
+        else:
+            work = e.repartition("src")
+            deg = work.groupBy("src").agg(deg_expr)
+        ed = work.join(
+            F.broadcast(deg) if small_graph else deg, "src"
         )
-        deg_full.unpersist()
-        if not symmetric:
-            nodes.unpersist()
-        e.unpersist()
-        return empty
-    small_graph = n_nodes <= SMALL_GRAPH_NODE_LIMIT
-    if small_graph:
-        work, deg = e, deg_src
-    else:
-        work = e.repartition("src")
-        deg = work.groupBy("src").agg(deg_expr)
-    ed_cached = work.join(
-        F.broadcast(deg) if small_graph else deg, "src"
-    ).persist()
-    ed = ed_cached
-    if small_graph:
-        # |ed| == |e| (every edge keeps exactly one degree row), so the
-        # already-known edge count sizes the coalesce — no extra count job
-        ed = ed_cached.coalesce(_edge_partitions(edges.sparkSession, n_edges))
-    base = ((100 - damping_pct) * PAGERANK_SCALE) // (100 * n_nodes)
-    init = PAGERANK_SCALE // n_nodes
-    ranks = nodes.select("node", F.lit(init).cast("long").alias("rank_scaled"))
-    for i in range(iterations):
-        ranks = pagerank_iteration(
-            ed,
-            nodes,
-            ranks,
-            base,
-            damping_pct,
-            broadcast_ranks=small_graph,
-            weighted=weight_col is not None,
-            # a symmetric graph has no contribution-less nodes: every node
-            # has in-edges, so contribs already covers all of them and the
-            # per-iteration left join against the node table is skipped
-            all_nodes_receive=symmetric,
-        )
+        caches.append(ed.persist())
+        if small_graph:
+            # |ed| == |e| (every edge keeps exactly one degree row), so the
+            # already-known edge count sizes the coalesce — no extra count
+            ed = ed.coalesce(_edge_partitions(edges.sparkSession, n_edges))
+        base = ((100 - damping_pct) * PAGERANK_SCALE) // (100 * n_nodes)
+        init = PAGERANK_SCALE // n_nodes
+
+        def step(ranks: DataFrame) -> DataFrame:
+            return pagerank_iteration(
+                ed,
+                nodes,
+                ranks,
+                base,
+                damping_pct,
+                broadcast_ranks=small_graph,
+                weighted=weight_col is not None,
+                # a symmetric graph has no contribution-less nodes: every
+                # node has in-edges, so contribs already covers all of them
+                # and the per-iteration left join against nodes is skipped
+                all_nodes_receive=symmetric,
+            )
+
         # Plan depth grows linearly per iteration, so a handful of rounds
         # runs best as ONE chained-shuffle job (AQE coalesces each round);
-        # only deep loops need the lineage cut, and each eager checkpoint
-        # costs a full job submission — so cut every 5th round only.
-        if (i + 1) % 5 == 0 and (i + 1) < iterations:
-            ranks = ranks.localCheckpoint(eager=True)
-    # materialize ONCE (while ed/nodes are still cached), then release them
-    ranks = ranks.localCheckpoint(eager=True)
-    ed_cached.unpersist()
-    deg_full.unpersist()
-    if not symmetric:
-        nodes.unpersist()
-    e.unpersist()
-    return ranks
+        # only deep loops need the lineage cut, and each cut costs a full
+        # job submission — so cut every 5th round (and after the last,
+        # while ed/nodes are still cached).
+        start = nodes.select("node", F.lit(init).cast("long").alias("rank_scaled"))
+        return iterate(step, start, iterations, cut_every=5)
+    finally:
+        for c in caches:
+            c.unpersist()
 
 
 def pagerank_iteration(
@@ -463,96 +464,87 @@ def kcore(
     Self-loops are dropped and the edge list deduplicated; each input row
     is one undirected edge (callers supply each pair once, u < v).
 
-    Scale design (the pagerank/bfs conventions): the edge set persists
-    once; each round is one degree count (map-side combined) + two
-    semi-joins keyed on the endpoint — the |V'|-row survivor table moves,
-    the edge table re-shuffles only as it SHRINKS (each round's semi-join
-    output is strictly smaller). Convergence: if no node fell below k the
-    edge set is unchanged — fixpoint (peeling is monotone, rounds <=
-    peel depth, typically <= a dozen on real graphs). Driver state is one
-    count per round; lineage cut every 3rd round. For full coreness
-    decomposition at 100 TB, sweep k ascending and reuse the previous
-    core as the input — each sweep starts from the already-shrunk graph.
+    Scale design (the pagerank/bfs conventions): each round is one degree
+    count (map-side combined) + two semi-joins keyed on the endpoint —
+    the |V'|-row survivor table moves, the edge table re-shuffles only as
+    it SHRINKS. Every round's edge set is one checkpoint job, and its row
+    count is the convergence test (:func:`_peel_to_core`): peeling is
+    monotone, so rounds <= peel depth, typically <= a dozen on real
+    graphs. For full coreness decomposition at 100 TB, sweep k ascending
+    and reuse the previous core as the input — each sweep starts from the
+    already-shrunk graph. Returns one checkpoint, the only state it leaves.
     """
-    e = _prep_undirected(edges, src_col, dst_col)
-    keep, e = _peel_to_core(e, k, max_rounds)
-    out = keep.localCheckpoint(eager=True)
-    keep.unpersist()
-    e.unpersist()
-    return out
+    core, n = _prep_undirected(edges, src_col, dst_col)
+    try:
+        e, (core, _) = core, _peel_to_core(core, n, k, max_rounds)
+        release(e)
+        return checkpoint(_degrees(core))[0]
+    finally:
+        release(core)
 
 
 def _prep_undirected(
     edges: DataFrame, src_col: str, dst_col: str
-) -> DataFrame:
-    """Dedup + self-loop-drop an undirected edge list -> persisted (u, v),
-    coalesced to ~EDGES_PER_TASK rows/task (capped at cores): the peel
-    loops run dozens of tiny jobs over this cache, and a 3k-edge graph
-    spread over 32 post-distinct shuffle partitions pays 32 tasks of
-    scheduling per round for microseconds of work each."""
-    raw = (
+) -> tuple[DataFrame, int]:
+    """Dedup + self-loop-drop an undirected edge list -> a (u, v) checkpoint
+    and its row count, coalesced to ~EDGES_PER_TASK rows/task (capped at
+    cores): the peel loops run dozens of tiny jobs over this edge set, and
+    a 3k-edge graph spread over 32 post-distinct shuffle partitions pays 32
+    tasks of scheduling per round for microseconds of work each."""
+    raw, n = checkpoint(
         edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .persist()
     )
-    n = raw.count()
-    e = raw.coalesce(
+    coalesced = checkpoint(raw.coalesce(
         _edge_partitions(edges.sparkSession, n)
-    ).persist()
-    e.count()  # materialize the coalesced cache before dropping raw's
-    raw.unpersist()
-    return e
+    ))
+    release(raw)
+    return coalesced
+
+
+def _degrees(e: DataFrame) -> DataFrame:
+    """(node, degree) over a (u, v) edge set."""
+    return (
+        e.select(F.col("u").alias("node"))
+        .unionByName(e.select(F.col("v").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("degree"))
+    )
 
 
 def _peel_to_core(
-    e: DataFrame, k: int, max_rounds: int
-) -> tuple[DataFrame, DataFrame]:
-    """Peel a persisted (u, v) edge set to its k-core.
+    e: DataFrame, n_edges: int, k: int, max_rounds: int
+) -> tuple[DataFrame, int]:
+    """Peel a (u, v) edge set of ``n_edges`` rows to its k-core -> the
+    core's edge checkpoint and its row count; ``e`` stays the caller's.
 
-    Returns ``(keep, e_final)`` — the surviving (node, degree) table and
-    the k-core's edge set, BOTH persisted (caller unpersists). The input
-    ``e`` is unpersisted whenever a round shrinks it. Shared by
-    :func:`kcore` (one k) and :func:`coreness` (ascending-k sweep reusing
-    each round's shrunk graph — the sweep never restarts from the full
-    edge list, per the 100 TB note in kcore's docstring).
+    One round drops every edge with an endpoint of degree < k. The
+    fixpoint is the first round whose checkpoint keeps every edge: an edge
+    goes only when an endpoint's degree is below k, so an unchanged count
+    means nothing was peeled, and no separate count job is needed.
+    ``max_rounds`` counts peel rounds, the confirming one included. Shared
+    by :func:`kcore` (one k) and :func:`coreness` (ascending-k sweep
+    peeling each core from the last).
     """
-    prev_nodes = -1
-    keep = None
-    for r in range(max_rounds):
-        deg = (
-            e.select(F.col("u").alias("node"))
-            .unionByName(e.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("degree"))
-        )
-        new_keep = deg.filter(F.col("degree") >= k).persist()
-        n = new_keep.count()
-        if keep is not None:
-            keep.unpersist()
-        keep = new_keep
-        if n == prev_nodes or n == 0:
-            break
-        prev_nodes = n
-        ids = keep.select("node")
-        small = n <= SMALL_GRAPH_NODE_LIMIT
-        lhs = F.broadcast(ids) if small else ids
-        e2 = (
-            e.join(lhs.withColumnRenamed("node", "u"), "u", "left_semi")
-            .join(
-                F.broadcast(ids).withColumnRenamed("node", "v")
-                if small
-                else ids.withColumnRenamed("node", "v"),
-                "v",
-                "left_semi",
-            )
-        )
-        if (r + 1) % 3 == 0:
-            e2 = e2.localCheckpoint(eager=True)
-        e2 = e2.persist()
-        e.unpersist()
-        e = e2
-    return keep, e
+    # a kept node has >= k edges, so at most 2|E|/k nodes survive a round
+    small = 2 * n_edges <= k * SMALL_GRAPH_NODE_LIMIT
+    last = n_edges
+
+    def peel(e: DataFrame) -> DataFrame:
+        ids = _degrees(e).filter(F.col("degree") >= k).select("node")
+        for end in ("u", "v"):
+            side = ids.withColumnRenamed("node", end)
+            e = e.join(F.broadcast(side) if small else side, end, "left_semi")
+        return e
+
+    def fixpoint(_, n: int) -> bool:
+        nonlocal last
+        done, last = n == last, n
+        return done
+
+    core = iterate(peel, e, max_rounds, until=fixpoint)
+    return core, last
 
 
 def coreness(
@@ -572,64 +564,47 @@ def coreness(
     bounds worst-case sweep count on pathological inputs.
 
     Algorithm: ascending-k peel sweeps REUSING each shrunk graph — the
-    k-core is peeled FROM the (k-1)-core's edge set, never from the full
-    graph (``_peel_to_core`` keeps the persisted survivor edge set
-    between sweeps). Nodes present in the (k-1)-core but absent from the
-    k-core have coreness exactly k-1. Every node appearing in an edge has
-    coreness >= 1 (self-loops dropped), so sweeps start at k=2.
+    k-core is peeled FROM the (k-1)-core's edge checkpoint, never from the
+    full graph, and the superseded core is released. Nodes of the
+    (k-1)-core absent from the k-core have coreness exactly k-1. Every
+    node appearing in an edge has coreness >= 1 (self-loops dropped), so
+    sweeps start at k=2. ``max_rounds`` bounds each sweep's peel rounds
+    (:func:`_peel_to_core`), the last one, which peels nothing and so
+    confirms the fixpoint, included; there is no separate count round. It
+    never binds at the default of 50.
 
     Scale: total work is sum over k of (rounds_k x (|E_k| semi-join +
     |V_k| degree agg)) where E_k/V_k shrink monotonically — the dominant
     cost is the early sweeps on the big graph, exactly the cost kcore(2)
     already pays; each additional k adds work proportional to the
-    ALREADY-SHRUNK core. Per-sweep drop tables are localCheckpointed
-    (bounded driver state: one count per round), and the result union is
-    k_cap-bounded. Matula-Beck sequential peel is inherently serial;
+    ALREADY-SHRUNK core. Each sweep's graded nodes are one checkpoint job;
+    the result is one checkpoint of their k_cap-bounded union, the only
+    state it leaves. Matula-Beck sequential peel is inherently serial;
     this parallel-rounds formulation is the distributed standard.
     """
-    e = _prep_undirected(edges, src_col, dst_col)
-    survivors = (
-        e.select(F.col("u").alias("node"))
-        .unionByName(e.select(F.col("v").alias("node")))
-        .distinct()
-        .persist()
-    )
+
+    def graded(nodes: DataFrame, c: int) -> DataFrame:
+        return checkpoint(nodes.select("node", F.lit(c).cast("int").alias("coreness")))[0]
+
+    core, n = _prep_undirected(edges, src_col, dst_col)
     parts: list[DataFrame] = []
-    k = 2
-    while True:
-        if k_cap is not None and k > k_cap:
-            parts.append(
-                survivors.withColumn(
-                    "coreness", F.lit(k_cap).cast("int")
-                ).localCheckpoint(eager=True)
-            )
-            survivors.unpersist()
-            break
-        keep, e_peeled = _peel_to_core(e, k, max_rounds)
-        # CUT LINEAGE between sweeps: each peel round references the prior
-        # edge set several times (degree union + two semi-joins), so the
-        # uncut plan grows EXPONENTIALLY across sweeps — checkpointing the
-        # sweep's output keeps every sweep's plan O(rounds), not O(2^k).
-        e = e_peeled.localCheckpoint(eager=True)
-        e_peeled.unpersist()
-        kept_ids = keep.select("node").localCheckpoint(eager=True)
-        keep.unpersist()
-        dropped = (
-            survivors.join(kept_ids, "node", "left_anti")
-            .withColumn("coreness", F.lit(k - 1).cast("int"))
-            .localCheckpoint(eager=True)
-        )
-        parts.append(dropped)
-        survivors.unpersist()
-        if kept_ids.isEmpty():
-            break
-        survivors = kept_ids
-        k += 1
-    e.unpersist()
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    try:
+        k = 2
+        while k_cap is None or k <= k_cap:
+            prev, (core, n) = core, _peel_to_core(core, n, k, max_rounds)
+            try:
+                parts.append(graded(_degrees(prev).join(_degrees(core), "node", "left_anti"), k - 1))
+            finally:
+                release(prev)
+            if n == 0:
+                break
+            k += 1
+        else:
+            parts.append(graded(_degrees(core), k_cap))
+        return checkpoint(functools.reduce(DataFrame.unionByName, parts))[0]
+    finally:
+        for ckpt in [core, *parts]:
+            release(ckpt)
 
 
 def adamic_adar(
@@ -663,7 +638,7 @@ def adamic_adar(
         round4_stable,
     )
 
-    e = _prep_undirected(edges, src_col, dst_col)
+    e, _ = _prep_undirected(edges, src_col, dst_col)
     adj = e.select(F.col("u").alias("c"), F.col("v").alias("n")).unionByName(
         e.select(F.col("v").alias("c"), F.col("u").alias("n"))
     )
@@ -697,17 +672,16 @@ def adamic_adar(
             ).alias("score"),
         )
     )
-    # materialize the bounded top-n WHILE e is cached (the plan reads the
-    # edge cache 5 times — adj twice, both wedge sides, the anti-join;
-    # unpersisting before execution would recompute the upstream that many
-    # times), then release the cache — the kcore/coreness convention.
-    out = (
-        scored.orderBy(F.col("score").desc(), "node_a", "node_b")
-        .limit(top_n)
-        .localCheckpoint(eager=True)
-    )
-    e.unpersist()
-    return out
+    # materialize the bounded top-n WHILE e's checkpoint is live (the plan
+    # reads it 5 times — adj twice, both wedge sides, the anti-join), then
+    # release it — the kcore/coreness convention.
+    try:
+        return checkpoint(
+            scored.orderBy(F.col("score").desc(), "node_a", "node_b")
+            .limit(top_n)
+        )[0]
+    finally:
+        release(e)
 
 
 def sssp(
@@ -789,7 +763,7 @@ def _relax_min_plus(
             rows = e.select(*ids, step.cast("long"))
             rows = rows.union(start.select("node", F.lit(None), F.lit(None).cast("long")))
             schema = T.StructType([field]).add(value, value_type).add("improved", "long")
-            ckpt = _checkpoint(
+            ckpt, _ = checkpoint(
                 rows.groupBy().applyInArrow(
                     _one_pass(schema, rounds, assert_converged), schema
                 )
@@ -814,12 +788,8 @@ def _relax_min_plus(
                     .unionByName(d)
                 )
 
-            ckpt = _checkpoint(settle(nodes.select("node", F.lit(0).alias(value))))
-            for _ in range(rounds):
-                # cut every round: relax reads d twice, so an uncut plan doubles
-                nxt = _checkpoint(relax(ckpt))
-                _release(ckpt)
-                ckpt = nxt
+            # cut every round: relax reads d twice, so an uncut plan doubles
+            ckpt = iterate(relax, settle(nodes.select("node", F.lit(0).alias(value))), rounds)
             # EXCEPT compares the NULL node null-safely, as the pass does
             improved = assert_converged and relax(ckpt).subtract(ckpt).count()
         if improved:
@@ -828,30 +798,13 @@ def _relax_min_plus(
                 "rounds — raise max_rounds (graph deeper than assumed)"
             )
     except BaseException:
-        if ckpt is not None:
-            _release(ckpt)
+        release(ckpt)
         raise
     finally:
         e.unpersist()
         if keyed is not None:
             keyed.unpersist()
     return ckpt.select("node", value)
-
-
-def _checkpoint(df: DataFrame) -> DataFrame:
-    """An eager localCheckpoint that frees its blocks if computing it fails."""
-    ckpt = df.localCheckpoint(eager=False)
-    try:
-        ckpt._jdf.queryExecution().logical().rdd().count()
-    except BaseException:
-        _release(ckpt)
-        raise
-    return ckpt
-
-
-def _release(ckpt: DataFrame) -> None:
-    """Free a localCheckpoint's blocks now, not when GC finds it."""
-    ckpt._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def _one_pass(schema: T.StructType, rounds: int, check: bool):

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from feature_store_fraud_detection_spark.functions.geo import haversine_miles
 from feature_store_fraud_detection_spark.functions.numeric import round4_stable
+from feature_store_fraud_detection_spark.lineage import checkpoint, release
 
 
 def proximity_pairs(
@@ -125,11 +126,9 @@ def dbscan_labels(
     the component labeling is ``dedup.dedup_clusters`` (iterative
     min-label propagation, bounded by core-graph diameter). Degree count,
     core filter, and border assignment are each one keyed aggregate/join
-    on point ids.
+    on point ids. Returns one checkpoint, the only state it leaves.
     """
-    from feature_store_fraud_detection_spark.operators.dedup import (
-        dedup_clusters,
-    )
+    from feature_store_fraud_detection_spark.operators.dedup import _min_labels
 
     pairs = proximity_pairs(
         df,
@@ -153,40 +152,42 @@ def dbscan_labels(
         .select("id")
         .persist()
     )
-    core_b = core.select(F.col("id").alias("__c"))
-    core_pairs = (
-        pairs.join(core.withColumnRenamed("id", "id_a"), "id_a")
-        .join(core_b, pairs.id_b == core_b.__c)
-        .select("id_a", "id_b")
-    )
-    core_labels = dedup_clusters(core_pairs, core, "id").select(
-        F.col("id"), F.col("canonical_id").alias("cluster_id")
-    )
-    border = (
-        sym.join(core_labels.withColumnRenamed("id", "nbr"), "nbr")
-        .join(core, "id", "left_anti")
-        .groupBy("id")
-        .agg(F.min("cluster_id").alias("cluster_id"))
-    )
-    labeled = core_labels.withColumn("role", F.lit("core")).unionByName(
-        border.withColumn("role", F.lit("border"))
-    )
-    out = (
-        ids.join(labeled, "id", "left")
-        .select(
-            F.col("id").alias(id_col),
-            F.coalesce(F.col("role"), F.lit("noise")).alias("role"),
-            F.col("cluster_id"),
+    labels = None
+    try:
+        core_b = core.select(F.col("id").alias("__c"))
+        core_pairs = (
+            pairs.join(core.withColumnRenamed("id", "id_a"), "id_a")
+            .join(core_b, pairs.id_b == core_b.__c)
+            .select("id_a", "id_b")
         )
-    )
-    # r12 fix (guide §5): the unpersist used to run HERE — at plan-build
-    # time, BEFORE the caller's action — so the final evaluation of
-    # ``out`` recomputed the grid-join subtree for every reference
-    # (sym x2, deg, border, core join: 53 parquet scans measured at
-    # sf0.1). pairs/core stay cached for the caller's action — the
-    # linkage/ngram not-unpersisted convention (dedup_clusters'
-    # iterations populate them; the final job then reads memory).
-    return out
+        labels = _min_labels(core_pairs, core, "id")
+        core_labels = labels.select(
+            F.col("node").alias("id"), F.col("label").alias("cluster_id")
+        )
+        border = (
+            sym.join(core_labels.withColumnRenamed("id", "nbr"), "nbr")
+            .join(core, "id", "left_anti")
+            .groupBy("id")
+            .agg(F.min("cluster_id").alias("cluster_id"))
+        )
+        labeled = core_labels.withColumn("role", F.lit("core")).unionByName(
+            border.withColumn("role", F.lit("border"))
+        )
+        # materialized while pairs/core (sym x2, deg, border, the core join)
+        # and the component labels are live, then all three are released:
+        # the caller's action reads this checkpoint alone
+        return checkpoint(
+            ids.join(labeled, "id", "left")
+            .select(
+                F.col("id").alias(id_col),
+                F.coalesce(F.col("role"), F.lit("noise")).alias("role"),
+                F.col("cluster_id"),
+            )
+        )[0]
+    finally:
+        pairs.unpersist()
+        core.unpersist()
+        release(labels)
 
 
 def grid_hotspots(

@@ -19,13 +19,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from feature_store_fraud_detection_spark.lineage import checkpointed
 from feature_store_fraud_detection_spark.operators.relational import (
     point_lookup,
     range_scan,
 )
 from feature_store_fraud_detection_spark.sources.readers import (
     ResolvedTable,
-    checkpointed,
     mutates_table,
 )
 

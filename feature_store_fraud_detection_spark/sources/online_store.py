@@ -31,10 +31,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from feature_store_fraud_detection_spark.lineage import checkpointed
 from feature_store_fraud_detection_spark.operators.windows import latest_n_per_key
 from feature_store_fraud_detection_spark.sources.readers import (
     ResolvedTable,
-    checkpointed,
     mutates_table,
 )
 

@@ -21,8 +21,7 @@ from __future__ import annotations
 
 import functools
 import threading
-from contextlib import contextmanager
-from typing import Callable, Iterator
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -89,18 +88,6 @@ class ResolvedTable:
         df = self._serve(self.spark.read.parquet(self.path))
         self._resolved = (generation, df)
         return df
-
-
-@contextmanager
-def checkpointed(df: DataFrame) -> Iterator[DataFrame]:
-    """``df.localCheckpoint(eager=True)`` for the body of the ``with``; its
-    blocks are unpersisted on exit instead of whenever the ContextCleaner
-    collects them. The frame is unreadable after the ``with``."""
-    staged = df.localCheckpoint(eager=True)
-    try:
-        yield staged
-    finally:
-        staged._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def read_transactions_csv(

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from feature_store_fraud_detection_spark.functions.geo import haversine_miles
+from feature_store_fraud_detection_spark.lineage import checkpointed
 from feature_store_fraud_detection_spark.schemas import STREAM_EVENT_SCHEMA
 
 # Reference window geometry (pipeline.py:61,66) — kept, but event-time.
@@ -402,9 +403,9 @@ def _replay_guarded_fold(spark, state_dir: str, batch_id: int, fold_fn) -> None:
 
     ``fold_fn(prev_or_none)`` receives the previous state WITHOUT the meta
     column (or None on the first batch) and returns the new state; the
-    meta column is re-stamped here. The returned frame is localCheckpointed
+    meta column is re-stamped here. The returned frame is checkpointed
     BEFORE the directory dance so no lazy read still points at the paths
-    being renamed.
+    being renamed, and the checkpoint is released once the state commits.
 
     Durability: the state is COMMITTED by directory renames, never by
     overwriting in place (a plain ``mode("overwrite")`` deletes the old
@@ -429,17 +430,16 @@ def _replay_guarded_fold(spark, state_dir: str, batch_id: int, fold_fn) -> None:
             return
         prev = prev.drop(_STATE_META_COL)
     new = fold_fn(prev)
-    staged = (
+    with checkpointed(
         new.withColumn(_STATE_META_COL, F.lit(int(batch_id)))
-        .localCheckpoint(eager=True)
-    )
-    _commit_state(spark, staged, state_dir)
+    ) as staged:
+        _commit_state(spark, staged, state_dir)
 
 
 def _commit_state(spark, staged: DataFrame, state_dir: str) -> None:
     """Replace a parquet state directory via the tmp/.old rename dance
     (crash matrix in :func:`_replay_guarded_fold`). ``staged`` must
-    already be materialized (localCheckpoint) — no lazy read may still
+    already be materialized (``lineage.checkpointed``) — no lazy read may still
     point at the paths being renamed."""
     tmp_dir, old_dir = state_dir + ".tmp", state_dir + ".old"
     staged.write.mode("overwrite").parquet(tmp_dir)
@@ -626,13 +626,13 @@ def run_stream_pattern_alerts(
                 union.withColumn("__rn", F.row_number().over(w))
                 .filter(F.col("__rn") < k)
                 .select(key, type_col, ts_col, tiebreak)
-                # materialize BEFORE replacing the directory it reads
-                .localCheckpoint(eager=True)
             )
+            # materialize BEFORE replacing the directory it reads, with the
             # same crash-safe commit as the folded monitors: an in-place
             # overwrite torn mid-write would drop the cross-batch tail
             # and silently miss patterns spanning the restart
-            _commit_state(union.sparkSession, new_tail, state_dir)
+            with checkpointed(new_tail) as staged:
+                _commit_state(union.sparkSession, staged, state_dir)
 
     writer = (
         raw_events.writeStream.outputMode("append")

@@ -58,6 +58,7 @@ CORE_TESTS: frozenset[str] = frozenset(
         "test_store_point_reads_run_one_job_and_prune_one_bucket",
         "test_bulk_scoring_keeps_top_k_below_scorer",
         "test_bfs_levels_small_graph_runs_one_pass",
+        "test_loop_operators_leave_only_their_result",
         # quality / inference fixtures
         "test_chi2_independence_hand_fixture",
         "test_kaplan_meier_hand_fixture",

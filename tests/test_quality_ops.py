@@ -1037,6 +1037,10 @@ def test_markov_stationary_two_state_chain(spark):
     df2 = spark.createDataFrame(rows2, "k string, e string, ts timestamp, id long")
     out2 = {r.e: r.stationary_p for r in markov_stationary(df2, "k", "e", "ts", "id").collect()}
     assert out2["a"] > 0.75 and abs(out2["a"] + out2["b"] - 1.0) < 1e-3
+    # no events: an empty distribution, not a divide-by-zero in the seed
+    empty = markov_stationary(df.limit(0), "k", "e", "ts", "id")
+    assert empty.collect() == []
+    assert empty.schema.simpleString() == "struct<e:string,stationary_p:double>"
 
 
 def test_position_based_attribution_hand_fixture(spark):
