@@ -415,13 +415,17 @@ def ann_quality_scenario(spark, sf_dir) -> dict[str, float]:
     """Mean recall@5 vs exact L2 for the documented ANN default
     (ivfpq_topk init='kmeans', m=32, n_probe=4) and, for contrast, the
     md5-sampled oracle shape (m=16, n_probe=2) — the number USAGE.md's
-    quality table quotes."""
+    quality table quotes. Both searches are scored against one exact
+    ``l2_topk`` ground truth with ``recall_at_k``."""
     from feature_store_fraud_detection_spark.operators.similarity import (
-        ivfpq_recall_report,
+        ivfpq_topk,
+        l2_topk,
+        recall_at_k,
     )
     from feature_store_fraud_detection_spark.schemas import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
+    exact = l2_topk(emb, "vec_id", "embedding", query_max_id=10)
     out: dict[str, float] = {}
     for label, kwargs in (
         (
@@ -434,10 +438,11 @@ def ann_quality_scenario(spark, sf_dir) -> dict[str, float]:
         ),
     ):
         t0 = time.time()
+        approx = ivfpq_topk(
+            emb, "vec_id", "embedding", query_max_id=10, **kwargs
+        )
         avg = (
-            ivfpq_recall_report(
-                emb, "vec_id", "embedding", query_max_id=10, **kwargs
-            )
+            recall_at_k(exact, approx)
             .agg(F.avg("recall").alias("r"))
             .first()["r"]
         )

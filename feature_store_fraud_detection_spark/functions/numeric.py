@@ -19,6 +19,8 @@ before comparison.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -97,38 +99,37 @@ def lit_bigint_array(vals: list[int]) -> Column:
     return F.expr("array(" + ",".join(f"{int(v)}L" for v in vals) + ")")
 
 
-def lit_double_array2_sql(rows: list[list[float]]) -> str | None:
-    """The SQL text of :func:`lit_double_array2`, or None for the
-    degenerate shapes that fall back to ``F.lit`` (empty / non-finite
-    entries). Exposed so callers composing LARGER single-expression
-    strings (r13: the ANN argmin/probe expressions) can inline the
-    array without a py4j round-trip per sub-expression."""
-    import math
+def _double_sql(x: float) -> str:
+    """One double as SQL literal text. ``repr(float)`` is the shortest
+    round-trip decimal form and Java's ``Double.parseDouble`` is correctly
+    rounded, so the parsed literal is bit-identical to the Python float
+    (``-0.0D`` parses as negative zero); non-finite values have no literal
+    form and render as the string casts Spark accepts under ANSI."""
+    x = float(x)
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        return "CAST('Infinity' AS DOUBLE)" if x > 0 else "CAST('-Infinity' AS DOUBLE)"
+    return repr(x) + "D"
 
-    if not rows or any(
-        not r or any(not math.isfinite(float(x)) for x in r) for r in rows
-    ):
-        return None
+
+def lit_double_array2_sql(rows: list[list[float]]) -> str:
+    """``array<array<double>>`` literal as ONE SQL expression string (the
+    nested twin of :func:`lit_bigint_array` for hyperplane / centroid /
+    component constant tables), so callers composing larger single
+    expressions inline the table without a py4j round-trip per element.
+    Every element is BIT-IDENTICAL to the ``F.lit`` path, NaN, infinities,
+    negative zero and empty rows included (pinned in
+    tests/test_r12_optimizations.py)."""
+    if not rows:
+        return "CAST(array() AS array<array<double>>)"
     return (
         "array("
         + ",".join(
-            "array(" + ",".join(repr(float(x)) + "D" for x in r) + ")"
+            "array(" + ",".join(_double_sql(x) for x in r) + ")"
+            if r
+            else "CAST(array() AS array<double>)"
             for r in rows
         )
         + ")"
     )
-
-
-def lit_double_array2(rows: list[list[float]]) -> Column:
-    """``array<array<double>>`` literal as ONE SQL expression string (the
-    nested twin of :func:`lit_bigint_array` for hyperplane / centroid
-    constant tables). ``repr(float)`` is the shortest round-trip decimal
-    form and Java's ``Double.parseDouble`` is correctly rounded, so every
-    element is BIT-IDENTICAL to the ``F.lit`` path (pinned in
-    tests/test_r12_optimizations.py). Falls back to ``F.lit`` for shapes
-    with empty/non-finite entries (degenerate callers keep old behavior).
-    """
-    sql = lit_double_array2_sql(rows)
-    if sql is None:
-        return F.lit([[float(x) for x in r] for r in rows])
-    return F.expr(sql)

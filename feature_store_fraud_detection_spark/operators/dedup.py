@@ -586,7 +586,7 @@ def embedding_neardup_pairs(
     doubles — deterministic and engine-portable.
     """
     from feature_store_fraud_detection_spark.operators.similarity import (
-        cosine_expr,
+        _dot_sql,
         with_norm,
     )
 
@@ -600,11 +600,9 @@ def embedding_neardup_pairs(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
             round4_stable(
-                cosine_expr(
-                    F.col("a.__vec_d"),
-                    F.col("b.__vec_d"),
-                    F.col("a.__norm"),
-                    F.col("b.__norm"),
+                F.expr(
+                    f"{_dot_sql('a.__vec_d', 'b.__vec_d')} "
+                    "/ (a.__norm * b.__norm)"
                 )
             ).alias("cosine"),
         )
@@ -939,7 +937,7 @@ def lsh_recall_report(
     rows_per_band: int = 1,
 ) -> DataFrame:
     """Dedup-index quality dashboard — the dedup twin of
-    ``similarity.ann_recall_report``: banded-MinHash-LSH's verified pairs
+    ``similarity.recall_at_k``: banded-MinHash-LSH's verified pairs
     against the UNCAPPED exact-Jaccard ground truth at the same
     threshold. Precision of the verified output is 1.0 by construction
     (every candidate passes exact verification); what the bands risk is
@@ -947,7 +945,10 @@ def lsh_recall_report(
     silently lost, and this report is what measures that.
 
     One row: (n_truth, n_verified, n_missed, recall). Both inputs are
-    deterministic, so the report itself hash-checks cross-engine.
+    deterministic, so the report itself hash-checks cross-engine. It is
+    not a ``recall_at_k`` call because its grain differs: one global row
+    over pairs, with a NULL recall when there are no true pairs, where
+    ``recall_at_k`` reports per query.
 
     Scale: the truth side is the exact inverted-index join — run this at
     audit sf / on a sampled corpus slice, not the full 100 TB (the

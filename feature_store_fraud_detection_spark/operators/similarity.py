@@ -1,26 +1,39 @@
 """Similarity search over embedding columns (array<float>).
 
-- ``cosine_topk``: brute-force exact top-k — the correctness baseline. Query
-  side is broadcast; the data side is scanned once, ranked per query with a
-  window top-k (WindowGroupLimit prunes per partition before the shuffle).
-- ``lsh_buckets`` / ``lsh_topk``: random-hyperplane LSH — the scale path.
-  Hyperplane components are derived from md5 (deterministic, seedable,
+- ``cosine_topk`` / ``l2_topk``: brute-force exact top-k — the correctness
+  baselines. Query side is broadcast; the data side is scanned once, ranked
+  per query with a window top-k (WindowGroupLimit prunes per partition
+  before the shuffle).
+- ``lsh_buckets`` / ``lsh_topk`` / ``multiprobe_lsh_topk``: random-hyperplane
+  LSH. Hyperplane components are derived from md5 (deterministic, seedable,
   engine-portable), so bucket assignment is reproducible anywhere.
+- ``ivf_topk`` / ``sq8_topk`` / ``pq_topk`` / ``ivfpq_topk``: inverted
+  lists and compressed-domain scans.
+- ``recall_at_k``: one exact ground truth scored against any approximate
+  candidate set — the index-quality report for every family above.
 
-Numeric portability: dot products are sequential left-folds over doubles
-(``aggregate(zip_with(...))``) — the exact same IEEE operation order as the
-DuckDB oracle's ``list_reduce``, so cosines match bit-for-bit.
+Numeric portability: dot products and squared distances are sequential
+left-folds over doubles (``aggregate(zip_with(...))``) — the exact same IEEE
+operation order as the DuckDB oracle's ``list_reduce``, so cosines match
+bit-for-bit.
 
-All of it is built-in higher-order column functions — JVM-side, no Python.
+Rendering: all vector math is parsed SQL text, built by three string
+builders — :func:`_double_vec_sql` (the double cast of a caller's vector
+column), :func:`_dot_sql` and :func:`_l2sq_sql` (the two folds) — plus the
+constant-table literal ``lit_double_array2_sql``. One ``F.expr`` costs one
+py4j round-trip where a lambda Column tree costs one per node. Every caller
+column is quoted with :func:`_sql_ident`, so any column name parses as that
+one column. JVM-side higher-order functions throughout — no Python.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from feature_store_fraud_detection_spark.functions.numeric import (
-    lit_double_array2,
+    ROUND4_SQL,
+    lit_double_array2_sql,
     round4_stable,
 )
 
@@ -32,59 +45,65 @@ def _sql_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def _to_double(vec: Column) -> Column:
-    return F.transform(vec, lambda x: x.cast("double"))
-
-
-def dot_expr(a: Column, b: Column) -> Column:
-    """Sequential left-fold dot product: ((0+x1)+x2)+... — deterministic."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
+def _double_vec_sql(vec_col: str) -> str:
+    """SQL text of the caller's vector column cast element-wise to double."""
+    return f"transform({_sql_ident(vec_col)}, x -> cast(x as double))"
 
 
 def _dot_sql(a_sql: str, b_sql: str) -> str:
-    """SQL text of :func:`dot_expr` for callers whose operands are plain
-    column names / sub-expressions — ONE parsed expression (r13; the
-    lambda Column form costs ~25 py4j round-trips per dot product).
-    Node-for-node the same plan: the SQL lambda parses to the identical
-    higher-order aggregate."""
+    """Sequential left-fold dot product ((0+x1y1)+x2y2)+... of two array
+    operands given as SQL text — deterministic."""
     return (
         f"aggregate(zip_with({a_sql}, {b_sql}, (x, y) -> x * y), "
         f"0.0D, (acc, x) -> acc + x)"
     )
 
 
-def with_norm(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """Attach a double-typed copy of the vector and its L2 norm.
+def _l2sq_sql(a_sql: str, b_sql: str) -> str:
+    """Sequential left-fold squared L2 distance of two array operands given
+    as SQL text — deterministic."""
+    return (
+        f"aggregate(zip_with({a_sql}, {b_sql}, (a, b) -> (a - b) * (a - b)), "
+        f"0.0D, (acc, x) -> acc + x)"
+    )
+
+
+#: cosine of a broadcast query (``__qvec``, ``__qnorm``) against a corpus
+#: row (``__vec_d``, ``__norm``) — the column names every cosine ranker uses
+_PAIR_COSINE_SQL = f"{_dot_sql('__qvec', '__vec_d')} / (__qnorm * __norm)"
+
+
+def _top_k(scored: DataFrame, k: int, *order: Column) -> DataFrame:
+    """Per-query top-k tail: ``rank`` = row_number over ``query_id`` in
+    ``order`` (which must end in a unique tie-break), kept while <= k — the
+    shape Spark plans as a WindowGroupLimit before the shuffle."""
+    w = Window.partitionBy("query_id").orderBy(*order)
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
+def with_norm(df: DataFrame, id_col: str, vec_col: str, *keep: str) -> DataFrame:
+    """Project ``id_col``, the ``keep`` columns, a double-typed copy of the
+    vector (``__vec_d``) and its L2 norm (``__norm``).
 
     NULL/empty and zero-NORM vectors are dropped here, centrally: a
     zero-norm vector has no defined cosine against anything, and under
     ANSI mode the division is a job-killing DIVIDE_BY_ZERO rather than a
     NULL (round-11 empty-embedding probe). Every cosine-ranking operator
     flows through this helper, so the contract is uniform: rows that
-    cannot be ranked are absent, never silently mis-ranked.
-
-    r13: both expressions are parsed SQL text — the same plan nodes as
-    the old ``_to_double``/``dot_expr`` Column composition (which also
-    inlined the transform into every reference), minus ~60 py4j
-    round-trips per call."""
-    vec_d_sql = f"transform({_sql_ident(vec_col)}, x -> cast(x as double))"
+    cannot be ranked are absent, never silently mis-ranked."""
+    vec_d = _double_vec_sql(vec_col)
     return (
         _valid_vectors(df, vec_col)
         .select(
             F.col(id_col),
-            F.expr(vec_d_sql).alias("__vec_d"),
-            F.expr(f"sqrt({_dot_sql(vec_d_sql, vec_d_sql)})").alias(
-                "__norm"
-            ),
+            *keep,
+            F.expr(vec_d).alias("__vec_d"),
+            F.expr(f"sqrt({_dot_sql(vec_d, vec_d)})").alias("__norm"),
         )
         .filter(F.col("__norm") > 0.0)
     )
-
-
-def cosine_expr(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Column:
-    return dot_expr(a, b) / (norm_a * norm_b)
 
 
 def _valid_vectors(df: DataFrame, vec_col: str) -> DataFrame:
@@ -94,6 +113,14 @@ def _valid_vectors(df: DataFrame, vec_col: str) -> DataFrame:
     ``validate_embeddings``; search just refuses the rows."""
     vec = F.col(_sql_ident(vec_col))
     return df.filter(vec.isNotNull() & (F.size(vec) > 0))
+
+
+def _double_vectors(df: DataFrame, id_col: str, vec_col: str, alias: str) -> DataFrame:
+    """(id, valid vector cast to double as ``alias``) — the input of every
+    search that ranks on raw vectors rather than normalized ones."""
+    return _valid_vectors(df, vec_col).select(
+        F.col(id_col), F.expr(_double_vec_sql(vec_col)).alias(alias)
+    )
 
 
 def cosine_topk(
@@ -110,8 +137,6 @@ def cosine_topk(
     keeps the top-k with id tie-break. No |corpus|^2 blow-up — cost is
     |queries| x |corpus| partitioned across the cluster.
     """
-    from pyspark.sql import Window
-
     v = with_norm(df, id_col, vec_col)
     q = v.filter(F.col(id_col) < query_max_id).select(
         F.col(id_col).alias("query_id"),
@@ -122,26 +147,19 @@ def cosine_topk(
     scored = pairs.select(
         "query_id",
         F.col(id_col).alias("neighbor_id"),
-        round4_stable(
-            cosine_expr(
-                F.col("__qvec"), F.col("__vec_d"), F.col("__qnorm"), F.col("__norm")
-            )
-        ).alias("cosine"),
+        round4_stable(F.expr(_PAIR_COSINE_SQL)).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(
+        scored, top_k, F.col("cosine").desc(), F.col("neighbor_id")
+    ).select("query_id", "neighbor_id", "cosine", "rank")
 
 
 def hyperplane_value(plane: Column, dim: Column) -> Column:
     """Deterministic pseudo-random hyperplane component in [-7.5, 7.5]: the
     first hex nibble of md5('plane,dim') minus 7.5. Portable to any engine
-    with md5 — no driver-side RNG arrays to broadcast."""
+    with md5 — no driver-side RNG arrays to broadcast. The engine-side
+    reference that the oracle SQL spells and :func:`hyperplanes_literal`
+    folds to constants."""
     h = F.md5(
         F.encode(
             F.concat_ws(",", plane.cast("string"), dim.cast("string")), "UTF-8"
@@ -154,14 +172,11 @@ def hyperplane_value(plane: Column, dim: Column) -> Column:
 
 def hyperplanes_literal(num_planes: int, dim: int) -> list[list[float]]:
     """The ``num_planes x dim`` hyperplane constants of
-    :func:`hyperplane_value`, computed ONCE on the driver (same md5
-    nibble arithmetic, bit-identical doubles). ``bucket_expr`` evaluated
-    the md5 chain PER ROW — num_planes*dim md5 calls per vector, the
-    dominant per-row cost of every LSH consumer at any scale — for
-    values that depend only on (plane, dim). r12 optimization, guide
-    §1.2 step 2 (per-task work): the constants ship as one plan literal
-    instead. The SQL oracle twin keeps spelling the md5 chain — md5 is
-    md5 on both engines, so the folded constants are identical."""
+    :func:`hyperplane_value`, computed ONCE on the driver (same md5 nibble
+    arithmetic, bit-identical doubles), so they ship as one plan literal
+    instead of num_planes*dim md5 calls per row. The SQL oracle twin keeps
+    spelling the md5 chain — md5 is md5 on both engines, so the folded
+    constants are identical."""
     import hashlib
 
     return [
@@ -178,102 +193,32 @@ def hyperplanes_literal(num_planes: int, dim: int) -> list[list[float]]:
     ]
 
 
-def bucket_expr(
-    vec_d: Column | str,
-    num_planes: int = 8,
-    planes: list[list[float]] | None = None,
-) -> Column:
+def bucket_expr(vec_d_sql: str, planes: list[list[float]]) -> Column:
     """Random-hyperplane LSH bucket key as a pure array-local expression:
-    bit p = sign of <vec, H_p>, concatenated over planes. Sequential
-    left-fold dot products — deterministic and engine-portable (the
-    alternating explode/groupBy formulation sums in shuffle order, whose
-    low-bit nondeterminism can flip signs near zero).
-
-    ``planes``: optional pre-computed ``num_planes x dim`` hyperplane
-    constants (:func:`hyperplanes_literal`). When given, the per-row md5
-    chain is replaced by one literal array — the same doubles, folded in
-    the same order, so the bucket strings are bit-identical. Callers that
-    know the corpus dimension should pass it; the md5-per-row form stays
-    for callers that cannot probe the dimension up front."""
-
-    if planes is not None:
-        # one expression string, not per-element py4j lit calls (r12,
-        # see functions.numeric.lit_double_array2 — bit-identical).
-        # r13: when the vector operand is itself SQL text, the WHOLE
-        # bucket expression renders as one parsed string (5 nested
-        # lambdas of py4j otherwise); the CASE is exactly the old
-        # F.when/otherwise node.
-        from feature_store_fraud_detection_spark.functions.numeric import (
-            lit_double_array2_sql,
-        )
-
-        pl_sql = lit_double_array2_sql(planes)
-        if isinstance(vec_d, str) and pl_sql is not None:
-            return F.expr(
-                f"element_at(transform(array({vec_d}), vb -> concat_ws('', "
-                f"transform(sequence(0, {int(num_planes) - 1}), p -> "
-                f"CASE WHEN aggregate(zip_with(vb, element_at({pl_sql}, "
-                f"cast(p + 1 as int)), (x, h) -> x * h), 0.0D, "
-                f"(acc, x) -> acc + x) > 0 THEN '1' ELSE '0' END))), 1)"
-            )
-        pl = lit_double_array2(planes)
-        if isinstance(vec_d, str):  # degenerate-planes fallback
-            vec_d = F.expr(vec_d)
-
-        def plane_bit(vb: Column, p: Column) -> Column:
-            dot = F.aggregate(
-                F.zip_with(
-                    vb,
-                    F.element_at(pl, (p + 1).cast("int")),
-                    lambda x, h: x * h,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            return F.when(dot > 0, F.lit("1")).otherwise(F.lit("0"))
-
-    else:
-        if isinstance(vec_d, str):  # md5-per-row path takes a Column
-            vec_d = F.expr(vec_d)
-
-        def plane_bit(vb: Column, p: Column) -> Column:
-            dot = F.aggregate(
-                F.zip_with(
-                    vb,
-                    F.transform(
-                        F.sequence(F.lit(0), F.size(vb) - 1),
-                        lambda d: hyperplane_value(p, d),
-                    ),
-                    lambda x, h: x * h,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            return F.when(dot > 0, F.lit("1")).otherwise(F.lit("0"))
-
-    return F.element_at(
-        F.transform(
-            F.array(vec_d),
-            lambda vb: F.concat_ws(
-                "",
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(num_planes - 1)),
-                    lambda p: plane_bit(vb, p),
-                ),
-            ),
-        ),
-        1,
+    bit p = sign of <vec, H_p>, concatenated over the ``len(planes)``
+    hyperplanes (:func:`hyperplanes_literal`). ``vec_d_sql`` is the SQL
+    text of a double vector. Sequential left-fold dot products —
+    deterministic and engine-portable (the alternating explode/groupBy
+    formulation sums in shuffle order, whose low-bit nondeterminism can
+    flip signs near zero)."""
+    plane = f"element_at({lit_double_array2_sql(planes)}, cast(p + 1 as int))"
+    return F.expr(
+        f"element_at(transform(array({vec_d_sql}), vb -> concat_ws('', "
+        f"transform(sequence(0, {len(planes) - 1}), p -> "
+        f"CASE WHEN {_dot_sql('vb', plane)} > 0 THEN '1' ELSE '0' END))), 1)"
     )
 
 
-def _probe_dim(df: DataFrame, vec_col: str) -> int | None:
-    """Vector dimensionality from one row (None on an empty frame) — the
-    bounded driver probe pq_topk/ivfpq_topk already pay to size their
-    codebooks; LSH callers use it to fold the hyperplane constants."""
+def _probe_dim(df: DataFrame, vec_col: str) -> int:
+    """Vector dimensionality from one row (0 on a frame with no valid
+    vector) — the bounded driver probe LSH callers pay to fold the
+    hyperplane constants."""
     first = (
-        _valid_vectors(df, vec_col).select(F.size(vec_col)).first()
+        _valid_vectors(df, vec_col)
+        .select(F.size(F.col(_sql_ident(vec_col))))
+        .first()
     )
-    return None if first is None else int(first[0])
+    return 0 if first is None else int(first[0])
 
 
 def lsh_buckets(
@@ -281,22 +226,47 @@ def lsh_buckets(
     id_col: str,
     vec_col: str,
     num_planes: int = 8,
-    dim: int | None = None,
 ) -> DataFrame:
     """Assign each vector its hyperplane-LSH bucket key — one narrow
     projection, no shuffle. Cosine-similar vectors agree on most signs, so
-    near neighbors collide. Pass ``dim`` (the corpus dimensionality) to
-    fold the hyperplane constants into a plan literal instead of the
-    md5-per-row chain (bit-identical buckets — see
-    :func:`hyperplanes_literal`)."""
-    planes = hyperplanes_literal(num_planes, dim) if dim is not None else None
+    near neighbors collide. The corpus dimensionality is probed from one
+    row to fold the hyperplane constants into a plan literal."""
+    planes = hyperplanes_literal(num_planes, _probe_dim(df, vec_col))
     return df.select(
         F.col(id_col),
-        bucket_expr(
-            f"transform({_sql_ident(vec_col)}, x -> cast(x as double))",
-            num_planes,
-            planes,
-        ).alias("bucket"),
+        bucket_expr(_double_vec_sql(vec_col), planes).alias("bucket"),
+    )
+
+
+def _nearest_centroid_sql(
+    cent_list: list[list[float]], vec_col: str
+) -> tuple[str, str]:
+    """SQL texts (d2s, cluster) for a driver-side centroid table: ``d2s`` =
+    the per-centroid squared-L2 array of ``vec_col`` (same sequential fold
+    as the crossJoin shape), ``cluster`` = the argmin index with the same
+    (distance, cluster-id) tie-break as ``row_number() over (order by
+    __d2, cluster)``. A narrow projection instead of a corpus x centroids
+    crossJoin + window (a |corpus|*k row blow-up through a shuffle); pinned
+    by test_nearest_centroid_exprs_match_crossjoin_window. ``vec_col`` is
+    referenced inside the ``c`` lambda, so callers pass their internal
+    double-vector column, never a caller-named one."""
+    d2s = (
+        f"transform({lit_double_array2_sql(cent_list)}, "
+        f"c -> {_l2sq_sql(_sql_ident(vec_col), 'c')})"
+    )
+    return d2s, f"cast(array_position({d2s}, array_min({d2s})) - 1 as int)"
+
+
+def _nearest_probes_expr(d2s_sql: str, n_probe: int) -> Column:
+    """The ``n_probe`` nearest cluster ids from a per-centroid distance
+    array (SQL text) — ``array_sort`` over struct<d2, cluster> sorts by
+    (d2, cluster), the ordering of a per-query window; slice keeps the
+    probe count (all of them when there are fewer clusters, matching
+    ``row_number() <= n_probe``)."""
+    return F.expr(
+        f"slice(array_sort(transform({d2s_sql}, (d, i) -> "
+        f"named_struct('__d2', d, 'cluster', cast(i as int)))), "
+        f"1, {int(n_probe)})"
     )
 
 
@@ -331,11 +301,7 @@ def ivf_topk(
     The quantizer is tiny either way (k x dim; broadcast into assignment);
     list scans are |corpus|/k per probe.
     """
-    from pyspark.sql import Window
-
-    vecs = _valid_vectors(df, vec_col).select(
-        F.col(id_col), _to_double(F.col(vec_col)).alias("__vec_d")
-    )
+    vecs = _double_vectors(df, id_col, vec_col, "__vec_d")
     if init == "md5_sample":
         # deterministic centroid pick: bounded k-row driver collect (the
         # centroid table is driver/broadcast metadata in any IVF system)
@@ -348,18 +314,16 @@ def ivf_topk(
         )
         cent_list = [list(r["__vec_d"]) for r in picked]
         # assign every vector to its nearest centroid — same sequential-
-        # fold dist2 both engines, ties broken on cluster id; narrow
-        # literal argmin instead of crossJoin + row_number window (r12,
-        # see _nearest_centroid_exprs — bit-identical winners). Fanned
-        # out so the per-row distance folds never serialize on a
-        # one-file corpus (no-op at scale).
+        # fold dist2 both engines, ties broken on cluster id. Fanned out so
+        # the per-row distance folds never serialize on a one-file corpus
+        # (no-op at scale).
         from feature_store_fraud_detection_spark.operators.dedup import (
             fan_out_if_few_inputs,
         )
 
-        _, cluster_expr = _nearest_centroid_exprs(cent_list, "__vec_d")
+        _, cluster_sql = _nearest_centroid_sql(cent_list, "__vec_d")
         assigned = fan_out_if_few_inputs(vecs, id_col).select(
-            id_col, "__vec_d", cluster_expr.alias("__cluster")
+            id_col, "__vec_d", F.expr(cluster_sql).alias("__cluster")
         )
     elif init == "kmeans":
         from pyspark.ml.clustering import KMeans
@@ -384,15 +348,7 @@ def ivf_topk(
     q = assigned.filter(F.col(id_col) < query_max_id).select(
         F.col(id_col).alias("query_id"), F.col("__vec_d").alias("__qvec")
     )
-    # probe selection: same (dist2, cluster) ordering as the old per-query
-    # row_number window, as a literal array_sort (r12 — no crossJoin;
-    # r13 — one parsed SQL string, not a nested-lambda Column tree)
-    _qsqls = _nearest_centroid_sqls(cent_list, "__qvec")
-    qd2s = (
-        _qsqls[0]
-        if _qsqls is not None
-        else _nearest_centroid_exprs(cent_list, "__qvec")[0]
-    )
+    qd2s, _ = _nearest_centroid_sql(cent_list, "__qvec")
     probes = (
         q.select(
             "query_id",
@@ -402,9 +358,6 @@ def ivf_topk(
         .select("query_id", "__qvec", F.col("p.cluster").alias("cluster"))
     )
 
-    # dot products as parsed SQL text (r13): same sequential left-fold
-    # node-for-node as the dot_expr lambda form, one py4j round-trip
-    # per expression instead of ~25
     norms = assigned.select(
         F.col(id_col).alias("neighbor_id"),
         F.col("__cluster").alias("cluster"),
@@ -427,12 +380,9 @@ def ivf_topk(
             )
         ).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(
+        scored, top_k, F.col("cosine").desc(), F.col("neighbor_id")
+    ).select("query_id", "neighbor_id", "cosine", "rank")
 
 
 def label_centroids(
@@ -454,10 +404,10 @@ def label_centroids(
     """
     exploded = df.select(
         F.col(label_col),
-        F.posexplode(_to_double(F.col(vec_col))).alias("d0", "v"),
+        F.posexplode(F.expr(_double_vec_sql(vec_col))).alias("d0", "v"),
     )
-    vs = F.array_sort(F.collect_list("v"))
-    mean = F.aggregate(vs, F.lit(0.0), lambda acc, x: acc + x) / F.size(vs)
+    vs = "array_sort(collect_list(v))"
+    mean = F.expr(f"aggregate({vs}, 0.0D, (acc, x) -> acc + x) / size({vs})")
     return (
         exploded.groupBy(label_col, (F.col("d0") + 1).alias("d"))
         .agg(round4_stable(mean).alias("c"))
@@ -494,26 +444,16 @@ def lsh_topk(
         " §'Which ANN index?'.",
         stacklevel=2,
     )
-    from pyspark.sql import Window
-
-    # r12 optimization (guide §2.4): the bucket is a narrow projection of
-    # the same vector column with_norm already carries — computing it
-    # inline removes the corpus-by-corpus id equi-join (a full shuffle of
-    # the corpus on a key unrelated to the search) the old
-    # lsh_buckets-then-join shape paid. Bucket strings are bit-identical:
-    # same doubles, same fold, hyperplane constants folded to a literal
-    # when the dimension is probeable (hyperplanes_literal).
+    # the bucket is a narrow projection of the same vector column with_norm
+    # already carries, so the search needs no corpus id self-join
     from feature_store_fraud_detection_spark.operators.dedup import (
         fan_out_if_few_inputs,
     )
 
-    dim = _probe_dim(df, vec_col)
-    planes = (
-        hyperplanes_literal(num_planes, dim) if dim is not None else None
-    )
+    planes = hyperplanes_literal(num_planes, _probe_dim(df, vec_col))
     v = with_norm(
         fan_out_if_few_inputs(df, id_col), id_col, vec_col
-    ).withColumn("bucket", bucket_expr("__vec_d", num_planes, planes))
+    ).withColumn("bucket", bucket_expr("__vec_d", planes))
     q = v.filter(F.col(id_col) < query_max_id).select(
         F.col(id_col).alias("query_id"),
         F.col("__vec_d").alias("__qvec"),
@@ -528,20 +468,11 @@ def lsh_topk(
     scored = pairs.select(
         "query_id",
         F.col(id_col).alias("neighbor_id"),
-        round4_stable(
-            cosine_expr(
-                F.col("__qvec"), F.col("__vec_d"), F.col("__qnorm"), F.col("__norm")
-            )
-        ).alias("cosine"),
+        round4_stable(F.expr(_PAIR_COSINE_SQL)).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(
+        scored, top_k, F.col("cosine").desc(), F.col("neighbor_id")
+    ).select("query_id", "neighbor_id", "cosine", "rank")
 
 
 def sq8_quantize(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -560,26 +491,24 @@ def sq8_quantize(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     every downstream distance — are bit-reproducible cross-engine. A
     zero scale (all-zero dimension) quantizes to code 0.
     """
-    vecs = df.select(F.col(id_col), _to_double(F.col(vec_col)).alias("__vec_d"))
+    vecs = df.select(
+        F.col(id_col), F.expr(_double_vec_sql(vec_col)).alias("__vec_d")
+    )
     scales = (
         vecs.select(F.posexplode("__vec_d").alias("d0", "v"))
         .groupBy("d0")
         .agg(F.max(F.abs(F.col("v"))).alias("s"))
         .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("d0", "s"))),
-                lambda x: x["s"],
+            F.expr(
+                "transform(array_sort(collect_list(struct(d0, s))), x -> x.s)"
             ).alias("__scales")
         )
     )
     return vecs.crossJoin(F.broadcast(scales)).select(
         F.col(id_col),
-        F.zip_with(
-            "__vec_d",
-            "__scales",
-            lambda v, s: F.when(s == F.lit(0.0), F.lit(0)).otherwise(
-                F.floor(v / s * 127 + F.lit(0.5)).cast("int")
-            ),
+        F.expr(
+            "zip_with(__vec_d, __scales, (v, s) -> CASE WHEN s = 0.0D THEN 0 "
+            "ELSE cast(floor(v / s * 127 + 0.5D) as int) END)"
         ).alias("__codes"),
         F.col("__scales"),
     )
@@ -598,18 +527,16 @@ def sq8_topk(
     vs the float baseline is bounded by scale/254 per dimension; ranks for
     well-separated neighbors are unchanged while the scan reads 1/4 the
     bytes. Dot products are sequential left-folds (engine-portable)."""
-    from pyspark.sql import Window
-
     deq = sq8_quantize(df, id_col, vec_col).select(
         F.col(id_col),
-        F.zip_with(
-            "__codes", "__scales", lambda c, s: c * s / F.lit(127)
-        ).alias("__vec_d"),
+        F.expr("zip_with(__codes, __scales, (c, s) -> c * s / 127)").alias(
+            "__vec_d"
+        ),
     )
     v = deq.select(
         F.col(id_col),
         F.col("__vec_d"),
-        F.sqrt(dot_expr(F.col("__vec_d"), F.col("__vec_d"))).alias("__norm"),
+        F.expr(f"sqrt({_dot_sql('__vec_d', '__vec_d')})").alias("__norm"),
         # zero-norm dequantized vectors (empty or all-zero input) have no
         # cosine — drop, don't DIVIDE_BY_ZERO (round-11 probe)
     ).filter(F.col("__norm") > 0.0)
@@ -621,20 +548,11 @@ def sq8_topk(
     scored = F.broadcast(q).join(v, F.col("query_id") != F.col(id_col)).select(
         "query_id",
         F.col(id_col).alias("neighbor_id"),
-        round4_stable(
-            cosine_expr(
-                F.col("__qvec"), F.col("__vec_d"), F.col("__qnorm"), F.col("__norm")
-            )
-        ).alias("qcosine"),
+        round4_stable(F.expr(_PAIR_COSINE_SQL)).alias("qcosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("qcosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_k)
-        .select("query_id", "neighbor_id", "qcosine", "rank")
-    )
+    return _top_k(
+        scored, top_k, F.col("qcosine").desc(), F.col("neighbor_id")
+    ).select("query_id", "neighbor_id", "qcosine", "rank")
 
 
 def knn_classify(
@@ -656,15 +574,7 @@ def knn_classify(
     k rows. Swap the scan side for lsh/ivf bucket probes at 100 TB — the
     voting stages are unchanged.
     """
-    from pyspark.sql import Window
-
-    vec_d = _to_double(F.col(vec_col))
-    base = _valid_vectors(df, vec_col).select(
-        F.col(id_col),
-        F.col(label_col),
-        vec_d.alias("__vec_d"),
-        F.sqrt(dot_expr(vec_d, vec_d)).alias("__norm"),
-    ).filter(F.col("__norm") > 0.0)  # zero-norm has no cosine (r11 probe)
+    base = with_norm(df, id_col, vec_col, label_col)
     q = base.filter(F.col(id_col) < query_max_id).select(
         F.col(id_col).alias("query_id"),
         F.col("__vec_d").alias("__qvec"),
@@ -678,20 +588,10 @@ def knn_classify(
             "query_id",
             F.col(id_col).alias("neighbor_id"),
             F.col(label_col).alias("neighbor_label"),
-            round4_stable(
-                cosine_expr(
-                    F.col("__qvec"), F.col("__vec_d"),
-                    F.col("__qnorm"), F.col("__norm"),
-                )
-            ).alias("cosine"),
+            round4_stable(F.expr(_PAIR_COSINE_SQL)).alias("cosine"),
         )
     )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    topk = scored.withColumn("rn", F.row_number().over(w_rank)).filter(
-        F.col("rn") <= k
-    )
+    topk = _top_k(scored, k, F.col("cosine").desc(), F.col("neighbor_id"))
     votes = topk.groupBy("query_id", "neighbor_label").agg(
         F.count(F.lit(1)).alias("n_votes")
     )
@@ -728,15 +628,7 @@ def hard_negatives(
     inequality folded into the join condition so cross-label pairs are
     scored and same-label pairs never materialize.
     """
-    from pyspark.sql import Window
-
-    vd = _to_double(F.col(vec_col))
-    v = _valid_vectors(df, vec_col).select(
-        F.col(id_col),
-        F.col(label_col),
-        vd.alias("__vec_d"),
-        F.sqrt(dot_expr(vd, vd)).alias("__norm"),
-    ).filter(F.col("__norm") > 0.0)  # zero-norm has no cosine (r11 probe)
+    v = with_norm(df, id_col, vec_col, label_col)
     q = v.filter(F.col(id_col) < query_max_id).select(
         F.col(id_col).alias("query_id"),
         F.col(label_col).alias("query_label"),
@@ -751,62 +643,44 @@ def hard_negatives(
         "query_label",
         F.col(id_col).alias("negative_id"),
         F.col(label_col).alias("negative_label"),
-        round4_stable(
-            cosine_expr(
-                F.col("__qvec"), F.col("__vec_d"), F.col("__qnorm"), F.col("__norm")
-            )
-        ).alias("cosine"),
+        round4_stable(F.expr(_PAIR_COSINE_SQL)).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("negative_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_k)
-        .select(
-            "query_id",
-            "query_label",
-            "negative_id",
-            "negative_label",
-            "cosine",
-            F.col("rank").cast("int").alias("rank"),
-        )
+    return _top_k(
+        scored, top_k, F.col("cosine").desc(), F.col("negative_id")
+    ).select(
+        "query_id",
+        "query_label",
+        "negative_id",
+        "negative_label",
+        "cosine",
+        F.col("rank").cast("int").alias("rank"),
     )
 
 
-def ann_recall_report(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_max_id: int,
-    top_k: int = 5,
-    num_planes: int = 8,
-    multiprobe: bool = False,
-) -> DataFrame:
-    """Self-evaluation of the LSH ANN path: per query, how many of the EXACT
-    top-k neighbors the bucket-restricted search recovered (recall@k) — the
-    report every production ANN deployment keeps next to its index so a bad
-    hyperplane count or bucket skew is a dashboard row, not a silent quality
-    loss.
+def recall_at_k(exact: DataFrame, approx: DataFrame) -> DataFrame:
+    """Per-query recall of an approximate search against an exact one: how
+    many of the EXACT top-k neighbors the approximate search recovered —
+    the report every production ANN deployment keeps next to its index, so
+    a bad hyperplane count, codebook or probe count is a dashboard row,
+    not a silent quality loss.
 
-    Runs both paths (both scale-shaped: broadcast queries, WindowGroupLimit)
-    and joins their top-k sets; the cost adds one |queries| x k semi-join to
-    what the two searches already do. Recall is 4-decimal rounded for
-    cross-engine hashing; queries whose LSH bucket is a singleton recover 0
-    and report recall 0.
+    ``exact`` and ``approx`` are any frames with ``(query_id,
+    neighbor_id)`` columns — typically ``cosine_topk`` / ``l2_topk`` and
+    the search being audited, called with the same ``query_max_id`` and
+    ``top_k``. One exact ground truth can score any number of candidate
+    sets. Returns (query_id, n_exact, n_approx, n_hit, recall), one row per
+    query of ``exact``; a query the approximate search returned nothing
+    for reports 0 / 0 / recall 0. Recall is 4-decimal rounded for
+    cross-engine hashing; the cost is one |queries| x k semi-join on top
+    of the two searches.
     """
-    exact = cosine_topk(df, id_col, vec_col, query_max_id, top_k).select(
-        "query_id", "neighbor_id"
-    )
-    search = multiprobe_lsh_topk if multiprobe else lsh_topk
-    approx = search(df, id_col, vec_col, query_max_id, top_k, num_planes).select(
-        "query_id", "neighbor_id"
-    )
+    exact = exact.select("query_id", "neighbor_id")
+    approx = approx.select("query_id", "neighbor_id")
     n_exact = exact.groupBy("query_id").agg(
         F.count(F.lit(1)).cast("int").alias("n_exact")
     )
-    n_lsh = approx.groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("int").alias("n_lsh")
+    n_approx = approx.groupBy("query_id").agg(
+        F.count(F.lit(1)).cast("int").alias("n_approx")
     )
     n_hit = (
         exact.join(approx, ["query_id", "neighbor_id"], "left_semi")
@@ -814,12 +688,12 @@ def ann_recall_report(
         .agg(F.count(F.lit(1)).cast("int").alias("n_hit"))
     )
     return (
-        n_exact.join(n_lsh, "query_id", "left")
+        n_exact.join(n_approx, "query_id", "left")
         .join(n_hit, "query_id", "left")
         .select(
             "query_id",
             "n_exact",
-            F.coalesce("n_lsh", F.lit(0)).alias("n_lsh"),
+            F.coalesce("n_approx", F.lit(0)).alias("n_approx"),
             F.coalesce("n_hit", F.lit(0)).alias("n_hit"),
             round4_stable(
                 F.coalesce("n_hit", F.lit(0)).cast("double")
@@ -850,8 +724,9 @@ def multiprobe_lsh_topk(
     bucket at Hamming distance 1 (one hyperplane flipped) — the standard
     recall fix for random-hyperplane LSH, whose single-bucket recall
     collapses when planes shatter the space (measured by
-    :func:`ann_recall_report`: 0-20% at 8 planes on this corpus; multi-probe
-    lifts it several-fold for (num_planes+1)x the candidate volume).
+    :func:`recall_at_k` against :func:`cosine_topk`: 0-20% at 8 planes on
+    this corpus; multi-probe lifts it several-fold for (num_planes+1)x the
+    candidate volume).
 
     Shape: the corpus keeps ONE bucket per vector (the index is unchanged —
     probing is free at index time); only the broadcast QUERY side fans out
@@ -859,21 +734,14 @@ def multiprobe_lsh_topk(
     :func:`lsh_topk`; each (query, neighbor) pair arises from at most one
     probe (probe buckets are distinct strings), so no dedup is needed.
     """
-    from pyspark.sql import Window
-
-    # same inline-bucket + literal-planes shape as lsh_topk (r12): no
-    # corpus id self-join, no per-row md5 chain — bit-identical buckets
     from feature_store_fraud_detection_spark.operators.dedup import (
         fan_out_if_few_inputs,
     )
 
-    dim = _probe_dim(df, vec_col)
-    planes = (
-        hyperplanes_literal(num_planes, dim) if dim is not None else None
-    )
+    planes = hyperplanes_literal(num_planes, _probe_dim(df, vec_col))
     v = with_norm(
         fan_out_if_few_inputs(df, id_col), id_col, vec_col
-    ).withColumn("bucket", bucket_expr("__vec_d", num_planes, planes))
+    ).withColumn("bucket", bucket_expr("__vec_d", planes))
     probes = F.array(
         F.col("bucket"), *[_flip_bit(F.col("bucket"), p) for p in range(num_planes)]
     )
@@ -894,125 +762,55 @@ def multiprobe_lsh_topk(
     scored = pairs.select(
         "query_id",
         F.col(id_col).alias("neighbor_id"),
-        round4_stable(
-            cosine_expr(
-                F.col("__qvec"), F.col("__vec_d"), F.col("__qnorm"), F.col("__norm")
-            )
-        ).alias("cosine"),
+        round4_stable(F.expr(_PAIR_COSINE_SQL)).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(
+        scored, top_k, F.col("cosine").desc(), F.col("neighbor_id")
+    ).select("query_id", "neighbor_id", "cosine", "rank")
 
 
-def _pq_subvectors(vecs: DataFrame, id_col: str, m: int, sub_dim: int) -> DataFrame:
-    """(id, sub, s): each vector's m contiguous sub-vectors from ONE scan —
-    an explode of an m-element struct array. A unionByName of m sliced
-    selects would scan the source m times (16 passes at m=16). The
-    struct-array expression is ONE parsed SQL string (r13; the lambda
-    Column form cost ~80 ms of py4j per call, twice per PQ query)."""
+def _pq_subvectors(
+    vecs: DataFrame, keys: list[str], m: int, sub_dim: int
+) -> DataFrame:
+    """(keys..., sub, s): each ``__v`` vector's m contiguous sub-vectors
+    from ONE scan — an explode of an m-element struct array. A unionByName
+    of m sliced selects would scan the source m times (16 passes at
+    m=16)."""
     subs = F.expr(
         f"transform(sequence(0, {int(m) - 1}), j -> named_struct("
         f"'sub', cast(j as int), "
         f"'s', slice(__v, j * {int(sub_dim)} + 1, {int(sub_dim)})))"
     )
-    return vecs.select(F.col(id_col), F.explode(subs).alias("e")).select(
-        id_col, "e.sub", "e.s"
+    return vecs.select(*keys, F.explode(subs).alias("e")).select(
+        *keys, "e.sub", "e.s"
     )
 
 
-
-def _d2s_sql(cent_sql: str, vec_col: str) -> str:
-    """SQL text of the per-centroid squared-L2 distance array (the
-    sequential left-fold of the crossJoin shape, as ONE parsed
-    expression — r13: the nested-lambda Column form cost dozens of py4j
-    round-trips per build; the semantics are identical node-for-node)."""
+def _md5_sample(vecs: DataFrame, id_col: str, salt: str, n: int) -> list:
+    """The ``n`` rows with the smallest ``(md5(salt||'|'||id), id)``,
+    collected — the deterministic training sample of the PQ/IVF-PQ
+    quantizers (a pure function of the data, reproducible on any engine
+    with md5)."""
     return (
-        f"transform({cent_sql}, c -> aggregate("
-        f"zip_with({_sql_ident(vec_col)}, c, (a, b) -> (a - b) * (a - b)), "
-        f"0.0D, (acc, x) -> acc + x))"
-    )
-
-
-def _nearest_centroid_sqls(
-    cent_list: list[list[float]], vec_col: str
-) -> tuple[str, str] | None:
-    """SQL texts (d2s, cluster) for :func:`_nearest_centroid_exprs`, or
-    None for degenerate centroid shapes (empty / non-finite entries)
-    that must keep the ``F.lit`` Column fallback."""
-    from feature_store_fraud_detection_spark.functions.numeric import (
-        lit_double_array2_sql,
-    )
-
-    cent_sql = lit_double_array2_sql(cent_list)
-    if cent_sql is None:
-        return None
-    d2s_sql = _d2s_sql(cent_sql, vec_col)
-    cluster_sql = (
-        f"cast(array_position({d2s_sql}, array_min({d2s_sql})) - 1 as int)"
-    )
-    return d2s_sql, cluster_sql
-
-
-def _nearest_centroid_exprs(
-    cent_list: list[list[float]], vec_col: str
-) -> tuple[Column, Column]:
-    """(d2s, cluster) expressions for a driver-side centroid table:
-    ``d2s`` = the per-centroid squared-L2 array (same sequential fold as
-    the crossJoin shape), ``cluster`` = the argmin index with the same
-    (distance, cluster-id) tie-break as ``row_number() over (order by
-    __d2, cluster)``. Replaces the corpus x centroids crossJoin + window
-    (a |corpus|*k row blow-up through a shuffle) with a narrow
-    projection — r12 optimization, guide §2.4. r13: both expressions are
-    rendered as ONE SQL string each (the Column-composition form paid
-    one py4j round-trip per operator — measured 1,610 round-trips /
-    1.25 s of driver wait for one ivf_topk build); the parsed plan nodes
-    are identical, pinned by
-    test_nearest_centroid_exprs_match_crossjoin_window."""
-    sqls = _nearest_centroid_sqls(cent_list, vec_col)
-    if sqls is None:
-        # degenerate centroid shapes keep the old Column path (F.lit
-        # fallback); these never occur for non-empty finite corpora
-        cent_lit = lit_double_array2(cent_list)
-        d2s = F.transform(
-            cent_lit,
-            lambda c: F.aggregate(
-                F.zip_with(vec_col, c, lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
+        vecs.orderBy(
+            F.md5(F.concat_ws("|", F.lit(salt), F.col(id_col).cast("string"))),
+            F.col(id_col),
         )
-        cluster = (F.array_position(d2s, F.array_min(d2s)) - 1).cast("int")
-        return d2s, cluster
-    return F.expr(sqls[0]), F.expr(sqls[1])
-
-
-def _nearest_probes_expr(d2s: Column | str, n_probe: int) -> Column:
-    """The ``n_probe`` nearest cluster ids from a per-centroid distance
-    array — ``array_sort`` over struct<d2, cluster> sorts by (d2,
-    cluster), the exact ordering of the old per-query window; slice
-    keeps the probe count (all of them when there are fewer clusters,
-    matching ``row_number() <= n_probe``). Accepts the distance array
-    as SQL text (r13, one parsed expression) or as a Column (the
-    degenerate-centroid fallback)."""
-    if isinstance(d2s, str):
-        return F.expr(
-            f"slice(array_sort(transform({d2s}, (d, i) -> "
-            f"named_struct('__d2', d, 'cluster', cast(i as int)))), "
-            f"1, {int(n_probe)})"
-        )
-    structs = F.transform(
-        d2s,
-        lambda d, i: F.struct(
-            d.alias("__d2"), i.cast("int").alias("cluster")
-        ),
+        .limit(n)
+        .collect()
     )
-    return F.slice(F.array_sort(structs), 1, n_probe)
+
+
+def _sub_dim(op: str, dim: int, m: int) -> int:
+    """Sub-vector width of an ``m``-way product quantizer; fails loud when
+    ``m`` does not divide ``dim`` (the trailing ``dim % m`` components
+    would otherwise be silently dropped from every distance)."""
+    if m <= 0 or dim % m:
+        raise ValueError(
+            f"{op}: dim {dim} is not divisible by m={m} — choose m dividing "
+            "the vector dimension"
+        )
+    return dim // m
 
 
 def pq_topk(
@@ -1044,29 +842,15 @@ def pq_topk(
     shape PQ exists for); the per-query distance table broadcasts. Encoding
     shuffles nothing — it's a broadcast-join + per-row argmin.
     """
-    from pyspark.sql import Window
-
     spark = df.sparkSession
-    vecs = _valid_vectors(df, vec_col).select(
-        F.col(id_col), _to_double(F.col(vec_col)).alias("__v")
-    )
-    picked = (
-        vecs.orderBy(
-            F.md5(F.concat_ws("|", F.lit(salt), F.col(id_col).cast("string"))),
-            F.col(id_col),
-        )
-        .limit(k_per_sub)
-        .collect()
-    )
-    # dimension comes from the codebook sample itself (r13): the separate
-    # one-row size probe was a second driver job on every call. An EMPTY
-    # corpus still fails loud with the operator's name (round-10
-    # degenerate-probe convention).
+    vecs = _double_vectors(df, id_col, vec_col, "__v")
+    picked = _md5_sample(vecs, id_col, salt, k_per_sub)
+    # dimension comes from the codebook sample itself, so there is no
+    # separate size probe job. An EMPTY corpus still fails loud with the
+    # operator's name (round-10 degenerate-probe convention).
     if not picked:
         raise ValueError("pq_topk: empty embedding corpus — nothing to train a quantizer on")
-    dim = len(picked[0]["__v"])
-    assert dim % m == 0, f"dim {dim} not divisible by m={m}"
-    sub_dim = dim // m
+    sub_dim = _sub_dim("pq_topk", len(picked[0]["__v"]), m)
     cb_rows = [
         (j, c, list(r["__v"][j * sub_dim : (j + 1) * sub_dim]))
         for j in range(m)
@@ -1075,27 +859,19 @@ def pq_topk(
     cb = spark.createDataFrame(cb_rows, "sub int, code int, cent array<double>")
 
     # corpus encoding: broadcast the codebook, take the per-(id, sub)
-    # argmin with min_by — NOT a row_number window. The old shape
-    # shuffled AND sorted all |corpus|*m*k joined rows to rank each
-    # group; min_by(code, struct(__d2, code)) reduces map-side, so the
-    # exchange carries |corpus|*m tiny rows and nothing sorts. The
-    # struct ordering (d2 asc, then code asc) is exactly the old
+    # argmin with min_by, not a row_number window: min_by(code, struct(__d2,
+    # code)) reduces map-side, so the exchange carries |corpus|*m tiny rows
+    # and nothing sorts. The struct ordering (d2 asc, then code asc) is the
     # ``row_number() over (order by __d2, code)`` tie-break, so every
-    # winner is bit-identical. r12 optimization, guide §2.3
-    # ("aggregate before you shuffle").
+    # winner is bit-identical (guide §2.3, "aggregate before you shuffle").
     from feature_store_fraud_detection_spark.operators.dedup import (
         fan_out_if_few_inputs,
     )
 
     sv = _pq_subvectors(
-        fan_out_if_few_inputs(vecs, id_col), id_col, m, sub_dim
+        fan_out_if_few_inputs(vecs, id_col), [id_col], m, sub_dim
     )
-    # one parsed SQL string (r13) — same sequential fold as the lambda
-    # Column form, without its ~20 py4j round-trips per reference
-    d2 = F.expr(
-        "aggregate(zip_with(s, cent, (a, b) -> (a - b) * (a - b)), "
-        "0.0D, (acc, x) -> acc + x)"
-    )
+    d2 = F.expr(_l2sq_sql("s", "cent"))
     codes = (
         sv.join(F.broadcast(cb), "sub")
         .groupBy(id_col, "sub")
@@ -1107,7 +883,7 @@ def pq_topk(
     # entry (query side only — sub-vectors of the few query rows)
     qt = (
         _pq_subvectors(
-            vecs.filter(F.col(id_col) < query_max_id), id_col, m, sub_dim
+            vecs.filter(F.col(id_col) < query_max_id), [id_col], m, sub_dim
         )
         .join(F.broadcast(cb), "sub")
         .select(
@@ -1127,11 +903,8 @@ def pq_topk(
         .groupBy("query_id", "neighbor_id")
         .agg((F.floor(fold * 10000 + F.lit(0.5)) / 10000).alias("adist2"))
     )
-    w = Window.partitionBy("query_id").orderBy("adist2", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_k)
-        .select("query_id", "neighbor_id", "adist2", "rank")
+    return _top_k(scored, top_k, F.col("adist2"), F.col("neighbor_id")).select(
+        "query_id", "neighbor_id", "adist2", "rank"
     )
 
 
@@ -1203,8 +976,9 @@ def ivfpq_topk(
       (``max_train_rows``), driver-side, exactly FAISS's train() practice;
       assignment/encoding stay distributed. Deterministic for fixed
       (data, seed) but iterative, so queries built on it are rows-only to
-      the oracle gate; recall is measured by ``ivfpq_recall_report`` and
-      pinned in tests/bench (recall@5 >= 0.5 at sf0.1 vs 0.3-0.4 sampled).
+      the oracle gate; recall is measured by ``recall_at_k`` against
+      ``l2_topk`` and pinned in tests/bench (recall@5 >= 0.5 at sf0.1 vs
+      0.3-0.4 sampled).
 
     ``residual=False`` quantizes RAW vectors; ``residual=True`` is the
     true IVFADC shape — codes quantize ``v - centroid[list]`` and each
@@ -1223,27 +997,12 @@ def ivfpq_topk(
     its coarse list id and m codes — the 32x memory compression that makes
     the index RAM-resident at 100 TB of raw vectors.
     """
-    from pyspark.sql import Window
-
     spark = df.sparkSession
-    vecs = _valid_vectors(df, vec_col).select(
-        F.col(id_col), _to_double(F.col(vec_col)).alias("__v")
-    )
+    vecs = _double_vectors(df, id_col, vec_col, "__v")
     if init == "kmeans":
         # bounded md5-ordered training sample (deterministic for fixed
         # data); FAISS-style driver-side quantizer training
-        train_rows = (
-            vecs.orderBy(
-                F.md5(
-                    F.concat_ws(
-                        "|", F.lit(coarse_salt), F.col(id_col).cast("string")
-                    )
-                ),
-                F.col(id_col),
-            )
-            .limit(max_train_rows)
-            .collect()
-        )
+        train_rows = _md5_sample(vecs, id_col, coarse_salt, max_train_rows)
         if not train_rows:
             raise ValueError("ivfpq_topk: empty embedding corpus — nothing to train a quantizer on")
         import numpy as np
@@ -1253,46 +1012,31 @@ def ivfpq_topk(
         cent_list = [[float(x) for x in c] for c in coarse_cent]
     elif init == "md5_sample":
         # --- coarse quantizer: md5-sampled centroids, nearest-list assignment
-        coarse_rows = (
-            vecs.orderBy(
-                F.md5(F.concat_ws("|", F.lit(coarse_salt), F.col(id_col).cast("string"))),
-                F.col(id_col),
-            )
-            .limit(num_clusters)
-            .collect()
-        )
+        coarse_rows = _md5_sample(vecs, id_col, coarse_salt, num_clusters)
         cent_list = [list(r["__v"]) for r in coarse_rows]
     else:
         raise ValueError(f"unknown init {init!r}")
-    # dimension from the quantizer sample (r13): the separate one-row
-    # size probe was a second driver job on every call; an empty corpus
-    # still fails loud (round-10 degenerate-probe convention)
+    # dimension from the quantizer sample, so there is no separate size
+    # probe job; an empty corpus still fails loud (round-10
+    # degenerate-probe convention)
     if not cent_list:
         raise ValueError("ivfpq_topk: empty embedding corpus — nothing to train a quantizer on")
-    dim = len(cent_list[0])
-    assert dim % m == 0, f"dim {dim} not divisible by m={m}"
-    sub_dim = dim // m
+    sub_dim = _sub_dim("ivfpq_topk", len(cent_list[0]), m)
     # the centroid table is driver-side in BOTH inits — assignment and
     # probe selection are narrow literal expressions (bit-identical
     # (d2, cluster) tie-breaks; no corpus x centroids crossJoin, no
-    # row_number shuffle — r12, see _nearest_centroid_exprs)
-    cent_lit = lit_double_array2(cent_list)
-    _csqls = _nearest_centroid_sqls(cent_list, "__v")
-    if _csqls is not None:
-        cd2s: Column | str = _csqls[0]
-        cluster_expr = F.expr(_csqls[1])
-    else:
-        cd2s, cluster_expr = _nearest_centroid_exprs(cent_list, "__v")
-    # corpus-side assignment + encoding are CPU-bound narrow expressions
-    # now — fan the corpus out so they never serialize on a one-file
-    # input (no-op at scale; the old crossJoin+window got parallelism
-    # from its shuffle)
+    # row_number shuffle — see _nearest_centroid_sql)
+    cent_sql = lit_double_array2_sql(cent_list)
+    cd2s, cluster_sql = _nearest_centroid_sql(cent_list, "__v")
+    # corpus-side assignment + encoding are CPU-bound narrow expressions —
+    # fan the corpus out so they never serialize on a one-file input
+    # (no-op at scale)
     from feature_store_fraud_detection_spark.operators.dedup import (
         fan_out_if_few_inputs,
     )
 
     assigned = fan_out_if_few_inputs(vecs, id_col).select(
-        id_col, cluster_expr.alias("cluster")
+        id_col, F.expr(cluster_sql).alias("cluster")
     )
     probes = (
         vecs.filter(F.col(id_col) < query_max_id)
@@ -1308,10 +1052,9 @@ def ivfpq_topk(
     if residual:
         enc_vecs = vecs.select(
             F.col(id_col),
-            F.zip_with(
-                "__v",
-                F.element_at(cent_lit, cluster_expr + 1),
-                lambda a, b: a - b,
+            F.expr(
+                f"zip_with(__v, element_at({cent_sql}, {cluster_sql} + 1), "
+                f"(a, b) -> a - b)"
             ).alias("__v"),
         )
     else:
@@ -1319,8 +1062,6 @@ def ivfpq_topk(
     if init == "kmeans":
         # per-subspace codebooks trained on the (residual-adjusted) sample:
         # real PQ training — each subspace gets k_per_sub Lloyd centroids
-        import numpy as np
-
         if residual:
             # residual-encode the training sample driver-side: nearest
             # coarse centroid per sampled vector, subtract
@@ -1336,14 +1077,7 @@ def ivfpq_topk(
             cents = _numpy_kmeans(sub, k_per_sub, seed=seed + j + 1)
             cb_subs.append([[float(x) for x in v] for v in cents])
     else:
-        picked = (
-            enc_vecs.orderBy(
-                F.md5(F.concat_ws("|", F.lit(pq_salt), F.col(id_col).cast("string"))),
-                F.col(id_col),
-            )
-            .limit(k_per_sub)
-            .collect()
-        )
+        picked = _md5_sample(enc_vecs, id_col, pq_salt, k_per_sub)
         cb_subs = [
             [list(r["__v"][j * sub_dim : (j + 1) * sub_dim]) for r in picked]
             for j in range(m)
@@ -1358,17 +1092,13 @@ def ivfpq_topk(
         ],
         "sub int, code int, cent array<double>",
     )
-    d2 = F.expr(
-        "aggregate(zip_with(s, cent, (a, b) -> (a - b) * (a - b)), "
-        "0.0D, (acc, x) -> acc + x)"
-    )
+    d2 = F.expr(_l2sq_sql("s", "cent"))
     # corpus encoding: broadcast codebook + min_by partial-agg argmin —
-    # same bit-identical (d2, code) winner as the old row_number window,
-    # but the exchange carries |corpus|*m rows and nothing sorts (r12,
-    # guide §2.3; see pq_topk)
+    # the bit-identical (d2, code) winner of a row_number window, but the
+    # exchange carries |corpus|*m rows and nothing sorts (see pq_topk)
     codes = (
         _pq_subvectors(
-            fan_out_if_few_inputs(enc_vecs, id_col), id_col, m, sub_dim
+            fan_out_if_few_inputs(enc_vecs, id_col), [id_col], m, sub_dim
         )
         .join(F.broadcast(cb), "sub")
         .groupBy(id_col, "sub")
@@ -1378,42 +1108,30 @@ def ivfpq_topk(
     if residual:
         # per-(query, probed list) residual distance tables: the query's
         # residual against EACH probed centroid gets its own (m x k) table
-        qres = (
-            probes.join(
-                vecs.select(
-                    F.col(id_col).alias("query_id"), F.col("__v").alias("__qv")
-                ),
-                "query_id",
-            )
-            .select(
-                "query_id",
-                "cluster",
-                F.zip_with(
-                    "__qv",
-                    F.element_at(cent_lit, F.col("cluster") + 1),
-                    lambda a, b: a - b,
-                ).alias("__r"),
-            )
-        )
-        qsubs = F.transform(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            lambda j: F.struct(
-                j.cast("int").alias("sub"),
-                F.slice("__r", j * sub_dim + 1, F.lit(sub_dim)).alias("s"),
+        qres = probes.join(
+            vecs.select(
+                F.col(id_col).alias("query_id"), F.col("__v").alias("__qv")
             ),
-        )
-        qsv = qres.select(
-            "query_id", "cluster", F.explode(qsubs).alias("e")
-        ).select("query_id", "cluster", "e.sub", "e.s")
-        qt = qsv.join(F.broadcast(cb), "sub").select(
-            "query_id", "cluster", "sub", "code", d2.alias("__qd")
+            "query_id",
+        ).select(
+            "query_id",
+            "cluster",
+            F.expr(
+                f"zip_with(__qv, element_at({cent_sql}, cluster + 1), "
+                f"(a, b) -> a - b)"
+            ).alias("__v"),
         )
         qt_keys = ["query_id", "cluster", "sub", "code"]
+        qt = (
+            _pq_subvectors(qres, ["query_id", "cluster"], m, sub_dim)
+            .join(F.broadcast(cb), "sub")
+            .select(*qt_keys, d2.alias("__qd"))
+        )
     else:
         qt = (
             _pq_subvectors(
                 enc_vecs.filter(F.col(id_col) < query_max_id),
-                id_col,
+                [id_col],
                 m,
                 sub_dim,
             )
@@ -1438,16 +1156,13 @@ def ivfpq_topk(
     scored = (
         F.broadcast(cand)
         .join(codes, "neighbor_id")
-        .join(F.broadcast(qt), qt_keys if residual else ["query_id", "sub", "code"])
+        .join(F.broadcast(qt), qt_keys)
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .groupBy("query_id", "neighbor_id")
         .agg((F.floor(fold * 10000 + F.lit(0.5)) / 10000).alias("adist2"))
     )
-    w = Window.partitionBy("query_id").orderBy("adist2", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_k)
-        .select("query_id", "neighbor_id", "adist2", "rank")
+    return _top_k(scored, top_k, F.col("adist2"), F.col("neighbor_id")).select(
+        "query_id", "neighbor_id", "adist2", "rank"
     )
 
 
@@ -1458,126 +1173,25 @@ def l2_topk(
     query_max_id: int,
     top_k: int = 5,
 ) -> DataFrame:
-    """Exact top-k by squared L2 — the recall oracle for the PQ family
-    (which approximates L2, not cosine). Broadcast queries, one corpus
-    scan, per-query WindowGroupLimit rank; ties break on neighbor_id."""
-    from pyspark.sql import Window
-
-    vecs = _valid_vectors(df, vec_col).select(
-        F.col(id_col), _to_double(F.col(vec_col)).alias("__v")
-    )
+    """Exact top-k by squared L2 — the recall ground truth for the PQ
+    family (which approximates L2, not cosine; see :func:`recall_at_k`).
+    Broadcast queries, one corpus scan, per-query WindowGroupLimit rank;
+    ties break on neighbor_id."""
+    vecs = _double_vectors(df, id_col, vec_col, "__v")
     q = vecs.filter(F.col(id_col) < query_max_id).select(
         F.col(id_col).alias("query_id"), F.col("__v").alias("__qv")
-    )
-    d2 = F.expr(
-        "aggregate(zip_with(__qv, __v, (a, b) -> (a - b) * (a - b)), "
-        "0.0D, (acc, x) -> acc + x)"
     )
     scored = (
         F.broadcast(q)
         .join(vecs, F.col(id_col) != F.col("query_id"))
-        .select("query_id", F.col(id_col).alias("neighbor_id"), d2.alias("d2"))
-    )
-    w = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_k)
-        .select("query_id", "neighbor_id", "d2", "rank")
-    )
-
-
-def pq_recall_report(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_max_id: int,
-    top_k: int = 5,
-    m: int = 16,
-    k_per_sub: int = 64,
-) -> DataFrame:
-    """Per-query recall@k of the PQ ADC search against exact L2 — the
-    index-quality dashboard for the compressed-domain family, mirroring
-    ``ann_recall_report`` for the LSH family. Both searches are
-    deterministic, so the recall values themselves hash-check."""
-    pq = pq_topk(
-        df, id_col, vec_col, query_max_id, top_k=top_k, m=m,
-        k_per_sub=k_per_sub,
-    ).select("query_id", "neighbor_id")
-    exact = l2_topk(df, id_col, vec_col, query_max_id, top_k=top_k).select(
-        "query_id", "neighbor_id"
-    )
-    hits = pq.join(exact, ["query_id", "neighbor_id"]).groupBy("query_id").agg(
-        F.count(F.lit(1)).alias("__hits")
-    )
-    base = exact.groupBy("query_id").agg(F.count(F.lit(1)).alias("__k"))
-    return (
-        base.join(hits, "query_id", "left")
         .select(
             "query_id",
-            (
-                F.floor(
-                    F.coalesce(F.col("__hits"), F.lit(0))
-                    / F.col("__k").cast("double")
-                    * 10000
-                    + F.lit(0.5)
-                )
-                / 10000
-            ).alias("recall"),
+            F.col(id_col).alias("neighbor_id"),
+            F.expr(_l2sq_sql("__qv", "__v")).alias("d2"),
         )
     )
-
-
-def ivfpq_recall_report(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_max_id: int,
-    top_k: int = 5,
-    num_clusters: int = 8,
-    n_probe: int = 2,
-    m: int = 16,
-    k_per_sub: int = 64,
-    init: str = "kmeans",
-    residual: bool = False,
-    seed: int = 42,
-) -> DataFrame:
-    """Per-query recall@k of the IVF-PQ search against exact L2 — the
-    quality dashboard for the documented ANN default
-    (``ivfpq_topk(init='kmeans')``). One row per query (query_id, recall)."""
-    approx = ivfpq_topk(
-        df,
-        id_col,
-        vec_col,
-        query_max_id,
-        top_k=top_k,
-        num_clusters=num_clusters,
-        n_probe=n_probe,
-        m=m,
-        k_per_sub=k_per_sub,
-        init=init,
-        residual=residual,
-        seed=seed,
-    ).select("query_id", "neighbor_id")
-    exact = l2_topk(df, id_col, vec_col, query_max_id, top_k=top_k).select(
-        "query_id", "neighbor_id"
-    )
-    hits = (
-        approx.join(exact, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("__hits"))
-    )
-    base = exact.groupBy("query_id").agg(F.count(F.lit(1)).alias("__k"))
-    return base.join(hits, "query_id", "left").select(
-        "query_id",
-        (
-            F.floor(
-                F.coalesce(F.col("__hits"), F.lit(0))
-                / F.col("__k").cast("double")
-                * 10000
-                + F.lit(0.5)
-            )
-            / 10000
-        ).alias("recall"),
+    return _top_k(scored, top_k, F.col("d2"), F.col("neighbor_id")).select(
+        "query_id", "neighbor_id", "d2", "rank"
     )
 
 
@@ -1609,16 +1223,13 @@ def embedding_covariance(
     n*d^2/2 multiply cost of covariance. NULL / wrong-dimension vectors
     are excluded (validate_embeddings is the audit for how many).
     """
-    xs = F.transform(
-        F.col(vec_col),
-        lambda v: F.floor(v.cast("double") * scale + F.lit(0.5)).cast(
-            "bigint"
-        ),
+    vec = F.col(_sql_ident(vec_col))
+    xs = F.expr(
+        f"transform({_sql_ident(vec_col)}, v -> "
+        f"cast(floor(cast(v as double) * {int(scale)} + 0.5D) as bigint))"
     )
     base = (
-        df.filter(
-            F.col(vec_col).isNotNull() & (F.size(vec_col) == dim)
-        )
+        df.filter(vec.isNotNull() & (F.size(vec) == dim))
         .select(xs.alias("__xs"))
     )
     ij = (
@@ -1684,26 +1295,23 @@ def pca_project(
 ) -> DataFrame:
     """Project vectors onto PCA components (from :func:`pca_components`)
     — dimensionality reduction before indexing/visualization. Components
-    ship as plan literals (a few KB), so the projection is a pure
+    ship as one plan literal (a few KB), so the projection is a pure
     scan-stage fold per output dim: no shuffle, no UDF, no broadcast
-    join. Output: (id, proj array<double>) with 4-decimal rounding.
+    join. Output: (id, proj array<double>) with 4-decimal rounding; only
+    vectors of the components' dimension are projected.
     """
-    comp_cols = [
-        F.aggregate(
-            F.zip_with(
-                F.col(vec_col),
-                F.array(*[F.lit(float(w)) for w in comp]),
-                lambda x, w: x.cast("double") * w,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        for comp in components
-    ]
-    return df.filter(
-        F.col(vec_col).isNotNull()
-        & (F.size(vec_col) == len(components[0]))
-    ).select(
-        F.col(id_col),
-        F.array(*[round4_stable(c) for c in comp_cols]).alias("proj"),
+    if not components:
+        raise ValueError("pca_project: no components to project onto")
+    vec = F.col(_sql_ident(vec_col))
+    # the vector is cast once into an internal column: a caller column
+    # referenced inside the lambda below could be shadowed by ``w``
+    dot = _dot_sql("__vec_d", "w")
+    proj = F.expr(
+        f"transform({lit_double_array2_sql(components)}, "
+        f"w -> {ROUND4_SQL.format(expr=dot)})"
+    )
+    return (
+        df.filter(vec.isNotNull() & (F.size(vec) == len(components[0])))
+        .select(F.col(id_col), F.expr(_double_vec_sql(vec_col)).alias("__vec_d"))
+        .select(F.col(id_col), proj.alias("proj"))
     )

@@ -246,19 +246,25 @@ def test_multiprobe_recall_dominates_single_bucket(spark, sf_dir):
     outranks it in the exact one). Assert per-query dominance plus a strict
     improvement somewhere on the real corpus."""
     from feature_store_fraud_detection_spark.operators.similarity import (
-        ann_recall_report,
+        cosine_topk,
+        lsh_topk,
+        multiprobe_lsh_topk,
+        recall_at_k,
     )
     from feature_store_fraud_detection_spark.schemas import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
+    exact = cosine_topk(emb, "vec_id", "embedding", 10)
     single = {
         r["query_id"]: r["recall"]
-        for r in ann_recall_report(emb, "vec_id", "embedding", 10).collect()
+        for r in recall_at_k(
+            exact, lsh_topk(emb, "vec_id", "embedding", 10)
+        ).collect()
     }
     multi = {
         r["query_id"]: r["recall"]
-        for r in ann_recall_report(
-            emb, "vec_id", "embedding", 10, multiprobe=True
+        for r in recall_at_k(
+            exact, multiprobe_lsh_topk(emb, "vec_id", "embedding", 10)
         ).collect()
     }
     assert set(single) == set(multi)
@@ -507,22 +513,32 @@ def test_ivfpq_kmeans_recall_beats_sampled(spark, sf_dir):
     md5-sampled oracle shape on recall — pin the quality floor (measured
     0.70 at sf0.01; sampled m=16 measures ~0.2-0.4)."""
     from feature_store_fraud_detection_spark.operators.similarity import (
-        ivfpq_recall_report,
+        ivfpq_topk,
+        l2_topk,
+        recall_at_k,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
+    exact = l2_topk(emb, "vec_id", "embedding", query_max_id=10)
     km = (
-        ivfpq_recall_report(
-            emb, "vec_id", "embedding", query_max_id=10,
-            num_clusters=8, n_probe=4, m=32, k_per_sub=64, init="kmeans",
+        recall_at_k(
+            exact,
+            ivfpq_topk(
+                emb, "vec_id", "embedding", query_max_id=10,
+                num_clusters=8, n_probe=4, m=32, k_per_sub=64, init="kmeans",
+            ),
         )
         .agg(F.avg("recall").alias("r"))
         .first()["r"]
     )
     sampled = (
-        ivfpq_recall_report(
-            emb, "vec_id", "embedding", query_max_id=10,
-            num_clusters=8, n_probe=2, m=16, k_per_sub=64, init="md5_sample",
+        recall_at_k(
+            exact,
+            ivfpq_topk(
+                emb, "vec_id", "embedding", query_max_id=10,
+                num_clusters=8, n_probe=2, m=16, k_per_sub=64,
+                init="md5_sample",
+            ),
         )
         .agg(F.avg("recall").alias("r"))
         .first()["r"]
@@ -640,36 +656,122 @@ def test_lsh_topk_emits_misuse_warning(spark):
     out.collect()  # the operator still works
 
 
-def test_vector_sql_text_quotes_backticked_column_names(spark):
-    """The parsed-SQL-text builders quote the vector column as ONE
-    identifier: a name with an embedded backtick gives the same results as
-    a plain name, and a plain name renders exactly as before (so its plan
-    is unchanged)."""
+def test_recall_at_k_hand_fixture(spark):
+    """recall_at_k counts per exact query: hits are exact neighbors the
+    approximate set also holds; an approximate query absent from the exact
+    side is ignored; a query the approximate side missed reports 0 / 0 /
+    recall 0; recall is 4-decimal rounded."""
     from feature_store_fraud_detection_spark.operators.similarity import (
-        _nearest_centroid_exprs,
-        _sql_ident,
-        lsh_buckets,
-        with_norm,
+        recall_at_k,
     )
 
-    assert _sql_ident("vec") == "`vec`"
-    assert _sql_ident("v`ec") == "`v``ec`"
-    plain = spark.createDataFrame(
-        [(1, [1.0, 2.0]), (2, [0.0, 0.0]), (3, [3.0, -1.0]), (4, None)],
-        "id long, vec array<float>",
+    schema = "query_id long, neighbor_id long"
+    exact = spark.createDataFrame(
+        [(1, 10), (1, 11), (1, 12), (2, 20), (2, 21), (3, 30)], schema
     )
-    ticked = plain.withColumnRenamed("vec", "v`ec")
+    approx = spark.createDataFrame(
+        [(1, 10), (1, 12), (1, 99), (2, 22), (4, 40)], schema
+    ).withColumn("rank", F.lit(1))  # extra columns are ignored
+    out = recall_at_k(exact, approx)
+    assert out.columns == ["query_id", "n_exact", "n_approx", "n_hit", "recall"]
+    assert {tuple(r) for r in out.collect()} == {
+        (1, 3, 3, 2, 0.6667),
+        (2, 2, 1, 0, 0.0),
+        (3, 1, 0, 0, 0.0),
+    }
+
+
+def test_ann_shape_checks_raise_named_errors(spark):
+    """A product quantizer whose m does not divide the dimension, and a
+    PCA projection with no components, fail loud with the operator's name
+    instead of silently dropping components / raising a bare IndexError."""
+    import pytest
+
+    from feature_store_fraud_detection_spark.operators.similarity import (
+        ivfpq_topk,
+        pca_project,
+        pq_topk,
+    )
+
+    df = spark.createDataFrame(
+        [(i, [float(i + d) for d in range(6)]) for i in range(12)],
+        "vec_id long, embedding array<float>",
+    )
+    for fn, name, kw in (
+        (pq_topk, "pq_topk", dict(k_per_sub=4)),
+        (ivfpq_topk, "ivfpq_topk", dict(num_clusters=2, k_per_sub=4)),
+    ):
+        with pytest.raises(ValueError, match=rf"{name}: dim 6 .*m=4"):
+            fn(df, "vec_id", "embedding", 3, m=4, **kw)
+    with pytest.raises(ValueError, match="pca_project: "):
+        pca_project(df, "vec_id", "embedding", [])
+
+
+def test_vector_sql_text_quotes_backticked_column_names(spark):
+    """Every vector operator quotes the vector column as ONE identifier: a
+    name with a dot or an embedded backtick, or one equal to a lambda
+    variable of the rendered SQL (``w``), gives the same results as a
+    plain name, and a plain name renders exactly as before (so its plan
+    is unchanged)."""
+    import warnings
+
+    from feature_store_fraud_detection_spark.operators import similarity as S
+
+    assert S._sql_ident("vec") == "`vec`"
+    assert S._sql_ident("v`ec") == "`v``ec`"
+    rng = np.random.default_rng(5)
+    rows = [
+        (i, [float(x) for x in rng.normal(0, 1, 4)], i % 3) for i in range(24)
+    ]
+    rows += [(90, [0.0, 0.0, 0.0, 0.0], 0), (91, None, 1), (92, [], 2)]
+    plain = spark.createDataFrame(rows, "id long, vec array<float>, label int")
 
     def canon(df):
         return sorted(map(tuple, df.collect()), key=repr)
 
     def centroids(df, col):
-        d2s, cluster = _nearest_centroid_exprs([[0.0, 0.0], [2.0, 1.0]], col)
-        return df.filter(F.col("id") != 4).select("id", d2s.alias("d2s"), cluster.alias("cl"))
+        d2s, cluster = S._nearest_centroid_sql(
+            [[0.0, 0.0, 0.0, 0.0], [2.0, 1.0, 0.0, -1.0]], col
+        )
+        return df.filter(F.col("id") < 90).select(
+            "id", F.expr(d2s).alias("d2s"), F.expr(cluster).alias("cl")
+        )
 
-    for build in (
-        lambda df, col: with_norm(df, "id", col),
-        lambda df, col: lsh_buckets(df, "id", col, num_planes=4, dim=2),
-        centroids,
-    ):
-        assert canon(build(ticked, "v`ec")) == canon(build(plain, "vec"))
+    comps = [[0.5, 0.5, 0.5, 0.5], [1.0, 0.0, 0.0, 0.0]]
+    builds = {
+        "with_norm": lambda df, c: S.with_norm(df, "id", c, "label"),
+        "nearest_centroid": centroids,
+        "cosine_topk": lambda df, c: S.cosine_topk(df, "id", c, 4),
+        "l2_topk": lambda df, c: S.l2_topk(df, "id", c, 4),
+        "lsh_buckets": lambda df, c: S.lsh_buckets(df, "id", c, num_planes=4),
+        "lsh_topk": lambda df, c: S.lsh_topk(df, "id", c, 4, num_planes=2),
+        "multiprobe_lsh_topk": lambda df, c: S.multiprobe_lsh_topk(
+            df, "id", c, 4, num_planes=2
+        ),
+        "ivf_topk": lambda df, c: S.ivf_topk(
+            df, "id", c, 4, num_clusters=3, init="md5_sample"
+        ),
+        "label_centroids": lambda df, c: S.label_centroids(df, "label", c),
+        "sq8_quantize": lambda df, c: S.sq8_quantize(df, "id", c),
+        "sq8_topk": lambda df, c: S.sq8_topk(df, "id", c, 4),
+        "knn_classify": lambda df, c: S.knn_classify(
+            df, "id", c, "label", 4, k=3
+        ),
+        "hard_negatives": lambda df, c: S.hard_negatives(
+            df, "id", c, "label", 4
+        ),
+        "pq_topk": lambda df, c: S.pq_topk(df, "id", c, 4, m=2, k_per_sub=4),
+        "ivfpq_topk": lambda df, c: S.ivfpq_topk(
+            df, "id", c, 4, num_clusters=3, m=2, k_per_sub=4
+        ),
+        "embedding_covariance": lambda df, c: S.embedding_covariance(df, c, 4),
+        "pca_project": lambda df, c: S.pca_project(df, "id", c, comps),
+    }
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")  # lsh_topk's recall warning
+        for name, build in builds.items():
+            want = canon(build(plain, "vec"))
+            assert want, name
+            for col in ("v.ec", "v`ec", "w"):
+                renamed = plain.withColumnRenamed("vec", col)
+                assert canon(build(renamed, col)) == want, (name, col)

@@ -14,9 +14,10 @@ from pyspark.sql import Window
 
 
 def test_hyperplanes_literal_matches_md5_chain(spark):
-    """The driver-side hyperplane constants must equal the per-row md5
-    nibble expression for every (plane, dim) — and the two bucket_expr
-    forms must emit identical bucket strings on real vectors."""
+    """The driver-side hyperplane constants must equal the engine-side md5
+    nibble expression for every (plane, dim) — and bucket_expr must emit,
+    on real vectors, the sign bits of a Python sequential left-fold over
+    those constants (same IEEE operation order, so bit-identical)."""
     from feature_store_fraud_detection_spark.operators.similarity import (
         bucket_expr,
         hyperplane_value,
@@ -37,20 +38,30 @@ def test_hyperplanes_literal_matches_md5_chain(spark):
         for d in range(dim):
             assert lit[p][d] == row[f"h_{p}_{d}"], (p, d)
 
-    # buckets: literal-planes form vs md5-chain form, bit-identical
-    vecs = spark.createDataFrame(
-        [
-            (i, [((i * 7 + j * 13) % 11 - 5.0) / 3.0 for j in range(dim)])
-            for i in range(50)
-        ],
-        "id bigint, v array<double>",
-    )
-    got = vecs.select(
-        "id",
-        bucket_expr(F.col("v"), num_planes, lit).alias("b_lit"),
-        bucket_expr(F.col("v"), num_planes, None).alias("b_md5"),
-    ).collect()
-    assert all(r["b_lit"] == r["b_md5"] for r in got)
+    # buckets: engine fold vs Python sequential left-fold
+    vecs = [
+        (i, [((i * 7 + j * 13) % 11 - 5.0) / 3.0 for j in range(dim)])
+        for i in range(50)
+    ]
+    got = {
+        r["id"]: r["b"]
+        for r in spark.createDataFrame(vecs, "id bigint, v array<double>")
+        .select("id", bucket_expr("v", lit).alias("b"))
+        .collect()
+    }
+
+    def fold(v, h):
+        acc = 0.0
+        for x, y in zip(v, h):
+            acc = acc + x * y
+        return acc
+
+    want = {
+        i: "".join("1" if fold(v, h) > 0 else "0" for h in lit)
+        for i, v in vecs
+    }
+    assert got == want
+    assert len(set(want.values())) > 1  # the planes split this set
 
 
 def test_nearest_centroid_exprs_match_crossjoin_window(spark):
@@ -58,7 +69,7 @@ def test_nearest_centroid_exprs_match_crossjoin_window(spark):
     crossJoin + row_number formulation: same winners, same probe sets,
     including (distance, cluster-id) tie-breaks."""
     from feature_store_fraud_detection_spark.operators.similarity import (
-        _nearest_centroid_exprs,
+        _nearest_centroid_sql,
         _nearest_probes_expr,
     )
 
@@ -69,10 +80,10 @@ def test_nearest_centroid_exprs_match_crossjoin_window(spark):
         [(i, [(i % 5) / 2.0, ((i * 3) % 7) / 3.0]) for i in range(40)],
         "id bigint, v array<double>",
     )
-    d2s, cluster = _nearest_centroid_exprs(cents, "v")
+    d2s, cluster = _nearest_centroid_sql(cents, "v")
     got = vecs.select(
         "id",
-        cluster.alias("cl"),
+        F.expr(cluster).alias("cl"),
         F.transform(
             _nearest_probes_expr(d2s, 3), lambda s: s["cluster"]
         ).alias("probes"),
@@ -332,17 +343,20 @@ def test_rank_family_persists_preserve_results(spark):
 
 
 def test_literal_text_arrays_bit_identical(spark):
-    """lit_bigint_array / lit_double_array2 (r12: one expression string
+    """lit_bigint_array / lit_double_array2_sql (r12: one expression string
     instead of a py4j round-trip per element) must produce BIT-IDENTICAL
-    values to the F.lit path — including LONG_MIN/LONG_MAX words and
-    shortest-repr doubles."""
+    values to the F.lit path — including LONG_MIN/LONG_MAX words,
+    shortest-repr doubles, NaN, infinities, negative zero and empty
+    rows."""
+    import math
     import struct
 
     from feature_store_fraud_detection_spark.functions.numeric import (
         lit_bigint_array,
-        lit_double_array2,
+        lit_double_array2_sql,
     )
 
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
     words = [0, 1, -1, (1 << 63) - 1, -(1 << 63), 123456789012345678]
     row = (
         spark.range(1)
@@ -354,20 +368,26 @@ def test_literal_text_arrays_bit_identical(spark):
     )
     assert row["a"] == row["b"] == words
 
-    rows = [[0.1, -7.5, 3.141592653589793], [1e-300, -0.0, 2.5e17]]
-    got = (
-        spark.range(1)
-        .select(
-            lit_double_array2(rows).alias("a"),
-            F.lit([[float(x) for x in r] for r in rows]).alias("b"),
+    def bits(x):
+        return struct.pack("d", x)
+
+    for rows in (
+        [[0.1, -7.5, 3.141592653589793], [1e-300, -0.0, 2.5e17]],
+        [[math.nan, math.inf, -math.inf], [-0.0, 0.0], []],
+        [[], []],
+    ):
+        got = (
+            spark.range(1)
+            .select(
+                F.expr(lit_double_array2_sql(rows)).alias("a"),
+                F.lit([[float(x) for x in r] for r in rows]).alias("b"),
+            )
+            .first()
         )
-        .first()
-    )
-    for ra, rb, rr in zip(got["a"], got["b"], rows):
-        for xa, xb, xr in zip(ra, rb, rr):
-            assert struct.pack("d", xa) == struct.pack("d", xb) == struct.pack("d", xr)
-    # degenerate shapes fall back to the F.lit path unchanged
-    assert (
-        spark.range(1).select(lit_double_array2([]).alias("a")).first()["a"]
-        == []
-    )
+        assert [len(r) for r in got["a"]] == [len(r) for r in rows]
+        for ra, rb, rr in zip(got["a"], got["b"], rows):
+            for xa, xb, xr in zip(ra, rb, rr):
+                assert bits(xa) == bits(xb) == bits(xr), (xa, xb, xr)
+    empty = spark.range(1).select(F.expr(lit_double_array2_sql([])).alias("a"))
+    assert empty.first()["a"] == []
+    assert empty.schema["a"].dataType.simpleString() == "array<array<double>>"
