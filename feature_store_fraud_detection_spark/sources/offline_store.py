@@ -11,7 +11,10 @@ Scale design:
 - optional bucketing by key (saveAsTable) -> the per-key serving lookup (P4)
   and key-key joins avoid a shuffle entirely;
 - append/overwrite modes; "clear" (reference S11 delete_many) is overwrite
-  with an empty frame, kept as a table op rather than row deletes.
+  with an empty frame, kept as a table op rather than row deletes;
+- every rewrite commits through ``sources/readers``' ``write_partitions`` or
+  ``overwrite_partitions``, which keep the table readable when no row is
+  left and bump the table version the serving reads resolve against.
 """
 
 from __future__ import annotations
@@ -19,14 +22,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from feature_store_fraud_detection_spark.lineage import checkpointed
 from feature_store_fraud_detection_spark.operators.relational import (
     point_lookup,
     range_scan,
 )
 from feature_store_fraud_detection_spark.sources.readers import (
     ResolvedTable,
-    mutates_table,
+    overwrite_partitions,
+    write_partitions,
 )
 
 PARTITION_COL = "feature_date"
@@ -41,10 +44,11 @@ class OfflineStore:
     read costs no directory listing or footer-schema job. Each mutating
     method (``write``, ``append``, ``backfill``, ``compact``,
     ``delete_keys``, ``clear``) bumps the path's version when it finishes,
-    so the next read through ANY store object on this path in this process
-    sees the write. A writer in another process is not seen: this object
-    keeps serving the listing it resolved (out of scope; build a new store
-    object to pick such a write up).
+    and leaves a readable (possibly empty) table, so the next read through
+    ANY store object on this path in this process sees the write. A
+    writer in another process is not seen: this object keeps serving the
+    listing it resolved (out of scope; build a new store object to pick
+    such a write up).
     """
 
     def __init__(
@@ -64,7 +68,6 @@ class OfflineStore:
 
     # -- write path ---------------------------------------------------------
 
-    @mutates_table
     def write(
         self,
         features: DataFrame,
@@ -77,45 +80,19 @@ class OfflineStore:
         parquet row-group min/max stats become selective — point lookups
         then skip most row groups inside each date partition, the poor
         man's clustering when bucketing's catalog dependency is unwanted.
+
+        A write that leaves no row (an empty frame onto a missing table, or
+        an empty overwrite) leaves a schema-only file, so ``read`` returns
+        an empty frame; an empty append onto a table adds nothing.
         """
         df = features.withColumn(PARTITION_COL, F.to_date(F.col(self.ts_col)))
-        if df.isEmpty():
-            # a PARTITIONED write of zero rows leaves no part files at
-            # all (only _SUCCESS), so a later read() cannot infer the
-            # schema (round-11 empty-one-side probe). A plain empty
-            # write leaves a readable schema footer — same trick as
-            # clear(). isEmpty() is a take(1): negligible next to the
-            # write it guards.
-            #
-            # But only when the table does not already exist: an empty
-            # APPEND onto an existing partitioned table would drop a
-            # flat part file (with feature_date as a physical column)
-            # at the table root, next to feature_date=... directories —
-            # Spark's partition discovery then fails on the next read()
-            # with "conflicting directory structures". Existing table +
-            # empty frame = no-op (same rule as backfill()).
-            if mode == "append":
-                try:
-                    self.read()
-                    return  # table already readable; nothing to add
-                except Exception:  # noqa: BLE001 — missing/footerless path
-                    pass
-            empty = self.spark.createDataFrame([], df.schema)
-            empty.write.mode(mode).parquet(self.path)
-            return
         if sort_cols:
             df = df.sortWithinPartitions(*sort_cols)
-        (
-            df.write.mode(mode)
-            .option("compression", self.compression)
-            .partitionBy(PARTITION_COL)
-            .parquet(self.path)
-        )
+        write_partitions(df, self.path, PARTITION_COL, mode, self.compression)
 
     def append(self, features: DataFrame) -> None:
         self.write(features, mode="append")
 
-    @mutates_table
     def backfill(self, features: DataFrame) -> None:
         """Incremental backfill: overwrite ONLY the date partitions present
         in ``features`` (dynamic partition overwrite), leaving every other
@@ -123,25 +100,12 @@ class OfflineStore:
         a 100 TB feature table maintainable — re-running one day rewrites
         one directory, not the table. Plain ``mode("overwrite")`` without
         the option would drop ALL partitions first (the reference's
-        equivalent is delete-everything-then-reinsert)."""
+        equivalent is delete-everything-then-reinsert). An empty
+        ``features`` changes nothing, and onto a missing table leaves a
+        readable empty one."""
         df = features.withColumn(PARTITION_COL, F.to_date(F.col(self.ts_col)))
-        if df.isEmpty():
-            # nothing to overwrite; but if the table doesn't exist yet,
-            # leave a readable empty footer instead of nothing (the
-            # empty-one-side probe's read()-after-backfill case)
-            try:
-                self.read()
-            except Exception:  # noqa: BLE001 — missing/footerless path
-                empty = self.spark.createDataFrame([], df.schema)
-                empty.write.mode("overwrite").parquet(self.path)
-            return
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .option("compression", self.compression)
-            .partitionBy(PARTITION_COL)
-            .parquet(self.path)
-        )
+        overwrite_partitions(df, self.path, PARTITION_COL,
+                             compression=self.compression)
 
     def write_bucketed(
         self,
@@ -164,7 +128,6 @@ class OfflineStore:
             .saveAsTable(table_name)
         )
 
-    @mutates_table
     def compact(self, sort_cols: list[str] | None = None) -> None:
         """Rewrite the table so each date partition holds ONE file (small-
         file compaction — the maintenance op that keeps a long-lived 100 TB
@@ -177,36 +140,26 @@ class OfflineStore:
         At real scale, run per date range (``by_date_range`` + ``backfill``)
         instead of whole-table, and raise the per-date file count by adding
         a salt column to the repartition when one day exceeds a task.
-
-        The read is materialized (``localCheckpoint``) before the write —
-        Spark refuses to overwrite a path it is still lazily reading from;
-        a cluster job would stage into executor-local blocks the same way
-        (or write to a sibling dir and swap).
         """
-        with checkpointed(self.read().repartition(F.col(PARTITION_COL))) as df:
-            if sort_cols:
-                df = df.sortWithinPartitions(*sort_cols)
-            (
-                df.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .option("compression", self.compression)
-                .partitionBy(PARTITION_COL)
-                .parquet(self.path)
-            )
+        df = self.read().repartition(F.col(PARTITION_COL))
+        if sort_cols:
+            df = df.sortWithinPartitions(*sort_cols)
+        overwrite_partitions(df, self.path, PARTITION_COL,
+                             compression=self.compression)
 
-    @mutates_table
     def delete_keys(self, key_col: str, values: list) -> None:
         """Targeted key deletion (the right-to-be-forgotten op): rewrite
         ONLY the date partitions that contain the keys, anti-joined against
         the deletion set, via dynamic partition overwrite — every other
-        partition's files are untouched. Cost is proportional to the
-        partitions the keys appear in, not the table (at 100 TB: one user's
-        history lives in a few hundred daily directories, not 36,000).
+        partition's files are untouched, and a partition left with no row
+        is deleted. Cost is proportional to the partitions the keys appear
+        in, not the table (at 100 TB: one user's history lives in a few
+        hundred daily directories, not 36,000). Deleting every key leaves a
+        readable empty table.
 
-        The touched-partition read is materialized (localCheckpoint) before
-        overwriting the same path, like ``compact``. On a lakehouse this is
-        a Delta DELETE; the partition-surgical rewrite here is the same
-        physical plan Delta executes without the transaction log.
+        On a lakehouse this is a Delta DELETE; the partition-surgical
+        rewrite here is the same physical plan Delta executes without the
+        transaction log.
         """
         df = self.read()
         touched = [
@@ -221,34 +174,11 @@ class OfflineStore:
         # keep predicate must be NULL-safe: ~isin(values) evaluates to NULL
         # (not true) for NULL keys, which would silently drop NULL-key rows
         # that merely share a partition with a deleted key.
-        with checkpointed(
-            df.filter(F.col(PARTITION_COL).isin(touched)).filter(
-                F.col(key_col).isNull() | ~F.col(key_col).isin(values)
-            )
-        ) as remaining:
-            (
-                remaining.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .option("compression", self.compression)
-                .partitionBy(PARTITION_COL)
-                .parquet(self.path)
-            )
-            # dynamic overwrite only replaces partitions PRESENT in the
-            # written data — a partition whose every row was deleted
-            # produces no rows and would silently keep its old files. Drop
-            # those directories explicitly (Hadoop FS API, so the same code
-            # runs on HDFS/S3A).
-            kept = {
-                r[0]
-                for r in remaining.select(PARTITION_COL).distinct().collect()
-            }
-        jvm = self.spark._jvm
-        conf = self.spark._jsc.hadoopConfiguration()
-        for p in set(touched) - kept:
-            hpath = jvm.org.apache.hadoop.fs.Path(
-                f"{self.path}/{PARTITION_COL}={p}"
-            )
-            hpath.getFileSystem(conf).delete(hpath, True)
+        remaining = df.filter(F.col(PARTITION_COL).isin(touched)).filter(
+            F.col(key_col).isNull() | ~F.col(key_col).isin(values)
+        )
+        overwrite_partitions(remaining, self.path, PARTITION_COL, touched,
+                             self.compression)
 
     def read_merged_schema(self) -> DataFrame:
         """Schema-evolution read: union the footers of every file so rows
@@ -256,16 +186,16 @@ class OfflineStore:
         evolution on plain parquet; renames/drops need a rewrite)."""
         return self.spark.read.option("mergeSchema", "true").parquet(self.path)
 
-    @mutates_table
     def clear(self) -> None:
         """Reference S11 (``feature.py:20-23`` delete_many with no filter):
-        drop all rows — overwrite the table with an empty frame. The schema
-        is captured first (a fresh empty frame, not a self-referential
-        limit(0) read, which Spark refuses to overwrite); no partitionBy so
-        the empty write still leaves a readable schema footer."""
-        schema = self.read().schema
-        empty = self.spark.createDataFrame([], schema)
-        empty.write.mode("overwrite").parquet(self.path)
+        drop all rows — overwrite the table with an empty frame of its
+        schema, which leaves a readable schema-only file. The frame is
+        built fresh, not as a ``limit(0)`` read of the table: the static
+        overwrite deletes the files before its job runs, and a lazy read of
+        them would then fail."""
+        empty = self.spark.createDataFrame([], self.read().schema)
+        write_partitions(empty, self.path, PARTITION_COL, "overwrite",
+                         self.compression)
 
     # -- read / serving path ------------------------------------------------
 

@@ -35,7 +35,8 @@ from feature_store_fraud_detection_spark.lineage import checkpointed
 from feature_store_fraud_detection_spark.operators.windows import latest_n_per_key
 from feature_store_fraud_detection_spark.sources.readers import (
     ResolvedTable,
-    mutates_table,
+    overwrite_partitions,
+    path_exists,
 )
 
 BUCKET_COL = "__kb"
@@ -83,14 +84,6 @@ def upsert_latest_state(
     return latest
 
 
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    """Hadoop-FS existence probe — works for any scheme Spark can read."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
-
-
 class ParquetOnlineStore:
     """Durable keyed latest-state table over bucket-partitioned parquet.
 
@@ -102,12 +95,14 @@ class ParquetOnlineStore:
     2. reads ONLY those buckets of the existing state (partition pruning on
        the bucket column);
     3. merges latest-per-key + retention via :func:`upsert_latest_state`;
-    4. rewrites ONLY the touched buckets with dynamic partition overwrite.
+    4. rewrites ONLY the touched buckets with dynamic partition overwrite
+       (``readers.overwrite_partitions``), deleting a touched bucket whose
+       every row expired.
 
     State volume per upsert is |keys in touched buckets|, independent of
-    total state size; nothing materializes on the driver. ``localCheckpoint``
-    before the write breaks the plan's lineage to the path being
-    overwritten (Spark refuses a self-overwriting scan otherwise).
+    total state size; nothing materializes on the driver. Retention only
+    ages out rows of the touched buckets: an untouched bucket keeps its
+    rows until a batch touches it.
 
     Every reader and writer of a path must use the same ``num_buckets``:
     the bucket a key lives in is a function of it, so an upsert with a
@@ -117,10 +112,11 @@ class ParquetOnlineStore:
     Freshness: :meth:`read` is built from one resolved relation per table
     version, so a read costs no directory listing or footer-schema job.
     ``upsert`` and ``delete_keys`` bump the path's version when they finish,
-    so the next read through ANY store object or ``OnlineStoreSink`` on
-    this path in this process sees the write. A writer in another process
-    is not seen: this object keeps serving the listing it resolved (out of
-    scope; build a new store object to pick such a write up).
+    and leave a readable (possibly empty) table, so the next read through
+    ANY store object or ``OnlineStoreSink`` on this path in this process
+    sees the write. A writer in another process is not seen: this object
+    keeps serving the listing it resolved (out of scope; build a new store
+    object to pick such a write up).
     """
 
     def __init__(
@@ -155,7 +151,7 @@ class ParquetOnlineStore:
         return df.withColumn(BUCKET_COL, self._bucket())
 
     def exists(self) -> bool:
-        return _path_exists(self.spark, self.path)
+        return path_exists(self.spark, self.path)
 
     def read(self) -> DataFrame:
         """Full state scan (serving S12 'all keys'), from the relation
@@ -170,7 +166,6 @@ class ParquetOnlineStore:
         scans one bucket's files instead of all of them."""
         return self._table.frame()
 
-    @mutates_table
     def upsert(self, batch: DataFrame) -> None:
         # materialize the batch ONCE: in a foreachBatch sink the incoming
         # frame is backed by the stateful aggregation, and every separate
@@ -183,17 +178,14 @@ class ParquetOnlineStore:
             touched = [r[0] for r in b.select(BUCKET_COL).distinct().collect()]
             if not touched:
                 return
+            cur = None
             if self.exists():
                 cur = self.spark.read.parquet(self.path).filter(
                     F.col(BUCKET_COL).isin(touched)
                 )
-                merged = upsert_latest_state(
-                    cur, b, self.key, self.ts, self.retention_seconds, self.tiebreak
-                )
-            else:
-                merged = upsert_latest_state(
-                    None, b, self.key, self.ts, self.retention_seconds, self.tiebreak
-                )
+            merged = upsert_latest_state(
+                cur, b, self.key, self.ts, self.retention_seconds, self.tiebreak
+            )
             # cluster by the partition column BEFORE the partitioned write
             # (guide §6): without it every merge task holds rows of MANY
             # buckets, so each touched bucket directory collects one file
@@ -201,23 +193,24 @@ class ParquetOnlineStore:
             # by every later upsert of that bucket); keyed on __kb each
             # bucket lands in exactly one task — one file per touched
             # bucket. Same rows, same merge semantics; r12 optimization.
-            with checkpointed(merged.repartition(F.col(BUCKET_COL))) as staged:
-                (
-                    staged.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy(BUCKET_COL)
-                    .parquet(self.path)
-                )
+            # Only retention can empty a touched bucket (without it every
+            # touched bucket keeps its batch rows), so only then is the
+            # commit asked to check for emptied buckets.
+            overwrite_partitions(
+                merged.repartition(F.col(BUCKET_COL)), self.path, BUCKET_COL,
+                touched if self.retention_seconds is not None else (),
+            )
 
-    @mutates_table
     def delete_keys(self, values: list) -> None:
         """Targeted key deletion on the SERVING state (the online half of
         the right-to-be-forgotten op — ``OfflineStore.delete_keys`` handles
         the history; this clears what ``point_lookup``/``stream_latest_state``
         serve). Rewrites ONLY the key buckets the deleted keys hash into,
-        anti-filtered NULL-safely, via dynamic partition overwrite — cost is
-        |touched buckets| of state, independent of table size (Redis DEL /
-        Delta DELETE analog on bucket-partitioned parquet)."""
+        anti-filtered NULL-safely, via dynamic partition overwrite, and
+        deletes a bucket left with no row — cost is |touched buckets| of
+        state, independent of table size (Redis DEL / Delta DELETE analog on
+        bucket-partitioned parquet). Deleting every key leaves a readable
+        empty table, which later upserts merge into."""
         if not values or not self.exists():
             return
         state = self.spark.read.parquet(self.path)
@@ -231,24 +224,7 @@ class ParquetOnlineStore:
         ]
         # NULL-safe keep predicate: ~isin evaluates to NULL for NULL keys,
         # which would silently drop NULL-key rows sharing a bucket
-        with checkpointed(
-            state.filter(F.col(BUCKET_COL).isin(touched)).filter(
-                F.col(self.key).isNull() | ~F.col(self.key).isin(values)
-            )
-        ) as remaining:
-            (
-                remaining.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(BUCKET_COL)
-                .parquet(self.path)
-            )
-            # dynamic overwrite only replaces buckets PRESENT in the written
-            # data — a bucket whose every key was deleted would silently
-            # keep its old files; drop those directories explicitly (same
-            # FS-API cleanup as OfflineStore.delete_keys).
-            kept = {r[0] for r in remaining.select(BUCKET_COL).distinct().collect()}
-        jvm = self.spark._jvm
-        conf = self.spark._jsc.hadoopConfiguration()
-        for b in set(touched) - kept:
-            hpath = jvm.org.apache.hadoop.fs.Path(f"{self.path}/{BUCKET_COL}={b}")
-            hpath.getFileSystem(conf).delete(hpath, True)
+        remaining = state.filter(F.col(BUCKET_COL).isin(touched)).filter(
+            F.col(self.key).isNull() | ~F.col(self.key).isin(values)
+        )
+        overwrite_partitions(remaining, self.path, BUCKET_COL, touched)

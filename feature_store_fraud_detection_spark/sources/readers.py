@@ -11,21 +11,22 @@ directory of part files natively).
 The stores (``offline_store``, ``online_store``) resolve their parquet table
 once per *table version* (:class:`ResolvedTable`) instead of once per read:
 resolving lists the directory tree and infers the schema from footers, which
-dominated a point get's latency. A version is a per-path generation counter
-that every store mutation bumps (:func:`mutates_table`), so any store object
-or sink in this process sees a write on its next read. A writer in another
-process bumps nothing and is not seen.
+dominated a point get's latency. A version is a per-path generation counter.
+Every store rewrite commits through :func:`write_partitions` or
+:func:`overwrite_partitions`, which bump it when they finish, so any store
+object or sink in this process sees a write on its next read. A writer in
+another process bumps nothing and is not seen.
 """
 
 from __future__ import annotations
 
-import functools
 import threading
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from feature_store_fraud_detection_spark.lineage import checkpointed
 from feature_store_fraud_detection_spark.schemas import TRANSACTIONS_SCHEMA
 
 _generations: dict[str, int] = {}
@@ -37,26 +38,104 @@ def _table_key(path: str) -> str:
 
 
 def table_generation(path: str) -> int:
-    """How many store mutations of ``path`` this process has finished."""
+    """How many store commits of ``path`` this process has finished."""
     return _generations.get(_table_key(path), 0)
 
 
-def mutates_table(method):
-    """Decorate a store method that rewrites the table at ``self.path``: the
-    path's generation is bumped once the method returns or raises (a failed
-    write may still have replaced files), so every resolved frame of the
-    path is re-resolved on its next read."""
+def bump_generation(path: str) -> None:
+    """Mark ``path`` rewritten: every resolved frame of it is re-resolved on
+    its next read. Called by the commit functions below once their write
+    returns or raises (a failed write may still have replaced files)."""
+    key = _table_key(path)
+    with _generations_lock:
+        _generations[key] = _generations.get(key, 0) + 1
 
-    @functools.wraps(method)
-    def wrapper(self, *args, **kwargs):
-        try:
-            return method(self, *args, **kwargs)
-        finally:
-            key = _table_key(self.path)
-            with _generations_lock:
-                _generations[key] = _generations.get(key, 0) + 1
 
-    return wrapper
+def _fs_path(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` of ``path`` through the Hadoop FS API, so the
+    same code runs on local disk, HDFS and S3A."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    fs, hpath = _fs_path(spark, path)
+    return bool(fs.exists(hpath))
+
+
+def _stay_readable(spark: SparkSession, path: str, part_col: str,
+                   schema: T.StructType) -> None:
+    """Leave ``path`` readable after a commit: when the root lists no
+    ``part_col=`` directory and no data file (a partitioned write of zero
+    rows leaves only ``_SUCCESS``, and deleting the last partitions leaves
+    nothing), append one schema-only file, so a read returns an empty frame
+    of ``schema`` instead of failing to infer one. The file sits at the
+    root beside any partition directories a later write adds; Spark reads
+    that layout."""
+    fs, root = _fs_path(spark, path)
+    if fs.exists(root):
+        for status in fs.listStatus(root):
+            name = status.getPath().getName()
+            if (name.startswith(f"{part_col}=") if status.isDirectory()
+                    else not name.startswith(("_", "."))):
+                return
+    spark.createDataFrame([], schema).write.mode("append").parquet(path)
+
+
+def _writer(df: DataFrame, part_col: str, compression: str | None):
+    writer = df.write.partitionBy(part_col)
+    return writer.option("compression", compression) if compression else writer
+
+
+def write_partitions(df: DataFrame, path: str, part_col: str, mode: str,
+                     compression: str | None = None) -> None:
+    """Commit ``df`` to the parquet table at ``path``, partitioned by
+    ``part_col``, with a plain save ``mode`` (``overwrite`` replaces the
+    table, ``append`` adds files), and keep the table readable. With
+    ``overwrite``, ``df`` must not read ``path`` lazily: the overwrite
+    deletes the table's files before its job reads them."""
+    try:
+        _writer(df, part_col, compression).mode(mode).parquet(path)
+        _stay_readable(df.sparkSession, path, part_col, df.schema)
+    finally:
+        bump_generation(path)
+
+
+def overwrite_partitions(df: DataFrame, path: str, part_col: str,
+                         touched=(), compression: str | None = None) -> None:
+    """Commit ``df`` as the new content of the ``part_col`` partitions it
+    holds (dynamic partition overwrite: every other partition keeps its
+    files), delete each ``touched`` partition ``df`` no longer holds, and
+    keep the table readable.
+
+    Dynamic overwrite only replaces the partitions present in the written
+    rows, so a partition whose every row was deleted or expired would keep
+    its old files; callers name the partitions they rewrote in ``touched``.
+
+    ``df`` is checkpointed first: with ``touched`` it is read twice (the
+    write and the kept-partition collect), and a foreachBatch frame must
+    not be re-evaluated. Reading the target path lazily would be safe: the
+    dynamic write stages its files and replaces partitions only after the
+    job has read its input."""
+    spark = df.sparkSession
+    try:
+        with checkpointed(df) as staged:
+            (
+                _writer(staged, part_col, compression)
+                .mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .parquet(path)
+            )
+            kept = (
+                {r[0] for r in staged.select(part_col).distinct().collect()}
+                if touched else set()
+            )
+        for value in set(touched) - kept:
+            fs, hpath = _fs_path(spark, f"{path}/{part_col}={value}")
+            fs.delete(hpath, True)
+        _stay_readable(spark, path, part_col, df.schema)
+    finally:
+        bump_generation(path)
 
 
 class ResolvedTable:

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from feature_store_fraud_detection_spark.functions.geo import haversine_miles
 from feature_store_fraud_detection_spark.lineage import checkpointed
 from feature_store_fraud_detection_spark.schemas import STREAM_EVENT_SCHEMA
+from feature_store_fraud_detection_spark.sources.readers import overwrite_partitions
 
 # Reference window geometry (pipeline.py:61,66) — kept, but event-time.
 COUNT_WINDOW = ("2 minutes", "20 seconds")
@@ -337,21 +338,17 @@ class IdempotentBatchSink:
     partitioned parquet.)
 
     Scale: each micro-batch touches only its own partition; no read-back,
-    no state, no driver materialization.
+    no state, no driver materialization. The batch is evaluated once (no
+    emptiness probe): an empty batch writes no partition, and an empty
+    first batch leaves a readable empty table.
     """
 
     def __init__(self, path: str):
         self.path = path
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.path)
+        overwrite_partitions(
+            batch_df.withColumn("batch_id", F.lit(batch_id)), self.path, "batch_id"
         )
 
     def read(self, spark) -> DataFrame:

@@ -677,8 +677,6 @@ def test_gdpr_delete_spans_offline_and_online_stores(spark, tmp_path):
 
     off = OfflineStore(spark, str(tmp_path / "off"), ts_col="ts")
     off.write(df)
-    # num_buckets=1 forces the deleted key to share (and then empty) checks:
-    # with every key in one bucket the anti-filter must keep 2 and NULL
     on = ParquetOnlineStore(
         spark, str(tmp_path / "on"), key="user_id", ts="ts",
         retention_seconds=None, num_buckets=4,
@@ -695,12 +693,10 @@ def test_gdpr_delete_spans_offline_and_online_stores(spark, tmp_path):
     assert served.filter(F.col("user_id") == 2).count() == 1
     assert served.filter(F.col("user_id").isNull()).count() == 1
 
-    # deleting every remaining key leaves a readable-empty store, not stale
-    # parquet: the emptied buckets' directories are dropped explicitly
+    # deleting every remaining key drops its emptied bucket; the NULL-key
+    # row (which no delete can name) is all the store serves
     on.delete_keys([2])
-    left = on.read() if on.exists() else None
-    if left is not None:
-        assert left.filter(F.col("user_id") == 2).count() == 0
+    assert [r.user_id for r in on.read().collect()] == [None]
 
 
 def test_store_reads_see_every_mutation(spark, tmp_path):
@@ -738,6 +734,7 @@ def test_store_reads_see_every_mutation(spark, tmp_path):
         ("backfill", lambda: off.backfill(mk([(5, 5.0, t0 + day)]))),
         ("compact", lambda: off.compact(sort_cols=["cc_num"])),
         ("delete_keys", lambda: off.delete_keys("cc_num", [1])),
+        ("delete_keys every key", lambda: off.delete_keys("cc_num", [3, 5])),
         ("clear", off.clear),
     ]
     for i, (name, mutate) in enumerate(mutations):
@@ -750,21 +747,29 @@ def test_store_reads_see_every_mutation(spark, tmp_path):
         assert rows(off2.read()) == want, name
     assert want == []
 
-    on_path = str(tmp_path / "online")
-    on = ParquetOnlineStore(spark, on_path, ts="ts", retention_seconds=None, num_buckets=8)
-    on.upsert(mk([(1, 1.0, t0), (2, 2.0, t0), (None, 9.0, t0)]))
-    on2 = ParquetOnlineStore(spark, on_path, ts="ts", retention_seconds=None, num_buckets=8)
-    for name, mutate in [
-        ("upsert", lambda: on.upsert(mk([(1, 1.5, t0 + day), (3, 3.0, t0)]))),
-        ("delete_keys", lambda: on.delete_keys([2])),
+    # the second table holds no NULL key, so deleting every key empties it
+    for table, first, mutations, left in [
+        ("online", [(1, 1.0, t0), (2, 2.0, t0), (None, 9.0, t0)], [
+            ("upsert", lambda on: on.upsert(mk([(1, 1.5, t0 + day), (3, 3.0, t0)]))),
+            ("delete_keys", lambda on: on.delete_keys([2])),
+        ], {1, 3, None}),
+        ("online_emptied", [(1, 1.0, t0), (2, 2.0, t0)], [
+            ("delete_keys every key", lambda on: on.delete_keys([1, 2])),
+            ("upsert after emptying", lambda on: on.upsert(mk([(4, 4.0, t0)]))),
+        ], {4}),
     ]:
-        on.read().collect()
-        on2.read().collect()
-        mutate()
-        want = fresh(on_path, drop=[BUCKET_COL])
-        assert rows(on.read()) == want, name
-        assert rows(on2.read()) == want, name
-    assert {r.cc_num for r in on2.read().collect()} == {1, 3, None}
+        on_path = str(tmp_path / table)
+        on = ParquetOnlineStore(spark, on_path, ts="ts", retention_seconds=None, num_buckets=8)
+        on.upsert(mk(first))
+        on2 = ParquetOnlineStore(spark, on_path, ts="ts", retention_seconds=None, num_buckets=8)
+        for name, mutate in mutations:
+            on.read().collect()
+            on2.read().collect()
+            mutate(on)
+            want = fresh(on_path, drop=[BUCKET_COL])
+            assert rows(on.read()) == want, name
+            assert rows(on2.read()) == want, name
+        assert {r.cc_num for r in on2.read().collect()} == left
 
     sink = OnlineStoreSink(key="cc_num", ts="ts", path=str(tmp_path / "sink"),
                            num_buckets=8)
@@ -789,24 +794,18 @@ def test_table_generation_counts_every_concurrent_mutation():
     import threading
 
     from feature_store_fraud_detection_spark.sources.readers import (
-        mutates_table,
+        bump_generation,
         table_generation,
     )
 
-    class Table:
-        path = "/stress/generation/table"
-
-        @mutates_table
-        def mutate(self):
-            pass
-
+    path = "/stress/generation/table"
     workers, bumps = 16, 2_000
-    before = table_generation(Table.path)
+    before = table_generation(path)
     interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)
     try:
         threads = [
-            threading.Thread(target=lambda: [Table().mutate() for _ in range(bumps)])
+            threading.Thread(target=lambda: [bump_generation(path) for _ in range(bumps)])
             for _ in range(workers)
         ]
         for t in threads:
@@ -816,4 +815,71 @@ def test_table_generation_counts_every_concurrent_mutation():
             assert not t.is_alive()
     finally:
         sys.setswitchinterval(interval)
-    assert table_generation(Table.path + "/") == before + workers * bumps
+    assert table_generation(path + "/") == before + workers * bumps
+
+
+def test_online_retention_matches_pure_merge_in_a_lone_bucket(spark, tmp_path):
+    """The durable upsert's TTL equals :func:`upsert_latest_state`'s when
+    every row of a touched bucket expires: keys 1 and 2 sit alone in
+    buckets 16 and 33 of 64, and the second batch's horizon (t0+5h - 1h)
+    expires key 1's t0 row while its late t0-1h row loses the merge. The
+    emptied bucket must be deleted, not left serving the expired row."""
+    from feature_store_fraud_detection_spark.sources.online_store import BUCKET_COL
+
+    def mk(rows_):
+        return spark.createDataFrame(rows_, "cc_num long, amt double, ts timestamp")
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()), key=repr)
+
+    t0 = dt.datetime(2024, 1, 1, 10)
+    hour = dt.timedelta(hours=1)
+    path = str(tmp_path / "online_ttl")
+    store = ParquetOnlineStore(spark, path, ts="ts", retention_seconds=3600, num_buckets=64)
+    assert {r[BUCKET_COL] for r in store._with_bucket(mk([(1, 0.0, t0), (2, 0.0, t0)])).collect()} \
+        == {16, 33}
+    pure = None
+    for batch in ([(1, 1.0, t0), (2, 2.0, t0)], [(2, 2.5, t0 + 5 * hour), (1, 0.5, t0 - hour)]):
+        store.upsert(mk(batch))
+        pure = upsert_latest_state(pure, mk(batch), "cc_num", "ts", 3600)
+    assert rows(store.read()) == rows(pure) == [(2, 2.5, t0 + 5 * hour)]
+    assert rows(spark.read.parquet(path).drop(BUCKET_COL)) == rows(pure)
+
+
+def test_store_commits_live_in_one_function():
+    """Every dynamic partition overwrite and every Hadoop-FS delete in the
+    package sits in the one commit function (``_commit_state``'s rename
+    commit of fold state keeps its own deletes): a store rewrite committed
+    any other way would skip the emptied-partition delete, the
+    readable-empty footer or the table-version bump. The stores and sinks
+    never probe a frame with ``isEmpty()``, which costs a job (on a
+    foreachBatch frame, a re-run of the upstream) and is what the commit's
+    listing replaces."""
+    import ast
+    import pathlib
+
+    import feature_store_fraud_detection_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    overwrites, deletes, probes = set(), set(), set()
+    for src in sorted(root.rglob("*.py")):
+        rel = src.relative_to(root).as_posix()
+        tree = ast.parse(src.read_text())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Constant) and node.value == "partitionOverwriteMode":
+                    overwrites.add((rel, fn.name))
+                if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+                    # Hadoop FileSystem.delete(path, recursive)
+                    if node.func.attr == "delete" and len(node.args) == 2:
+                        deletes.add((rel, fn.name))
+                    if node.func.attr == "isEmpty" and rel.startswith(
+                        ("sources/", "streaming/")
+                    ):
+                        probes.add((rel, fn.name))
+    commit = ("sources/readers.py", "overwrite_partitions")
+    assert overwrites == {commit}
+    assert deletes == {commit, ("streaming/pipeline.py", "_commit_state")}
+    assert probes == set()

@@ -307,6 +307,14 @@ def test_idempotent_sink_replay_does_not_duplicate(spark, tmp_path):
     assert got.count() == 15
     assert got.filter("batch_id = 1").count() == 5
 
+    # no emptiness probe: an empty first batch writes no partition and
+    # leaves a readable empty table, which the next batch adds to
+    fresh = IdempotentBatchSink(str(tmp_path / "idem_empty"))
+    fresh(b0.limit(0), 0)
+    assert fresh.read(spark).count() == 0
+    fresh(b1, 1)
+    assert sorted(r.id for r in fresh.read(spark).collect()) == list(range(10, 15))
+
 
 def test_idempotent_sink_through_stream(spark, tmp_path):
     from feature_store_fraud_detection_spark.streaming.pipeline import (
