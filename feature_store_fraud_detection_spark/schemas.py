@@ -99,9 +99,20 @@ _TS_COLUMNS: dict[str, tuple[str, ...]] = {
 }
 
 
+# path -> (modification time, length, schema) of the file version whose
+# footers were last inferred in this process.
+_inferred: dict[str, tuple[int, int, T.StructType]] = {}
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver testdata table (columnar parquet scan; Catalyst prunes
-    columns/filters into the scan automatically)."""
+    columns/filters into the scan automatically).
+
+    The schema is inferred from the parquet footers (a Spark job) once per
+    path and file version (length plus modification time, one Hadoop
+    ``getFileStatus`` per call) per process; every call then reads with that
+    schema, so a warm call runs no Spark job. Each call still builds a fresh
+    relation with fresh attribute ids, so two calls' frames self-join."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # Parquet TIMESTAMP(MICROS) without isAdjustedToUTC would otherwise read
     # as TIMESTAMP_NTZ, which unix_micros/casts reject; with session tz pinned
@@ -112,14 +123,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # DuckDB oracle. Pin UTC here — the one chokepoint every query reads
     # through.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    status = hpath.getFileSystem(spark._jsc.hadoopConfiguration()).getFileStatus(hpath)
+    version = (status.getModificationTime(), status.getLen())
+    memo = _inferred.get(path)
+    # The status is taken before inference, so a rewrite between the two
+    # leaves an entry whose version no longer matches: re-inferred next call.
+    if memo is None or memo[:2] != version:
+        memo = _inferred[path] = (*version, spark.read.parquet(path).schema)
+    schema = memo[2]
+    df = spark.read.schema(schema).parquet(path)
     for c in _TS_COLUMNS.get(name, ()):
-        if dict(df.dtypes).get(c) == "bigint":
+        if c in schema.names and isinstance(schema[c].dataType, T.LongType):
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"{c} div 1000")))
     return df
-
-
-def register_testdata(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql queries."""
-    for name in TESTDATA_TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 
@@ -50,6 +51,8 @@ CORE_TESTS: frozenset[str] = frozenset(
         "test_train_evaluate_score",
         # multimodal seams
         "test_pcm_energy_windows_hand_fixture",
+        # testdata loader
+        "test_load_table_infers_each_file_version_once",
         # numpy trainer
         "test_backward_matches_finite_differences",
         # plan-shape gates
@@ -105,6 +108,21 @@ def pytest_collection_modifyitems(config, items):
         # so new sweep modules inherit it mechanically.
         if "_properties" in item.module.__name__:
             item.add_marker(pytest.mark.slow)
+
+
+def jobs_of(spark, action):
+    """Run ``action`` in a fresh job group; return its result and the
+    number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"job-gate-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-start events reach the status tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

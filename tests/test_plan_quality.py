@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import pytest
 
+from conftest import jobs_of
+
 from feature_store_fraud_detection_spark.plans.registry import QUERIES
 
 
@@ -18,21 +20,6 @@ def _physical(df) -> str:
 
 def _analyzed(df) -> str:
     return df._jdf.queryExecution().toString()
-
-
-def _jobs_of(spark, action):
-    """Run ``action`` in a fresh job group; return its result and the
-    number of Spark jobs it ran."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"job-gate-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_point_lookup_pushes_filter(spark, sf_dir):
@@ -828,7 +815,7 @@ def test_store_point_reads_run_one_job_and_prune_one_bucket(spark, tmp_path):
         return point_lookup(online.read(), "cc_num", key)
 
     get().collect()  # warm: resolves the table
-    got, jobs = _jobs_of(spark, lambda: get().collect())
+    got, jobs = jobs_of(spark, lambda: get().collect())
     assert [r.amt for r in got] == [7.0]
     assert jobs == 1
     plan = _physical(get())
@@ -843,7 +830,7 @@ def test_store_point_reads_run_one_job_and_prune_one_bucket(spark, tmp_path):
     offline = OfflineStore(spark, str(tmp_path / "offline"), ts_col="ts")
     offline.write(batch)
     offline.by_key("cc_num", key).collect()
-    got, jobs = _jobs_of(spark, lambda: offline.by_key("cc_num", key).collect())
+    got, jobs = jobs_of(spark, lambda: offline.by_key("cc_num", key).collect())
     assert [r.amt for r in got] == [7.0]
     assert jobs == 1
 
@@ -883,7 +870,7 @@ def test_bulk_scoring_keeps_top_k_below_scorer(spark, tmp_path):
         return score_dataframe(store.bulk("cc_num", n), cols, w)
 
     scored().toPandas()  # warm: resolves the table
-    pdf, jobs = _jobs_of(spark, lambda: scored().toPandas())
+    pdf, jobs = jobs_of(spark, lambda: scored().toPandas())
     assert jobs == 1
     plan = _physical(scored())
     assert "TakeOrderedAndProject" in plan
@@ -918,7 +905,7 @@ def test_bfs_levels_small_graph_runs_one_pass(spark):
     assert sorted((r.node, r.level) for r in out.collect()) == [
         ("a", 0), ("b", 1), ("c", 2), ("d", 3), ("e", 4)
     ]
-    _, jobs = _jobs_of(spark, run)
+    _, jobs = jobs_of(spark, run)
     assert jobs <= 7, jobs
 
 
@@ -995,7 +982,7 @@ def test_iterate_cuts_releases_and_stops(spark):
 
     for rounds, cuts in ((4, 1), (12, 3)):
         before = set(persisted().keySet())
-        out, jobs = _jobs_of(spark, lambda: iterate(inc, base, rounds, cut_every=5))
+        out, jobs = jobs_of(spark, lambda: iterate(inc, base, rounds, cut_every=5))
         assert jobs == cuts, (rounds, jobs)
         assert len(set(persisted().keySet()) - before) == 1
         assert sorted(r.id for r in out.collect()) == list(range(rounds, rounds + 10))
@@ -1034,7 +1021,7 @@ def test_coreness_job_count(spark, sf_dir):
     more. 67 jobs measured for build plus action under AQE on local[4]
     (133 with a count job per round and three checkpoints per sweep); the
     bound leaves 8 for AQE planning drift."""
-    _, jobs = _jobs_of(
+    _, jobs = jobs_of(
         spark,
         lambda: QUERIES["coreness"].fn(spark, sf_dir).write.format("noop").mode("overwrite").save(),
     )
