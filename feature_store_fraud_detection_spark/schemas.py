@@ -13,6 +13,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from feature_store_fraud_detection_spark.session import hadoop_fs
+
 # Raw credit-card transactions (reference fixture §1, FIXTURES.md). Starred
 # columns of the public HF dataset that any pipeline actually reads.
 TRANSACTIONS_SCHEMA = T.StructType(
@@ -124,8 +126,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # through.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = f"{sf_dir}/{name}.parquet"
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    status = hpath.getFileSystem(spark._jsc.hadoopConfiguration()).getFileStatus(hpath)
+    fs, hpath = hadoop_fs(spark, path)
+    status = fs.getFileStatus(hpath)
     version = (status.getModificationTime(), status.getLen())
     memo = _inferred.get(path)
     # The status is taken before inference, so a rewrite between the two

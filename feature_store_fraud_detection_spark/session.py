@@ -66,3 +66,23 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+# (JVM view, org.apache.hadoop.fs.Path class) of the last gateway seen
+_hadoop_path_class: tuple = (None, None)
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` of ``path`` through the Hadoop FS API, so the
+    same code runs on local disk, HDFS and S3A.
+
+    The ``Path`` class is resolved once per JVM gateway: walking
+    ``spark._jvm.org.apache.hadoop.fs.Path`` costs five py4j reflection
+    round-trips before the constructor call."""
+    global _hadoop_path_class
+    jvm, cls = _hadoop_path_class
+    if jvm is not spark._jvm:
+        cls = spark._jvm.org.apache.hadoop.fs.Path
+        _hadoop_path_class = (spark._jvm, cls)
+    hpath = cls(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath

@@ -26,6 +26,7 @@ from feature_store_fraud_detection_spark.operators.relational import (
     point_lookup,
     range_scan,
 )
+from feature_store_fraud_detection_spark.session import hadoop_fs
 from feature_store_fraud_detection_spark.sources.readers import (
     ResolvedTable,
     overwrite_partitions,
@@ -244,19 +245,17 @@ class SnapshotStore:
     """
 
     def __init__(self, spark: SparkSession, root: str):
-        import os
-
         self.spark = spark
         self.root = root
-        os.makedirs(root, exist_ok=True)
+        # Hadoop FS API (not os.*), like every other store: a file://,
+        # HDFS or S3A root is not a driver-local directory name
+        self._fs, self._root = hadoop_fs(spark, root)
+        self._fs.mkdirs(self._root)
 
     def versions(self) -> list[int]:
-        import os
-
+        names = (s.getPath().getName() for s in self._fs.listStatus(self._root))
         return sorted(
-            int(d[2:])
-            for d in os.listdir(self.root)
-            if d.startswith("v=") and d[2:].isdigit()
+            int(d[2:]) for d in names if d.startswith("v=") and d[2:].isdigit()
         )
 
     def publish(self, df: DataFrame) -> int:

@@ -28,6 +28,7 @@ from pyspark.sql import types as T
 
 from feature_store_fraud_detection_spark.lineage import checkpointed
 from feature_store_fraud_detection_spark.schemas import TRANSACTIONS_SCHEMA
+from feature_store_fraud_detection_spark.session import hadoop_fs
 
 _generations: dict[str, int] = {}
 _generations_lock = threading.Lock()
@@ -51,15 +52,8 @@ def bump_generation(path: str) -> None:
         _generations[key] = _generations.get(key, 0) + 1
 
 
-def _fs_path(spark: SparkSession, path: str):
-    """``(FileSystem, Path)`` of ``path`` through the Hadoop FS API, so the
-    same code runs on local disk, HDFS and S3A."""
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
-
-
 def path_exists(spark: SparkSession, path: str) -> bool:
-    fs, hpath = _fs_path(spark, path)
+    fs, hpath = hadoop_fs(spark, path)
     return bool(fs.exists(hpath))
 
 
@@ -72,7 +66,7 @@ def _stay_readable(spark: SparkSession, path: str, part_col: str,
     of ``schema`` instead of failing to infer one. The file sits at the
     root beside any partition directories a later write adds; Spark reads
     that layout."""
-    fs, root = _fs_path(spark, path)
+    fs, root = hadoop_fs(spark, path)
     if fs.exists(root):
         for status in fs.listStatus(root):
             name = status.getPath().getName()
@@ -131,7 +125,7 @@ def overwrite_partitions(df: DataFrame, path: str, part_col: str,
                 if touched else set()
             )
         for value in set(touched) - kept:
-            fs, hpath = _fs_path(spark, f"{path}/{part_col}={value}")
+            fs, hpath = hadoop_fs(spark, f"{path}/{part_col}={value}")
             fs.delete(hpath, True)
         _stay_readable(spark, path, part_col, df.schema)
     finally:

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from feature_store_fraud_detection_spark.functions.geo import haversine_miles
 from feature_store_fraud_detection_spark.lineage import checkpointed
 from feature_store_fraud_detection_spark.schemas import STREAM_EVENT_SCHEMA
+from feature_store_fraud_detection_spark.session import hadoop_fs
 from feature_store_fraud_detection_spark.sources.readers import overwrite_partitions
 
 # Reference window geometry (pipeline.py:61,66) — kept, but event-time.
@@ -159,6 +160,21 @@ def latest_txn(events: DataFrame) -> DataFrame:
     )
 
 
+def _start(frame: DataFrame, batch_fn, mode: str, checkpoint_dir: str | None):
+    """Start ``frame`` as a ``foreachBatch(batch_fn)`` query in output
+    ``mode`` that processes everything available and stops
+    (``availableNow``); ``checkpoint_dir`` is its checkpoint location, if
+    given. Returns the StreamingQuery."""
+    writer = (
+        frame.writeStream.outputMode(mode)
+        .foreachBatch(batch_fn)
+        .trigger(availableNow=True)
+    )
+    if checkpoint_dir:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    return writer.start()
+
+
 class OnlineStoreSink:
     """foreachBatch sink: MERGE each micro-batch of per-key stats into the
     keyed online store with event-time retention (replaces RedisWriter's
@@ -240,14 +256,7 @@ def run_stream_to_online_store(
     sink = sink or OnlineStoreSink(tiebreak="latest_txn_id")
     events = enrich(parse_stream(raw))
     latest = latest_txn(events)
-    writer = (
-        latest.writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start(latest, sink, "update", checkpoint_dir)
 
 
 def run_stats_to_online_store(
@@ -263,14 +272,7 @@ def run_stats_to_online_store(
     sink = sink or OnlineStoreSink(key="cc_num", ts="window_end")
     events = enrich(parse_stream(raw))
     stats = windowed_stats(events)
-    writer = (
-        stats.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start(stats, sink, "append", checkpoint_dir)
 
 
 def run_point_in_time_enrich(
@@ -287,8 +289,10 @@ def run_point_in_time_enrich(
 ):
     """Streaming twin of the offline point-in-time join: every incoming
     transaction is enriched with the newest feature snapshot at-or-before
-    its OWN event time (``operators/temporal.asof_join``), then appended to
-    a parquet feature log.
+    its OWN event time (``operators/temporal.asof_join``), then written to
+    a parquet feature log through :class:`IdempotentBatchSink` (one
+    ``batch_id=N`` partition per micro-batch, so a replayed batch replaces
+    its own rows instead of appending them twice).
 
     The as-of join runs per micro-batch inside ``foreachBatch`` against the
     static ``features`` table, so the result is batch-equivalent by
@@ -301,6 +305,7 @@ def run_point_in_time_enrich(
     from feature_store_fraud_detection_spark.operators.temporal import asof_join
 
     events = enrich(parse_stream(raw))
+    sink = IdempotentBatchSink(out_dir)
 
     def _enrich_batch(batch_df: DataFrame, batch_id: int) -> None:
         out = asof_join(
@@ -313,16 +318,9 @@ def run_point_in_time_enrich(
             tiebreak=tiebreak,
             tolerance_sec=tolerance_sec,
         )
-        out.write.mode("append").parquet(out_dir)
+        sink(out, batch_id)
 
-    writer = (
-        events.writeStream.outputMode("append")
-        .foreachBatch(_enrich_batch)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start(events, _enrich_batch, "append", checkpoint_dir)
 
 
 class IdempotentBatchSink:
@@ -384,6 +382,17 @@ def read_fold_state(spark, state_dir: str) -> DataFrame | None:
             return None
 
 
+def _report_state(spark, state_dir: str, report: str) -> DataFrame:
+    """The fold state a ``report`` reads: :func:`read_fold_state` (so the
+    ``.old`` generation still serves inside the commit's rename window)
+    without the batch-id column; raises a ``FileNotFoundError`` naming
+    ``report`` when no state exists yet."""
+    state = read_fold_state(spark, state_dir)
+    if state is None:
+        raise FileNotFoundError(f"{report}: no fold state at {state_dir}")
+    return state.drop(_STATE_META_COL)
+
+
 def _replay_guarded_fold(spark, state_dir: str, batch_id: int, fold_fn) -> None:
     """Fold one micro-batch into an additive parquet state EXACTLY ONCE.
 
@@ -442,16 +451,31 @@ def _commit_state(spark, staged: DataFrame, state_dir: str) -> None:
     staged.write.mode("overwrite").parquet(tmp_dir)
     # Hadoop FileSystem API (not os.*): state dirs may be HDFS/S3 paths
     # invisible to the driver-local filesystem
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(state_dir).getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(hpath(state_dir)):
-        if fs.exists(hpath(old_dir)):
-            fs.delete(hpath(old_dir), True)
-        fs.rename(hpath(state_dir), hpath(old_dir))
-    fs.rename(hpath(tmp_dir), hpath(state_dir))
-    if fs.exists(hpath(old_dir)):
-        fs.delete(hpath(old_dir), True)
+    fs, live = hadoop_fs(spark, state_dir)
+    tmp, old = hadoop_fs(spark, tmp_dir)[1], hadoop_fs(spark, old_dir)[1]
+    if fs.exists(live):
+        if fs.exists(old):
+            fs.delete(old, True)
+        fs.rename(live, old)
+    fs.rename(tmp, live)
+    if fs.exists(old):
+        fs.delete(old, True)
+
+
+def _run_fold(raw_rows: DataFrame, state_dir: str, merge, checkpoint_dir: str | None):
+    """Start a fold monitor over ``raw_rows``: every micro-batch folds into
+    the parquet state at ``state_dir`` exactly once
+    (:func:`_replay_guarded_fold`), ``merge(batch_df, prev)`` returning
+    the new state from the batch and the previous state (None on the first
+    batch). Returns the StreamingQuery."""
+
+    def _fold(batch_df: DataFrame, batch_id: int) -> None:
+        _replay_guarded_fold(
+            batch_df.sparkSession, state_dir, batch_id,
+            lambda prev: merge(batch_df, prev),
+        )
+
+    return _start(raw_rows, _fold, "append", checkpoint_dir)
 
 
 def run_stream_neardup_filter(
@@ -507,14 +531,7 @@ def run_stream_neardup_filter(
         # that reuse across batches is the point of the index)
         state.unpersist()
 
-    writer = (
-        raw_docs.writeStream.outputMode("append")
-        .foreachBatch(_filter_batch)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start(raw_docs, _filter_batch, "append", checkpoint_dir)
 
 
 def run_stream_pattern_alerts(
@@ -631,14 +648,7 @@ def run_stream_pattern_alerts(
             with checkpointed(new_tail) as staged:
                 _commit_state(union.sparkSession, staged, state_dir)
 
-    writer = (
-        raw_events.writeStream.outputMode("append")
-        .foreachBatch(_batch)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start(raw_events, _batch, "append", checkpoint_dir)
 
 
 def run_stream_regression_fit(
@@ -652,7 +662,7 @@ def run_stream_regression_fit(
     """Streaming EXACT model training: fold each micro-batch's regression
     moments (``operators/regression.regression_moments`` — additive
     integer/DECIMAL sums) into a 1-row parquet state. At any point,
-    ``ridge_from_moments(spark.read.parquet(state_dir))`` yields a model
+    ``ridge_from_moments(read_fold_state(spark, state_dir))`` yields a model
     BIT-identical to retraining on every row ever seen (pinned in
     ``tests/test_regression.py``) — the streaming counterpart of the
     reference's batch retrain, with per-batch cost O(|batch|) and no
@@ -665,23 +675,18 @@ def run_stream_regression_fit(
         regression_moments,
     )
 
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
+        m = regression_moments(batch_df, x1_col, x2_col, y_col)
+        return m if prev is None else merge_regression_moments(prev, m)
 
-        def _merge(prev: DataFrame | None) -> DataFrame:
-            m = regression_moments(batch_df, x1_col, x2_col, y_col)
-            return m if prev is None else merge_regression_moments(prev, m)
+    return _run_fold(raw_rows, state_dir, merge, checkpoint_dir)
 
-        _replay_guarded_fold(spark, state_dir, batch_id, _merge)
 
-    writer = (
-        raw_rows.writeStream.outputMode("append")
-        .foreachBatch(_fold)
-        .trigger(availableNow=True)
+def _counts(df: DataFrame, col: str, alias: str) -> DataFrame:
+    """Rows per non-NULL ``col`` value, counted into ``alias``."""
+    return df.filter(F.col(col).isNotNull()).groupBy(col).agg(
+        F.count(F.lit(1)).alias(alias)
     )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
 
 
 def run_stream_drift_monitor(
@@ -700,35 +705,18 @@ def run_stream_drift_monitor(
     holds when the stream is 100k events/s for a year. Replay-safe via
     ``_replay_guarded_fold`` (re-delivered batch_ids fold at most once).
     """
-    from pyspark.sql import functions as F
 
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
+        m = _counts(batch_df, cat_col, "n")
+        if prev is None:
+            return m
+        return (
+            prev.unionByName(m)
+            .groupBy(cat_col)
+            .agg(F.sum("n").alias("n"))
+        )
 
-        def _merge(prev: DataFrame | None) -> DataFrame:
-            m = (
-                batch_df.filter(F.col(cat_col).isNotNull())
-                .groupBy(cat_col)
-                .agg(F.count(F.lit(1)).alias("n"))
-            )
-            if prev is None:
-                return m
-            return (
-                prev.unionByName(m)
-                .groupBy(cat_col)
-                .agg(F.sum("n").alias("n"))
-            )
-
-        _replay_guarded_fold(spark, counts_dir, batch_id, _merge)
-
-    writer = (
-        raw_rows.writeStream.outputMode("append")
-        .foreachBatch(_fold)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _run_fold(raw_rows, counts_dir, merge, checkpoint_dir)
 
 
 def stream_drift_report(
@@ -736,21 +724,16 @@ def stream_drift_report(
 ) -> DataFrame:
     """Categorical PSI of the monitor's accumulated counts vs a baseline
     of raw rows — read the state, reuse the exact batch PSI core."""
-    from pyspark.sql import functions as F
-
     from feature_store_fraud_detection_spark.operators.stats import (
         categorical_psi_from_counts,
     )
 
-    a = (
-        baseline.filter(F.col(cat_col).isNotNull())
-        .groupBy(cat_col)
-        .agg(F.count(F.lit(1)).alias("n_base"))
-    )
-    b = spark.read.parquet(counts_dir).select(
+    b = _report_state(spark, counts_dir, "stream_drift_report").select(
         cat_col, F.col("n").alias("n_curr")
     )
-    return categorical_psi_from_counts(a, b, cat_col)
+    return categorical_psi_from_counts(
+        _counts(baseline, cat_col, "n_base"), b, cat_col
+    )
 
 
 def run_stream_hist_monitor(
@@ -778,23 +761,11 @@ def run_stream_hist_monitor(
         hist_sketch,
     )
 
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
+        m = hist_sketch(batch_df, key_col, val_col, lo, hi, bins)
+        return m if prev is None else hist_merge(prev, m, key_col)
 
-        def _merge(prev: DataFrame | None) -> DataFrame:
-            m = hist_sketch(batch_df, key_col, val_col, lo, hi, bins)
-            return m if prev is None else hist_merge(prev, m, key_col)
-
-        _replay_guarded_fold(spark, state_dir, batch_id, _merge)
-
-    writer = (
-        raw_rows.writeStream.outputMode("append")
-        .foreachBatch(_fold)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _run_fold(raw_rows, state_dir, merge, checkpoint_dir)
 
 
 def stream_quantile_report(
@@ -812,7 +783,8 @@ def stream_quantile_report(
     )
 
     return hist_quantiles(
-        spark.read.parquet(state_dir), key_col, lo, hi, probs
+        _report_state(spark, state_dir, "stream_quantile_report"),
+        key_col, lo, hi, probs,
     )
 
 
@@ -842,23 +814,11 @@ def run_stream_kmv_monitor(
         kmv_sketch,
     )
 
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
+        m = kmv_sketch(batch_df, key_col, value_col, k)
+        return m if prev is None else kmv_merge(prev, m, key_col, k)
 
-        def _merge(prev: DataFrame | None) -> DataFrame:
-            m = kmv_sketch(batch_df, key_col, value_col, k)
-            return m if prev is None else kmv_merge(prev, m, key_col, k)
-
-        _replay_guarded_fold(spark, state_dir, batch_id, _merge)
-
-    writer = (
-        raw_rows.writeStream.outputMode("append")
-        .foreachBatch(_fold)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _run_fold(raw_rows, state_dir, merge, checkpoint_dir)
 
 
 def stream_distinct_report(
@@ -869,7 +829,9 @@ def stream_distinct_report(
         kmv_estimate,
     )
 
-    return kmv_estimate(spark.read.parquet(state_dir), key_col, k)
+    return kmv_estimate(
+        _report_state(spark, state_dir, "stream_distinct_report"), key_col, k
+    )
 
 
 def run_stream_cms_monitor(
@@ -895,29 +857,17 @@ def run_stream_cms_monitor(
         cms_sketch,
     )
 
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
+        m = cms_sketch(batch_df, item_col, depth, width)
+        if prev is None:
+            return m
+        return (
+            prev.unionByName(m)
+            .groupBy("row", "bucket")
+            .agg(F.sum("cnt").alias("cnt"))
+        )
 
-        def _merge(prev: DataFrame | None) -> DataFrame:
-            m = cms_sketch(batch_df, item_col, depth, width)
-            if prev is None:
-                return m
-            return (
-                prev.unionByName(m)
-                .groupBy("row", "bucket")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-
-        _replay_guarded_fold(spark, state_dir, batch_id, _merge)
-
-    writer = (
-        raw_rows.writeStream.outputMode("append")
-        .foreachBatch(_fold)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _run_fold(raw_rows, state_dir, merge, checkpoint_dir)
 
 
 def stream_heavy_hitters_report(
@@ -934,7 +884,7 @@ def stream_heavy_hitters_report(
         cms_query,
     )
 
-    state = spark.read.parquet(state_dir).select("row", "bucket", "cnt")
+    state = _report_state(spark, state_dir, "stream_heavy_hitters_report")
     return cms_query(state, items, item_col, depth, width)
 
 
@@ -965,23 +915,11 @@ def run_stream_hll_monitor(
         hll_sketch,
     )
 
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
+        m = hll_sketch(batch_df, key_col, value_col)
+        return m if prev is None else hll_merge(prev, m, key_col)
 
-        def _merge(prev: DataFrame | None) -> DataFrame:
-            m = hll_sketch(batch_df, key_col, value_col)
-            return m if prev is None else hll_merge(prev, m, key_col)
-
-        _replay_guarded_fold(spark, state_dir, batch_id, _merge)
-
-    writer = (
-        raw_rows.writeStream.outputMode("append")
-        .foreachBatch(_fold)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _run_fold(raw_rows, state_dir, merge, checkpoint_dir)
 
 
 def stream_hll_report(spark, state_dir: str, key_col: str) -> DataFrame:
@@ -991,7 +929,7 @@ def stream_hll_report(spark, state_dir: str, key_col: str) -> DataFrame:
         hll_estimate,
     )
 
-    state = spark.read.parquet(state_dir).select(key_col, "reg", "m_j")
+    state = _report_state(spark, state_dir, "stream_hll_report")
     return hll_estimate(state, key_col)
 
 
@@ -1023,23 +961,11 @@ def run_stream_srm_monitor(
     Per-batch cost: one distinct over the batch + a set-sized merge.
     """
 
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
+        m = batch_df.select(F.col(unit_col)).distinct()
+        return m if prev is None else prev.unionByName(m).distinct()
 
-        def _merge(prev: DataFrame | None) -> DataFrame:
-            m = batch_df.select(F.col(unit_col)).distinct()
-            return m if prev is None else prev.unionByName(m).distinct()
-
-        _replay_guarded_fold(spark, state_dir, batch_id, _merge)
-
-    writer = (
-        raw_rows.writeStream.outputMode("append")
-        .foreachBatch(_fold)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _run_fold(raw_rows, state_dir, merge, checkpoint_dir)
 
 
 def stream_srm_report(
@@ -1056,8 +982,10 @@ def stream_srm_report(
         srm_check,
     )
 
-    return srm_check(spark.read.parquet(state_dir), unit_col, salt,
-                     expected_a)
+    return srm_check(
+        _report_state(spark, state_dir, "stream_srm_report"), unit_col, salt,
+        expected_a,
+    )
 
 
 def stream_ks_report(
@@ -1071,16 +999,11 @@ def stream_ks_report(
     — the CDF gap can, so ordered bands get both readouts from ONE
     state. Bit-identical to ks_two_sample over all rows ever seen
     (band counts are additive; pinned in test_streaming)."""
-    from pyspark.sql import functions as F
-
     from feature_store_fraud_detection_spark.operators.stats import (
         ks_from_histograms,
     )
 
-    live = spark.read.parquet(counts_dir).select(band_col, "n")
-    base = (
-        baseline.filter(F.col(band_col).isNotNull())
-        .groupBy(band_col)
-        .agg(F.count(F.lit(1)).alias("n"))
+    live = _report_state(spark, counts_dir, "stream_ks_report").select(
+        band_col, "n"
     )
-    return ks_from_histograms(live, base, band_col, "n")
+    return ks_from_histograms(live, _counts(baseline, band_col, "n"), band_col, "n")

@@ -89,6 +89,7 @@ CORE_TESTS: frozenset[str] = frozenset(
         "test_store_reads_see_every_mutation",
         # streaming
         "test_stream_windowed_stats_matches_batch",
+        "test_streaming_jobs_start_in_one_function",
         # temporal joins
         "test_asof_join_semantics",
         "test_interval_join_matches_naive",

@@ -418,6 +418,23 @@ def test_snapshot_store_versions_pin_and_diff(spark, tmp_path):
     assert d == {1: "removed", 2: "updated", 3: "added"}
 
 
+def test_snapshot_store_publishes_under_a_file_uri_root(spark, tmp_path, monkeypatch):
+    """A ``file://`` root is made and listed through the Hadoop FS API like
+    every other store path: the second publish finds ``v=1`` and writes
+    ``v=2``, and no ``file:`` directory appears in the working directory."""
+    from feature_store_fraud_detection_spark.sources.offline_store import (
+        SnapshotStore,
+    )
+
+    monkeypatch.chdir(tmp_path)
+    store = SnapshotStore(spark, (tmp_path / "snaps").as_uri())
+    df = spark.createDataFrame([(1, 10.0)], "k long, v double")
+    assert (store.publish(df), store.publish(df)) == (1, 2)
+    assert store.versions() == [1, 2]
+    assert store.latest().count() == 1
+    assert not (tmp_path / "file:").exists()
+
+
 def test_apply_diff_roundtrip_reconstructs_new(spark):
     from feature_store_fraud_detection_spark.operators.diff import (
         apply_diff,

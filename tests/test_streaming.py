@@ -7,6 +7,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from feature_store_fraud_detection_spark.streaming.pipeline import (
@@ -425,6 +426,31 @@ def test_stream_neardup_filter_replay_is_idempotent(spark, tmp_path):
 
     rows = spark.read.parquet(out_dir).groupBy("doc_id").count().collect()
     assert {r["doc_id"]: r["count"] for r in rows} == {11: 1, 12: 1}
+
+
+def test_point_in_time_enrich_replay_is_idempotent(spark, tmp_path):
+    """A replayed micro-batch of the point-in-time enrichment must REPLACE
+    its own output: two runs over the same source with no checkpoint (the
+    second re-delivers batch 0) leave each transaction exactly once."""
+    from feature_store_fraud_detection_spark.streaming.pipeline import (
+        run_point_in_time_enrich,
+    )
+
+    src = _write_jsonl(tmp_path, _mk_events()[:5])
+    feats = spark.createDataFrame(
+        [(c, "2023-12-31T00:00:00", float(c)) for c in range(3)],
+        "cc_num bigint, t string, snap_value double",
+    ).select("cc_num", F.to_timestamp("t").alias("snap_ts"), "snap_value")
+
+    out_dir = str(tmp_path / "enriched_replay")
+    for _ in range(2):
+        raw = spark.readStream.schema("value string").json(src)
+        run_point_in_time_enrich(raw, feats, out_dir).awaitTermination(120)
+
+    rows = spark.read.parquet(out_dir).groupBy("txn_id").count().collect()
+    assert {r.txn_id: r["count"] for r in rows} == {
+        f"txn_{i}": 1 for i in range(5)
+    }
 
 
 def test_kafka_reader_contract_is_pinned(spark):
@@ -973,3 +999,91 @@ def test_stream_ks_report_equals_batch(spark, tmp_path):
     want = ks_two_sample(combined, "is_live", "band", 1, 1).collect()[0]
     assert got == want  # every column, bit-for-bit
     assert got.d_scaled > 0  # the planted one-notch shift is visible
+
+
+def _run_monitor(spark, tmp_path, start):
+    """Fold 120 rows (3 micro-batches) of ``(rid, band, v)`` through the
+    monitor ``start(raw, state_dir, checkpoint_dir)`` starts; returns
+    the state dir."""
+    src = tmp_path / "monitor_src"
+    src.mkdir()
+    rows = [(i, (i % 10) + 1, i % 37) for i in range(120)]
+    for part in range(3):
+        with open(src / f"p{part}.jsonl", "w") as f:
+            for rid, b, v in rows[part::3]:
+                f.write(json.dumps({"rid": rid, "band": b, "v": v}) + "\n")
+        os.utime(src / f"p{part}.jsonl", (1_700_000_000 + part,) * 2)
+    raw = (
+        spark.readStream.schema("rid bigint, band int, v int")
+        .option("maxFilesPerTrigger", 1)
+        .json(str(src))
+    )
+    state_dir = str(tmp_path / "monitor_state")
+    start(raw, state_dir, str(tmp_path / "ckpt_monitor")).awaitTermination(120)
+    return state_dir
+
+
+@pytest.mark.parametrize("case", ["drift", "ks", "kmv"])
+def test_stream_reports_read_the_parked_state_generation(spark, tmp_path, case):
+    """A report taken between the state commit's two renames (the live dir
+    parked at ``<dir>.old``, none in place) must equal the report taken
+    before: every report reads through ``read_fold_state``, which falls
+    back to ``.old``, and none sees the batch-id column."""
+    from feature_store_fraud_detection_spark.streaming import pipeline as p
+
+    baseline = spark.createDataFrame(
+        [(i, i % 10) for i in range(200)], "rid bigint, band int"
+    )
+
+    def drift(raw, state_dir, ckpt):
+        return p.run_stream_drift_monitor(raw, state_dir, "band", ckpt)
+
+    def kmv(raw, state_dir, ckpt):
+        return p.run_stream_kmv_monitor(raw, state_dir, "band", "v", 8, ckpt)
+
+    start, report = {
+        "drift": (drift, lambda d: p.stream_drift_report(spark, baseline, d, "band")),
+        "ks": (drift, lambda d: p.stream_ks_report(spark, baseline, d, "band")),
+        "kmv": (kmv, lambda d: p.stream_distinct_report(spark, d, "band", 8)),
+    }[case]
+    state_dir = _run_monitor(spark, tmp_path, start)
+    before = sorted(report(state_dir).collect())
+    assert before
+    os.rename(state_dir, state_dir + ".old")
+    assert sorted(report(state_dir).collect()) == before
+    os.rename(state_dir + ".old", state_dir + ".gone")
+    with pytest.raises(FileNotFoundError, match=r"^stream_\w+_report: "):
+        report(state_dir)
+
+
+def test_streaming_jobs_start_in_one_function():
+    """``streaming/pipeline.py`` starts every query in ``_start``, folds
+    every monitor through ``_run_fold`` and reads parquet only in
+    ``read_fold_state`` and ``IdempotentBatchSink.read``: a job started,
+    folded or read any other way would skip the checkpoint option, the
+    replay guard or the ``.old`` fallback."""
+    import ast
+    import pathlib
+
+    from feature_store_fraud_detection_spark.streaming import pipeline
+
+    tree = ast.parse(pathlib.Path(pipeline.__file__).read_text())
+    starts, folds, reads = set(), set(), set()
+
+    def visit(node, scope):
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            scope = f"{scope}.{node.name}" if scope else node.name
+        if isinstance(node, ast.Attribute) and node.attr in ("writeStream", "trigger"):
+            starts.add(scope)
+        if isinstance(node, ast.Call):
+            if ast.unparse(node.func) == "_replay_guarded_fold":
+                folds.add(scope)
+            if ast.unparse(node.func).endswith("read.parquet"):
+                reads.add(scope)
+        for child in ast.iter_child_nodes(node):
+            visit(child, scope)
+
+    visit(tree, "")
+    assert starts == {"_start"}
+    assert folds == {"_run_fold._fold"}
+    assert reads == {"read_fold_state", "IdempotentBatchSink.read"}
