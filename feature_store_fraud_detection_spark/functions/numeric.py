@@ -28,6 +28,13 @@ from pyspark.sql import functions as F
 ROUND4_SQL = "floor(({expr}) * 10000 + 0.5) / 10000"
 
 
+def _sql_ident(name: str) -> str:
+    """``name`` as a quoted SQL identifier for the parsed-SQL-text builders:
+    backticked, with embedded backticks doubled, so every column name
+    parses as exactly that one column (dots included)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def round4_stable(col: Column) -> Column:
     """4-decimal rounding as pure double arithmetic (see module docstring)."""
     return F.floor(col * 10000 + F.lit(0.5)) / F.lit(10000.0)

@@ -22,7 +22,12 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from feature_store_fraud_detection_spark.functions.numeric import round4_stable
+from feature_store_fraud_detection_spark.functions.numeric import (
+    ROUND4_SQL,
+    _double_sql,
+    _sql_ident,
+    round4_stable,
+)
 from feature_store_fraud_detection_spark.lineage import iterate
 from feature_store_fraud_detection_spark.operators.text_analysis import (
     doc_fingerprint,
@@ -55,7 +60,7 @@ def fan_out_if_few_inputs(df: DataFrame, id_col: str) -> DataFrame:
         few = len(df.inputFiles()) < target
     except Exception:  # non-file source (e.g. in-memory test frame)
         few = True
-    return df.repartition(target, F.col(id_col)) if few else df
+    return df.repartition(target, F.col(_sql_ident(id_col))) if few else df
 
 
 def shingle_table(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
@@ -162,16 +167,16 @@ def minhash_perm_consts(num_hashes: int, seed: int = 42) -> list[tuple[int, int]
     ]
 
 
-def shingle_base_hash(s: Column) -> Column:
-    """ONE md5 per shingle -> 60-bit int (first 15 hex chars) -> mod p.
-    The K permutations derive from this single digest with multiply-add
-    arithmetic; hashing cost is O(|shingles|), not O(K x |shingles|) (the
-    previous per-permutation-md5 form paid 16x the digest work and
-    dominated the operator's runtime). DuckDB twin:
+def shingle_base_hash_sql(s: str) -> str:
+    """ONE md5 per shingle (``s``, SQL text) -> 60-bit int (first 15 hex
+    chars) -> mod p. The K permutations derive from this single digest with
+    multiply-add arithmetic; hashing cost is O(|shingles|), not
+    O(K x |shingles|) (the previous per-permutation-md5 form paid 16x the
+    digest work and dominated the operator's runtime). DuckDB twin:
     ``('0x' || substr(md5(s), 1, 15))::BIGINT % p``."""
     return (
-        F.conv(F.substring(F.md5(F.encode(s, "UTF-8")), 1, 15), 16, 10).cast("bigint")
-        % MINHASH_PRIME
+        f"CAST(conv(substring(md5(encode({s}, 'UTF-8')), 1, 15), 16, 10) AS BIGINT)"
+        f" % {MINHASH_PRIME}"
     )
 
 
@@ -180,31 +185,23 @@ def _perm_sigs_expr(shingles_col: str, num_hashes: int) -> Column:
     higher-order expression — O(1) plan nodes where a K-column + stack form
     paid ~9 s of Catalyst time at K=16. The base-hash array is bound via a
     transform over a single-element array wrapper (the engine's let-binding
-    idiom, same as ``similarity.bucket_expr``) so each shingle is md5'd
-    exactly ONCE even though K permutations read it — a materialized
-    intermediate column would be inlined K times by projection collapse.
-    Constants index in by permutation position."""
+    idiom) so each shingle is md5'd exactly ONCE even though K permutations
+    read it — a materialized intermediate column would be inlined K times
+    by projection collapse. Constants index in by permutation position.
+
+    Rendered as one parsed SQL string (``F.expr``) with the K constants as
+    INT array literals: one py4j round-trip where the lambda Column tree
+    paid one per node and per constant."""
     consts = minhash_perm_consts(num_hashes)
-    a_lit = F.array(*[F.lit(a) for a, _ in consts])
-    b_lit = F.array(*[F.lit(b) for _, b in consts])
-    return F.element_at(
-        F.transform(
-            F.array(F.transform(shingles_col, shingle_base_hash)),
-            lambda hs: F.transform(
-                F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-                lambda i: F.array_min(
-                    F.transform(
-                        hs,
-                        lambda h: (
-                            F.element_at(a_lit, i + 1) * h
-                            + F.element_at(b_lit, i + 1)
-                        )
-                        % MINHASH_PRIME,
-                    )
-                ),
-            ),
-        ),
-        1,
+    a_arr, b_arr = (
+        "array(" + ", ".join(str(c[j]) for c in consts) + ")" for j in (0, 1)
+    )
+    return F.expr(
+        f"element_at(transform(array(transform({_sql_ident(shingles_col)}, "
+        f"s -> {shingle_base_hash_sql('s')})), hs -> transform("
+        f"sequence(0, {num_hashes - 1}), i -> array_min(transform(hs, h -> "
+        f"(element_at({a_arr}, i + 1) * h + element_at({b_arr}, i + 1))"
+        f" % {MINHASH_PRIME})))), 1)"
     )
 
 
@@ -213,7 +210,7 @@ def minhash_signatures(
 ) -> DataFrame:
     """(id, perm, minhash) — K permutation min-hashes per document, via the
     universal-hash family over one base digest per shingle (see
-    :func:`shingle_base_hash`).
+    :func:`shingle_base_hash_sql`).
 
     Computed array-locally per document — a NARROW stage with zero shuffle;
     only the final K-row-per-doc signature is ever exchanged.
@@ -267,35 +264,32 @@ def minhash_lsh_pairs(
     # thousands of partitions and the branch never triggers; there you would
     # also materialize `base` to parquet instead of memory (standard LSH
     # practice: signatures are written once, reused by every band pass).
+    iq = _sql_ident(id_col)
     work = fan_out_if_few_inputs(df, id_col)
     base = (
-        work.select(F.col(id_col), word_shingles(text_col, k).alias("__sh"))
+        work.select(
+            F.col(iq), word_shingles(F.col(_sql_ident(text_col)), k).alias("__sh")
+        )
         .withColumn("__sigs", _perm_sigs_expr("__sh", num_hashes))
         .persist()
     )
-    sigs = base.select(
-        F.col(id_col), F.posexplode("__sigs").alias("perm", "minhash")
-    ).filter(F.col("minhash").isNotNull())
+    sigs = base.selectExpr(iq, "posexplode(__sigs) AS (perm, minhash)").filter(
+        "minhash IS NOT NULL"
+    )
     # band key = concat of the r min-hashes within the band, in perm order
     if rows_per_band == 1:
         # band == perm, key == minhash: no extra shuffle needed
-        bands = sigs.select(
-            F.col(id_col),
-            F.col("perm").alias("band"),
-            F.col("minhash").alias("band_key"),
-        )
+        bands = sigs.selectExpr(iq, "perm AS band", "minhash AS band_key")
     else:
         bands = (
-            sigs.withColumn("band", F.floor(F.col("perm") / rows_per_band))
-            .groupBy(id_col, "band")
+            sigs.withColumn("band", F.expr(f"floor(perm / {rows_per_band})"))
+            .groupBy(F.col(iq), F.col("band"))
             .agg(
-                F.concat_ws(
-                    "|",
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("perm", "minhash"))),
-                        lambda x: x["minhash"].cast("string"),
-                    ),
-                ).alias("band_key")
+                F.expr(
+                    "concat_ws('|', transform(array_sort(collect_list("
+                    "struct(perm, minhash))), x -> CAST(x.minhash AS STRING)))"
+                    " AS band_key"
+                )
             )
         )
     # candidate pairs by grouping each band bucket and expanding pairs
@@ -304,25 +298,18 @@ def minhash_lsh_pairs(
     # side of a broadcast join).
     buckets = (
         bands.groupBy("band", "band_key")
-        .agg(F.array_sort(F.collect_list(F.col(id_col))).alias("ids"))
-        .filter(F.size("ids") >= 2)
+        .agg(F.expr(f"array_sort(collect_list({iq})) AS ids"))
+        .filter("size(ids) >= 2")
     )
     if max_bucket_size is not None:
-        buckets = buckets.filter(F.size("ids") <= max_bucket_size)
-    pair_structs = F.flatten(
-        F.transform(
-            "ids",
-            lambda x, i: F.transform(
-                F.slice(
-                    F.col("ids"), i + 2, F.greatest(F.size("ids") - i - 1, F.lit(0))
-                ),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
+        buckets = buckets.filter(f"size(ids) <= {int(max_bucket_size)}")
     candidates = (
-        buckets.select(F.explode(pair_structs).alias("p"))
-        .select(F.col("p.id_a"), F.col("p.id_b"))
+        buckets.selectExpr(
+            "explode(flatten(transform(ids, (x, i) -> transform(slice(ids, "
+            "i + 2, greatest(size(ids) - i - 1, 0)), y -> "
+            "struct(x AS id_a, y AS id_b))))) AS p"
+        )
+        .selectExpr("p.id_a", "p.id_b")
         .distinct()
     )
     # exact Jaccard computed ONLY for candidate pairs (a full
@@ -330,33 +317,21 @@ def minhash_lsh_pairs(
     # LSH exists to avoid). The per-doc shingle ARRAYS join to the candidate
     # pairs — both sides broadcastable — and the intersection is an
     # array-local op: the verification stage needs no shuffle at all.
-    sh_arrays = base.select(F.col(id_col), F.col("__sh"))
-    a_side = sh_arrays.select(
-        F.col(id_col).alias("id_a"), F.col("__sh").alias("__sh_a")
-    )
-    b_side = sh_arrays.select(
-        F.col(id_col).alias("id_b"), F.col("__sh").alias("__sh_b")
-    )
-    scored = (
-        candidates.join(a_side, "id_a")
-        .join(b_side, "id_b")
-        .select(
+    return (
+        candidates.join(base.selectExpr(f"{iq} AS id_a", "__sh AS __sh_a"), "id_a")
+        .join(base.selectExpr(f"{iq} AS id_b", "__sh AS __sh_b"), "id_b")
+        .selectExpr(
             "id_a",
             "id_b",
-            F.size(F.array_intersect("__sh_a", "__sh_b")).alias("n_inter"),
-            F.size("__sh_a").alias("n_a"),
-            F.size("__sh_b").alias("n_b"),
+            "size(array_intersect(__sh_a, __sh_b)) AS n_inter",
+            "size(__sh_a) AS n_a",
+            "size(__sh_b) AS n_b",
         )
-    )
-    return (
-        scored.withColumn(
+        .withColumn(
             "jaccard",
-            round4_stable(
-                F.col("n_inter")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double")
-            ),
+            F.expr(ROUND4_SQL.format(expr="n_inter / CAST(n_a + n_b - n_inter AS DOUBLE)")),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(f"jaccard >= {_double_sql(threshold)}")
         .select("id_a", "id_b", "jaccard")
     )
 

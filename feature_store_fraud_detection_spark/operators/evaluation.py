@@ -1072,110 +1072,81 @@ def isotonic_calibration(
     Scale: one hash aggregate to <= n_bins rows; the O(n_bins^3)
     minimax folds ride arrays over that bounded table — no driver
     state, no iteration, nothing row-scale after the first aggregate.
+    Every expression is parsed SQL text, so the build costs a few dozen
+    py4j round-trips instead of one per node of the nested folds.
     """
     from feature_store_fraud_detection_spark.functions.numeric import (
-        round4_stable,
+        ROUND4_SQL,
+        _double_sql,
+        _sql_ident,
     )
 
-    p_ok = F.when(
-        (F.col(prob_col) >= 0.0) & (F.col(prob_col) <= 1.0), F.col(prob_col)
-    ).otherwise(
-        F.raise_error(
-            F.format_string(
-                "isotonic_calibration: probability outside [0,1] (%s)",
-                F.col(prob_col).cast("string"),
-            )
+    p, y = _sql_ident(prob_col), _sql_ident(label_col)
+    p_ok = (
+        f"CASE WHEN {p} >= 0.0D AND {p} <= 1.0D THEN {p} ELSE raise_error("
+        "format_string('isotonic_calibration: probability outside [0,1] "
+        f"(%s)', CAST({p} AS STRING))) END"
+    )
+    per_bin = (
+        df.filter(f"{p} IS NOT NULL AND {y} IS NOT NULL")
+        .selectExpr(
+            f"least(CAST(floor(({p_ok}) * {_double_sql(n_bins)}) AS INT), "
+            f"{n_bins - 1}) AS bin",
+            f"CAST({y} AS INT) AS __y",
         )
-    )
-    rows = df.filter(
-        F.col(prob_col).isNotNull() & F.col(label_col).isNotNull()
-    ).select(
-        F.least(
-            F.floor(p_ok * F.lit(float(n_bins))).cast("int"),
-            F.lit(n_bins - 1),
-        ).alias("bin"),
-        F.col(label_col).cast("int").alias("__y"),
-    )
-    per_bin = rows.groupBy("bin").agg(
-        F.count(F.lit(1)).alias("n_k"),
-        F.sum("__y").alias("s_pos"),
+        .groupBy("bin")
+        .agg(F.expr("count(1) AS n_k"), F.expr("sum(__y) AS s_pos"))
     )
     # one bounded array of bin-sorted prefix structs, shared by every
     # output row; P[1] = (0,0) so P[t+1] = (N_t, S_t)
+    prefix = ", ".join(
+        f"aggregate(slice(__bins, 1, t), 0L, (a, x) -> a + x.{c}) AS {name}"
+        for c, name in (("n_k", "cn"), ("s_pos", "cs"))
+    )
     packed = per_bin.agg(
-        F.array_sort(
-            F.collect_list(F.struct("bin", "n_k", "s_pos"))
-        ).alias("__bins")
-    ).select(
+        F.expr("array_sort(collect_list(struct(bin, n_k, s_pos))) AS __bins")
+    ).selectExpr(
         "__bins",
-        F.concat(
-            F.array(F.struct(F.lit(0).cast("bigint").alias("cn"),
-                             F.lit(0).cast("bigint").alias("cs"))),
-            F.transform(
-                F.sequence(F.lit(1), F.size("__bins")),
-                lambda t: F.struct(
-                    F.aggregate(
-                        F.slice(F.col("__bins"), F.lit(1), t),
-                        F.lit(0).cast("bigint"),
-                        lambda a, x: a + x["n_k"],
-                    ).alias("cn"),
-                    F.aggregate(
-                        F.slice(F.col("__bins"), F.lit(1), t),
-                        F.lit(0).cast("bigint"),
-                        lambda a, x: a + x["s_pos"],
-                    ).alias("cs"),
-                ),
-            ),
-        ).alias("__p"),
+        "concat(array(struct(0L AS cn, 0L AS cs)), transform("
+        f"sequence(1, size(__bins)), t -> struct({prefix}))) AS __p",
     )
 
     def _frac(q, p):
         # candidate fraction (A, B) = (S_k - S_{j-1}, N_k - N_{j-1})
-        return F.struct(
-            (q["cs"] - p["cs"]).alias("a"), (q["cn"] - p["cn"]).alias("b")
-        )
+        return f"struct({q}.cs - {p}.cs AS a, {q}.cn - {p}.cn AS b)"
 
     def _lt(x, acc):
-        return x["a"].cast("decimal(38,0)") * acc["b"] < acc[
-            "a"
-        ].cast("decimal(38,0)") * x["b"]
+        return (
+            f"CAST(({x}).a AS DECIMAL(38,0)) * ({acc}).b"
+            f" < CAST(({acc}).a AS DECIMAL(38,0)) * ({x}).b"
+        )
 
-    zero = F.struct(
-        F.lit(0).cast("bigint").alias("a"), F.lit(0).cast("bigint").alias("b")
+    def _fold(cands, var, cand, better):
+        # keep the first candidate no later one beats
+        return (
+            f"aggregate({cands}, struct(0L AS a, 0L AS b), (acc, {var}) -> "
+            f"CASE WHEN acc.b = 0 THEN {cand} WHEN {better} THEN {cand} "
+            "ELSE acc END)"
+        )
+
+    i = "(__i0 + 1)"  # 1-based bin position
+    inner = _fold(  # min over k >= i: P[i+1..m+1]
+        f"slice(__p, {i} + 1, size(__p) - {i})", "q",
+        _frac("q", "p"), _lt(_frac("q", "p"), "acc"),
     )
-    exploded = packed.select(
-        F.posexplode("__bins").alias("__i0", "__b"), "__p"
+    iso = _fold(  # max over j <= i: P[1..i], j-1 = 0..i-1
+        f"slice(__p, 1, {i})", "p", inner, _lt("acc", inner)
     )
-    i = F.col("__i0") + 1  # 1-based bin position
-    cand_j = F.slice(F.col("__p"), F.lit(1), i)  # P[1..i]: j-1 = 0..i-1
-    cand_k = F.slice(
-        F.col("__p"), i + 1, F.size(F.col("__p")) - i
-    )  # P[i+1..m+1]: k = i..m
-    inner = lambda p: F.aggregate(  # noqa: E731
-        cand_k,
-        zero,
-        lambda acc, q: F.when(acc["b"] == 0, _frac(q, p))
-        .when(_lt(_frac(q, p), acc), _frac(q, p))
-        .otherwise(acc),
-    )
-    iso_pair = F.aggregate(
-        cand_j,
-        zero,
-        lambda acc, p: F.when(acc["b"] == 0, inner(p))
-        .when(_lt(acc, inner(p)), inner(p))
-        .otherwise(acc),
-    )
-    return exploded.select(
-        F.col("__b.bin").alias("bin"),
-        F.col("__b.n_k").cast("bigint").alias("n_k"),
-        F.col("__b.s_pos").cast("bigint").alias("s_pos"),
-        round4_stable(
-            F.col("__b.s_pos").cast("double")
-            / F.col("__b.n_k").cast("double")
-        ).alias("raw_rate"),
-        round4_stable(
-            iso_pair["a"].cast("double") / iso_pair["b"].cast("double")
-        ).alias("iso_rate"),
+    return packed.selectExpr("posexplode(__bins) AS (__i0, __b)", "__p").selectExpr(
+        "__b.bin AS bin",
+        "CAST(__b.n_k AS BIGINT) AS n_k",
+        "CAST(__b.s_pos AS BIGINT) AS s_pos",
+        ROUND4_SQL.format(expr="CAST(__b.s_pos AS DOUBLE) / CAST(__b.n_k AS DOUBLE)")
+        + " AS raw_rate",
+        ROUND4_SQL.format(
+            expr=f"CAST(({iso}).a AS DOUBLE) / CAST(({iso}).b AS DOUBLE)"
+        )
+        + " AS iso_rate",
     )
 
 

@@ -33,16 +33,10 @@ from pyspark.sql import functions as F
 
 from feature_store_fraud_detection_spark.functions.numeric import (
     ROUND4_SQL,
+    _sql_ident,
     lit_double_array2_sql,
     round4_stable,
 )
-
-
-def _sql_ident(name: str) -> str:
-    """``name`` as a quoted SQL identifier for the parsed-SQL-text builders:
-    backticked, with embedded backticks doubled, so every column name
-    parses as exactly that one column."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 def _double_vec_sql(vec_col: str) -> str:

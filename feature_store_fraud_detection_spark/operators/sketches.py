@@ -25,7 +25,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from feature_store_fraud_detection_spark.functions.numeric import round4_stable
+from feature_store_fraud_detection_spark.functions.numeric import (
+    ROUND4_SQL,
+    _double_sql,
+    _sql_ident,
+    round4_stable,
+)
 
 #: 60-bit hash space (md5 first 15 hex chars) — fits a double exactly
 #: (< 2^60 needs 60 bits > 53-bit mantissa... the DIVISION result is a
@@ -201,44 +206,44 @@ def hist_sketch(
     length ``bins``, n). One partial-aggregated exchange on (key, bin),
     then a per-key assembly — counts are the ONLY state that moves.
     """
-    w = (hi - lo) / bins
-    bin_idx = F.least(
-        F.lit(bins - 1),
-        F.greatest(F.lit(0), F.floor((F.col(val_col) - F.lit(lo)) / F.lit(w))),
-    ).cast("int")
+    k, v = _sql_ident(key_col), _sql_ident(val_col)
+    bin_idx = (
+        f"CAST(least({bins - 1}, greatest(0, floor(({v} - {_double_sql(lo)}) / "
+        f"{_double_sql((hi - lo) / bins)}))) AS INT) AS bin"
+    )
     per_bin = (
-        df.where(F.col(val_col).isNotNull())
-        .groupBy(F.col(key_col), bin_idx.alias("bin"))
-        .agg(F.count("*").alias("c"))
+        df.where(f"{v} IS NOT NULL")
+        .groupBy(F.expr(k), F.expr(bin_idx))
+        .agg(F.expr("count(1) AS c"))
     )
     return (
-        per_bin.groupBy(key_col)
-        .agg(
-            F.map_from_entries(
-                F.sort_array(F.collect_list(F.struct("bin", "c")))
-            ).alias("bm")
-        )
-        .select(
-            key_col,
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bins - 1)),
-                lambda i: F.coalesce(F.element_at("bm", i), F.lit(0)),
-            ).alias("counts"),
+        per_bin.groupBy(F.expr(k))
+        .agg(F.expr("map_from_entries(sort_array(collect_list(struct(bin, c)))) AS bm"))
+        .selectExpr(
+            k,
+            f"transform(sequence(0, {bins - 1}), i -> coalesce(element_at(bm, i), 0))"
+            " AS counts",
         )
     )
+
+
+#: element-wise sum of two same-layout count vectors
+_ADD_COUNTS_SQL = "zip_with({a}, {b}, (x, y) -> x + y)"
 
 
 def hist_merge(a: DataFrame, b: DataFrame, key_col: str) -> DataFrame:
     """Merge two same-layout sketches: full outer join on the key,
     element-wise sum of count vectors (missing side = zeros)."""
-    az = a.select(key_col, F.col("counts").alias("ca"))
-    bz = b.select(key_col, F.col("counts").alias("cb"))
-    return az.join(bz, key_col, "full_outer").select(
-        key_col,
-        F.when(F.col("ca").isNull(), F.col("cb"))
-        .when(F.col("cb").isNull(), F.col("ca"))
-        .otherwise(F.zip_with("ca", "cb", lambda x, y: x + y))
-        .alias("counts"),
+    k = _sql_ident(key_col)
+    return (
+        a.selectExpr(k, "counts AS ca")
+        .join(b.selectExpr(k, "counts AS cb"), key_col, "full_outer")
+        .selectExpr(
+            k,
+            "CASE WHEN ca IS NULL THEN cb WHEN cb IS NULL THEN ca ELSE "
+            + _ADD_COUNTS_SQL.format(a="ca", b="cb")
+            + " END AS counts",
+        )
     )
 
 
@@ -255,38 +260,35 @@ def hist_quantiles(
     (4-decimal rounded). Columns are named p50/p90/... from the prob.
 
     Pure array expressions over the constant-size state — O(bins^2) scalar
-    ops per key for the cumulative scan, no additional shuffle.
+    ops per key for the cumulative scan, no additional shuffle. Every
+    expression is rendered as parsed SQL text (two ``selectExpr``
+    projections), so the build costs a fixed handful of py4j round-trips
+    however many probabilities are asked for.
     """
-    bins_expr = F.size("counts")
-    w = (F.lit(hi) - F.lit(lo)) / bins_expr.cast("double")
-    cum = F.transform(
-        F.sequence(F.lit(1), bins_expr),
-        lambda i: F.aggregate(
-            F.slice("counts", F.lit(1), i), F.lit(0).cast("bigint"), lambda s, x: s + x
-        ),
+    k = _sql_ident(key_col)
+    cum = (
+        "transform(sequence(1, size(counts)), i -> "
+        "aggregate(slice(counts, 1, i), 0L, (s, x) -> s + x))"
     )
-    out = sketch.select(
-        key_col,
-        F.col("counts"),
-        cum.alias("cum"),
-        F.element_at(cum, -1).alias("n"),
-    )
-    cols = [F.col(key_col), F.col("n")]
+    w = f"({_double_sql(hi)} - {_double_sql(lo)}) / CAST(size(counts) AS DOUBLE)"
+    cols = [k, "n"]
     for p in probs:
-        t = F.lit(p) * F.col("n").cast("double")
-        idx = F.array_position(
-            F.transform(F.col("cum"), lambda c: c.cast("double") >= t), F.lit(True)
-        ).cast("int")
-        cum_before = F.when(idx > 1, F.element_at("cum", idx - 1)).otherwise(
-            F.lit(0)
-        ).cast("double")
-        cnt = F.element_at("counts", idx).cast("double")
-        est = F.lit(lo) + w * ((idx - 1).cast("double") + (t - cum_before) / cnt)
-        name = f"p{round(p * 100)}"
-        cols.append(
-            F.when(F.col("n") > 0, round4_stable(est)).alias(name)
+        t = f"({_double_sql(p)} * CAST(n AS DOUBLE))"
+        idx = f"CAST(array_position(transform(cum, c -> CAST(c AS DOUBLE) >= {t}), true) AS INT)"
+        cum_before = (
+            f"CAST(CASE WHEN {idx} > 1 THEN element_at(cum, {idx} - 1) ELSE 0 END AS DOUBLE)"
         )
-    return out.select(*cols)
+        cnt = f"CAST(element_at(counts, {idx}) AS DOUBLE)"
+        est = (
+            f"{_double_sql(lo)} + ({w}) * (CAST({idx} - 1 AS DOUBLE) + "
+            f"({t} - {cum_before}) / {cnt})"
+        )
+        cols.append(
+            f"CASE WHEN n > 0 THEN {ROUND4_SQL.format(expr=est)} END AS p{round(p * 100)}"
+        )
+    return sketch.selectExpr(
+        k, "counts", f"{cum} AS cum", f"element_at({cum}, -1) AS n"
+    ).selectExpr(*cols)
 
 
 def kmv_overlap(
@@ -348,15 +350,12 @@ def hist_rollup(sketches: DataFrame, key_col: str, bins: int) -> DataFrame:
     touching raw data. Exact: integer counts add associatively, so the
     rolled-up sketch is BIT-EQUAL to sketching the coarser key directly.
     """
-    zero = F.transform(
-        F.sequence(F.lit(1), F.lit(bins)), lambda _: F.lit(0).cast("bigint")
-    )
-    return sketches.groupBy(key_col).agg(
-        F.aggregate(
-            F.collect_list("counts"),
-            zero,
-            lambda acc, c: F.zip_with(acc, c, lambda x, y: x + y),
-        ).alias("counts")
+    return sketches.groupBy(F.expr(_sql_ident(key_col))).agg(
+        F.expr(
+            f"aggregate(collect_list(counts), transform(sequence(1, {bins}), "
+            "_ -> 0L), (acc, c) -> " + _ADD_COUNTS_SQL.format(a="acc", b="c")
+            + ") AS counts"
+        )
     )
 
 

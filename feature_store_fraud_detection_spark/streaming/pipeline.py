@@ -27,7 +27,10 @@ from feature_store_fraud_detection_spark.functions.geo import haversine_miles
 from feature_store_fraud_detection_spark.lineage import checkpointed
 from feature_store_fraud_detection_spark.schemas import STREAM_EVENT_SCHEMA
 from feature_store_fraud_detection_spark.session import hadoop_fs
-from feature_store_fraud_detection_spark.sources.readers import overwrite_partitions
+from feature_store_fraud_detection_spark.sources.readers import (
+    _table_key,
+    overwrite_partitions,
+)
 
 # Reference window geometry (pipeline.py:61,66) — kept, but event-time.
 COUNT_WINDOW = ("2 minutes", "20 seconds")
@@ -369,6 +372,7 @@ def read_fold_state(spark, state_dir: str) -> DataFrame | None:
     """
     from pyspark.errors import AnalysisException
 
+    state_dir = _table_key(state_dir)
     try:
         return spark.read.parquet(state_dir)
     except AnalysisException:
@@ -446,7 +450,9 @@ def _commit_state(spark, staged: DataFrame, state_dir: str) -> None:
     """Replace a parquet state directory via the tmp/.old rename dance
     (crash matrix in :func:`_replay_guarded_fold`). ``staged`` must
     already be materialized (``lineage.checkpointed``) — no lazy read may still
-    point at the paths being renamed."""
+    point at the paths being renamed. A trailing slash on ``state_dir`` is
+    dropped first, so the siblings are never spelled inside the live dir."""
+    state_dir = _table_key(state_dir)
     tmp_dir, old_dir = state_dir + ".tmp", state_dir + ".old"
     staged.write.mode("overwrite").parquet(tmp_dir)
     # Hadoop FileSystem API (not os.*): state dirs may be HDFS/S3 paths

@@ -1023,6 +1023,44 @@ def _run_monitor(spark, tmp_path, start):
     return state_dir
 
 
+def test_fold_state_dir_with_trailing_slash(spark, tmp_path):
+    """A fold monitor given its state dir with a trailing slash keeps the
+    commit's ``.tmp`` / ``.old`` siblings outside the live dir: two
+    micro-batches fold, and the report equals the run without the slash."""
+    from feature_store_fraud_detection_spark.streaming import pipeline as p
+
+    src = tmp_path / "slash_src"
+    src.mkdir()
+    for part in range(2):
+        with open(src / f"p{part}.jsonl", "w") as f:
+            for rid in range(part * 10, part * 10 + 10):
+                f.write(json.dumps({"rid": rid, "band": rid % 3}) + "\n")
+        os.utime(src / f"p{part}.jsonl", (1_700_000_000 + part,) * 2)
+    baseline = spark.createDataFrame(
+        [(i, i % 4) for i in range(40)], "rid bigint, band int"
+    )
+
+    def report(name, suffix):
+        raw = (
+            spark.readStream.schema("rid bigint, band int")
+            .option("maxFilesPerTrigger", 1)
+            .json(str(src))
+        )
+        counts_dir = str(tmp_path / name) + suffix
+        p.run_stream_drift_monitor(
+            raw, counts_dir, "band", str(tmp_path / f"ckpt_{name}")
+        ).awaitTermination(120)
+        return sorted(
+            p.stream_drift_report(spark, baseline, counts_dir, "band").collect()
+        )
+
+    want = report("plain", "")
+    assert want
+    assert report("slashed", "/") == want
+    assert not {".tmp", ".old"} & set(os.listdir(tmp_path / "slashed"))
+    assert not {"slashed.tmp", "slashed.old"} & set(os.listdir(tmp_path))
+
+
 @pytest.mark.parametrize("case", ["drift", "ks", "kmv"])
 def test_stream_reports_read_the_parked_state_generation(spark, tmp_path, case):
     """A report taken between the state commit's two renames (the live dir
